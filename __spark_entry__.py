@@ -1300,12 +1300,10 @@ def extract_page_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate semantics (sorted unique texts incl. the kept empty
     string, dense ASCII histogram over RAW texts) are oracle-checked
     against the committed fixture."""
-    from studiocr_spark.operators.stats import page_stats_from_raw
-
     raw = _extract_raw_live(spark)
     # the driver's canonicalizer sorts/hashes cells — array columns are
     # unhashable there, so both arrays are flattened to scalar strings
-    return page_stats_from_raw(raw).select(
+    return raw.select(
         "url",
         "page_no",
         F.array_join(F.col("page_stats.unique_texts"), ",").alias(

@@ -97,7 +97,12 @@ def _prev_round() -> tuple[str, dict] | None:
             obj = json.load(f)
     except (OSError, json.JSONDecodeError):
         return None
-    return os.path.basename(best[1]), obj.get("parsed", obj)
+    parsed = obj.get("parsed", obj) if isinstance(obj, dict) else None
+    # a poisoned artifact ("parsed": null, or not an object at all) is
+    # treated as "no previous round", never as a crash
+    if not isinstance(parsed, dict):
+        return None
+    return os.path.basename(best[1]), parsed
 
 
 def _deltas(
@@ -163,7 +168,6 @@ def main() -> None:
 
     from studiocr_spark.gen import write_pages
     from studiocr_spark.operators.extract import blocks_from_raw, extract_raw
-    from studiocr_spark.operators.stats import page_stats_from_raw
     from studiocr_spark.session import get_spark
 
     spark = get_spark(
@@ -252,11 +256,7 @@ def main() -> None:
         t0 = time.time()
         ok = raw.filter(F.col("error").isNull())
         _force(blocks_from_raw(ok))
-        _force(
-            page_stats_from_raw(ok).select(
-                "url", "page_no", "page_text", "page_stats"
-            )
-        )
+        _force(ok.select("url", "page_no", "page_text", "page_stats"))
         sec = time.time() - t0
         raw.unpersist()
         return sec

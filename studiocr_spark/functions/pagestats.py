@@ -4,8 +4,8 @@ Computed inside the extract UDF where the parallel arrays already sit in
 Python — a Counter over ~10² tokens costs microseconds, versus re-scanning
 the array column with nested higher-order functions JVM-side (measured
 ~16 ms/page: the char-count subexpression is re-evaluated per histogram
-bin). The declarative recompute paths (operators/stats.py) remain for
-deriving stats from stored tables.
+bin). This is the only page_stats strategy: every ocr_pages row carries
+the struct straight out of the extract UDF.
 
 Semantics: exact transcription of /root/reference/StudiOCR/OcrPageData.py
 :28-62 and :84-91, with the quirks SURVEY §1.1 pins (empty strings kept,

@@ -204,122 +204,15 @@ def minhash_params(num_hashes: int) -> tuple[list[int], list[int]]:
     return a, b
 
 
-def _minhash_array_udf(n: int, num_hashes: int):
-    """Factory for the Arrow minhash UDF: text -> array<long> signature
-    in seed order (closure factory per the repo lambda-arity rule)."""
-    import hashlib
-
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    a_co, b_co = minhash_params(num_hashes)
-
-    @pandas_udf("array<long>")
-    def _mins(texts: pd.Series) -> pd.Series:
-        # Round-4 vectorization of the per-shingle Python loop: one
-        # factorize over the batch's flattened shingles (C speed)
-        # replaces per-shingle dict lookups, ONE md5 per batch-distinct
-        # shingle (same call count as the old per-batch cache), then a
-        # single (num_hashes x total) broadcast-affine + segmented
-        # minimum.reduceat — no per-doc numpy allocs. hexdigest parity
-        # and exact-int64 arithmetic are unchanged, so the DuckDB
-        # oracle's hash compare still passes bit-for-bit.
-        A = np.array(a_co, dtype=np.int64)[:, None]
-        B = np.array(b_co, dtype=np.int64)[:, None]
-        sh = [_py_shingles(t, n) for t in texts]
-        lens = np.array([len(s) for s in sh], dtype=np.int64)
-        flat: list[str] = []
-        for s in sh:
-            flat.extend(s)
-        if flat:
-            codes, uniques = pd.factorize(
-                pd.Series(flat, dtype="object"), use_na_sentinel=False
-            )
-            xu = np.fromiter(
-                (
-                    int(hashlib.md5(u.encode()).hexdigest()[:8], 16)
-                    for u in uniques
-                ),
-                dtype=np.int64,
-                count=len(uniques),
-            )
-            H = (A * xu[codes] + B) % MH_PRIME
-            seg = lens[lens > 0]
-            starts = np.concatenate(
-                ([0], np.cumsum(seg)[:-1])
-            ).astype(np.int64)
-            mins = np.minimum.reduceat(H, starts, axis=1)
-        out: list[list[int] | None] = []
-        j = 0
-        for ln in lens:
-            if ln == 0:
-                # null array -> posexplode drops the doc, matching the
-                # explode-form behavior for null text
-                out.append(None)
-            else:
-                out.append(mins[:, j].tolist())
-                j += 1
-        return pd.Series(out, dtype="object")
-
-    return _mins
-
-
-def minhash_signatures(
-    docs: DataFrame, text_col: str = "text", n: int = 2, num_hashes: int = 8
-) -> DataFrame:
-    """(doc_id, seed, minhash): per-seed min over the universal-hash
-    family applied to md5-prefixed shingle values (see MH_PRIME note).
-
-    Shape: ONE narrow Arrow pass per doc (one hashlib md5 per distinct
-    shingle — cached per Arrow batch since shingles repeat heavily —
-    then an (num_hashes x n_shingles) numpy broadcast for the mins),
-    then posexplode to rows — zero shuffles. The explode -> md5
-    expression -> grouped-min shape shuffles every shingle row and runs
-    num_hashes interpreted md5s per shingle; an array_min-over-transform
-    HOF re-evaluates the shingle array once per seed (no CSE across
-    output columns). hashlib hexdigests are byte-identical to
-    Spark's/DuckDB's md5 and the affine arithmetic is exact int64, so
-    the oracle hash-parity is preserved.
-    """
-    mins = docs.select(
-        "doc_id", _minhash_array_udf(n, num_hashes)(text_col).alias("mh")
-    )
-    return mins.select(
-        "doc_id",
-        F.posexplode("mh").alias("seed", "minhash"),
-    )
-
-
-def minhash_band_table(
-    docs: DataFrame,
-    text_col: str = "text",
-    n: int = 2,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-) -> DataFrame:
-    """(doc_id, band, band_key) — LSH band keys with ZERO shuffles.
-
-    The round-4 shape exploded signatures to (doc_id, seed, minhash)
-    rows and re-grouped them per (doc_id, band) to build band keys —
-    a full shuffle spent undoing an explode. The minhash UDF already
-    returns the per-doc signature as ONE array in seed order, so each
-    band key is just ``array_join(slice(mh, band*rpb+1, rpb), ',')`` —
-    a per-row projection. Identical keys to the grouped form (the
-    group-by sorted by seed; slice order IS seed order), pinned by
-    pytest equality against :func:`minhash_signatures` + grouping.
-    """
-    mins = docs.select(
-        "doc_id", _minhash_array_udf(n, num_hashes)(text_col).alias("mh")
-    )
-    return _band_keys_from_mh(mins, num_hashes, rows_per_band)
-
-
 def _band_keys_from_mh(
     mins: DataFrame, num_hashes: int, rows_per_band: int
 ) -> DataFrame:
-    """(doc_id, band, band_key) from a (doc_id, mh array) frame — the
-    per-row band-key projection shared by minhash_band_table and the
-    fused minhash_lsh_dedup path."""
+    """(doc_id, band, band_key) from a (doc_id, mh array) frame.
+
+    Band ``b`` covers seeds ``[b*rows_per_band, (b+1)*rows_per_band)``
+    and its key is those minhashes joined by ``','`` in seed order. The
+    signature is ONE array in seed order, so each key is a per-row
+    ``slice`` projection — zero shuffles, no explode->regroup."""
     import math
 
     n_bands = math.ceil(num_hashes / rows_per_band)
@@ -333,56 +226,17 @@ def _band_keys_from_mh(
         )
         for i in range(n_bands)
     ])
-    # null signature (null/empty text) contributes no bands — matches
-    # the exploded form, where posexplode drops the doc
+    # null signature (null/empty text) contributes no bands
     return mins.filter(F.col("mh").isNotNull()).select(
         "doc_id", F.posexplode(keys).alias("band", "band_key")
     )
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    rows_per_band: int = 2,
-    checkpoint_banded: bool = True,
-) -> DataFrame:
-    """(doc_a, doc_b) sharing at least one LSH band bucket.
-
-    Band key = ordered concat of the band's minhashes; self-equi-join on
-    (band, key) — uniform md5 keys, so the shuffle is skew-free by
-    construction.
-
-    Both self-join sides are the SAME banded table, so its subplan (the
-    Arrow minhash UDF + band aggregate) would execute twice inside one
-    action; the lazy localCheckpoint (round-4) computes it once —
-    measured ~1s off dedup_minhash_lsh at sf0.1. Same escape hatch
-    rationale as minhash_lsh_dedup's checkpoint_candidates.
-    """
-    banded = (
-        signatures.withColumn(
-            "band", (F.col("seed") / rows_per_band).cast("int")
-        )
-        .groupBy("doc_id", "band")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("seed", "minhash"))),
-                    lambda s: s["minhash"].cast("string"),
-                ),
-                ",",
-            ).alias("band_key")
-        )
-    )
-    return _pairs_from_banded(banded, checkpoint_banded)
-
-
-def _pairs_from_banded(
-    banded: DataFrame, checkpoint_banded: bool = True
-) -> DataFrame:
-    """Distinct (doc_a, doc_b) from a (doc_id, band, band_key) table via
-    the skew-free self-equi-join; the banded side is lazily checkpointed
-    so its subplan (the Arrow UDF) runs once, not once per side."""
-    if checkpoint_banded:
-        banded = banded.localCheckpoint(eager=False)
+def _pairs_from_banded(banded: DataFrame) -> DataFrame:
+    """Distinct (doc_a, doc_b) sharing at least one LSH band bucket:
+    self-equi-join of a (doc_id, band, band_key) table on (band, key) —
+    uniform md5-derived keys, so the shuffle is skew-free by
+    construction."""
     a = banded.select("band", "band_key", F.col("doc_id").alias("doc_a"))
     b = banded.select("band", "band_key", F.col("doc_id").alias("doc_b"))
     return (
@@ -398,10 +252,18 @@ def _sig_and_shingles_udf(n: int, num_hashes: int):
     minhash signature AND the 60-bit hashed shingle array from ONE
     tokenize + ONE md5 per batch-distinct shingle (the full hexdigest
     serves both: chars [0:8) are the signature's universal-hash input,
-    chars [0:15) the verify identity). Fuses what used to be two
-    separate Arrow passes over the same documents (signatures for
-    banding, hashes for the arrays verify). Values are bit-identical to
-    the standalone UDFs — pinned by pytest equality."""
+    chars [0:15) the verify identity) — one Arrow pass feeds both the
+    banding and the verify.
+
+    The 60-bit shingle hash (first 15 hex chars of md5 — positive int64)
+    is oracle-transcribable: DuckDB computes
+    CAST('0x'||substr(md5(shingle),1,15) AS BIGINT) over the same
+    shingles, so intersection counts agree bit-for-bit. A 60-bit
+    collision between two different shingles of one compared pair
+    (~2^-60 per shingle pair) would perturb the count identically in
+    BOTH engines; a within-doc collision could skew the |A|+|B|-|A∩B|
+    union arithmetic — probability ~1e-14 per doc, accepted and
+    documented rather than defended with wider hashes."""
     import hashlib
 
     import numpy as np
@@ -463,57 +325,6 @@ def _sig_and_shingles_udf(n: int, num_hashes: int):
     return _combo
 
 
-def _hashed_shingle_array_udf(n: int):
-    """Factory: text -> array<long> of the doc's DISTINCT shingles
-    hashed to 60-bit ints (first 15 hex chars of md5 — positive int64).
-
-    The hash is the oracle-transcribable identity used by the "arrays"
-    verify: DuckDB computes CAST('0x'||substr(md5(shingle),1,15) AS
-    BIGINT) over the same shingles, so intersection counts agree
-    bit-for-bit. A 60-bit collision between two different shingles of
-    one compared pair (~2^-60 per shingle pair) would perturb the count
-    identically in BOTH engines; a within-doc collision could skew the
-    |A|+|B|-|A∩B| union arithmetic — probability ~1e-14 per doc,
-    accepted and documented rather than defended with wider hashes.
-    """
-    import hashlib
-
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<long>")
-    def _hashes(texts: pd.Series) -> pd.Series:
-        sh = [_py_shingles(t, n) for t in texts]
-        flat: list[str] = []
-        for s in sh:
-            flat.extend(s)
-        # an all-None/empty batch leaves flat empty: hc must still exist
-        # for the (empty-slice) output loop below
-        hc = np.empty(0, dtype=np.int64)
-        if flat:
-            codes, uniques = pd.factorize(
-                pd.Series(flat, dtype="object"), use_na_sentinel=False
-            )
-            hu = np.fromiter(
-                (
-                    int(hashlib.md5(u.encode()).hexdigest()[:15], 16)
-                    for u in uniques
-                ),
-                dtype=np.int64,
-                count=len(uniques),
-            )
-            hc = hu[codes]
-        out: list[list[int]] = []
-        j = 0
-        for s in sh:
-            k = len(s)
-            out.append(hc[j : j + k].tolist())
-            j += k
-        return pd.Series(out, dtype="object")
-
-    return _hashes
-
-
 def _candidate_docs(pairs: DataFrame) -> DataFrame:
     """Distinct doc ids appearing on either side of the pair list —
     only these are shingled at all: semi-join the BASE docs before the
@@ -533,49 +344,25 @@ def jaccard_verify(
     text_col: str = "text",
     n: int = 2,
     threshold: float = 0.5,
-    method: str = "counts",
-    checkpoint_shingles: bool = True,
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs; keep >= threshold.
 
-    (doc_a, doc_b, jaccard). Two shapes, same result:
+    (doc_a, doc_b, jaccard). |A∩B| comes from an equi-join of the
+    exploded distinct-shingle table restricted to candidate pairs, and
+    |A∪B| = |A| + |B| - |A∩B| — no per-doc shingle ARRAYS are ever
+    materialized or shipped, so a 10^5-shingle document costs rows, not
+    a wide array in every pair row. A pair with zero shared shingles
+    drops out of the join, which is correct for any threshold > 0.
 
-    - ``method="counts"`` (default — the LONG-document scale shape):
-      |A∩B| comes from an equi-join of the exploded distinct-shingle
-      table restricted to candidate pairs, and |A∪B| = |A| + |B| -
-      |A∩B| — no per-doc shingle ARRAYS are ever materialized or
-      shipped, so a 10^5-shingle document costs rows, not a wide array
-      in every pair row. A pair with zero shared shingles drops out of
-      the join, which is correct for any threshold > 0.
-    - ``method="arrays"`` (the SHORT-document fast path): each
-      candidate doc's distinct shingles become one sorted int64 hash
-      array (:func:`_hashed_shingle_array_udf`), the two arrays join
-      onto each pair, and an Arrow UDF counts the intersection. Two
-      narrow joins + one vectorized pass instead of a |pairs| x
-      |shingles/doc| row fan-out — measured ~25% faster end-to-end on
-      the 8-60-word bench corpus. Per-pair cost (and shuffle width) is
-      O(shingles/doc), so prefer "counts" when documents are large or
-      unbounded.
-
-    ``checkpoint_shingles`` lazily checkpoints the shingle/array table,
-    which feeds three downstream consumers (sizes + both join sides in
-    "counts"; both join sides in "arrays") — without it the Arrow
-    shingler's subplan runs once per consumer (the repo's
-    twice-referenced-subplan rule). False keeps the plan visible for
-    plan-pin tests.
+    The shingle table feeds three consumers (sizes + both join sides),
+    so it is lazily checkpointed — otherwise the Arrow shingler's
+    subplan runs once per consumer (the repo's twice-referenced-subplan
+    rule).
     """
-    if method == "arrays":
-        return _jaccard_verify_arrays(
-            pairs, docs, text_col, n, threshold, checkpoint_shingles
-        )
-    if method != "counts":
-        raise ValueError(f"method must be 'counts' or 'arrays', got {method!r}")
-    cand_docs = _candidate_docs(pairs)
+    # distinct (doc_id, shingle) of candidate docs only
     sh = shingle_table(
-        docs.join(cand_docs, "doc_id", "left_semi"), text_col, n
-    )  # distinct (doc_id, shingle) of candidate docs only
-    if checkpoint_shingles:
-        sh = sh.localCheckpoint(eager=False)
+        docs.join(_candidate_docs(pairs), "doc_id", "left_semi"), text_col, n
+    ).localCheckpoint(eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
@@ -609,28 +396,15 @@ def jaccard_verify(
 
 
 def _jaccard_verify_arrays(
-    pairs: DataFrame,
-    docs: DataFrame,
-    text_col: str,
-    n: int,
-    threshold: float,
-    checkpoint_shingles: bool,
-    arrs: DataFrame | None = None,
+    pairs: DataFrame, arrs: DataFrame, threshold: float
 ) -> DataFrame:
-    """The "arrays" verify shape (see :func:`jaccard_verify`).
-
-    ``arrs`` overrides the (doc_id, shs) hashed-shingle table — the
-    fused minhash path passes the one it already computed alongside the
-    signatures; by default it is derived here for candidate docs only.
+    """:func:`jaccard_verify` over per-doc hashed-shingle ARRAYS — the
+    short-document shape the fused MinHash pass feeds: ``arrs`` is its
+    (doc_id, shs) table of 60-bit shingle hashes (see
+    :func:`_sig_and_shingles_udf`). Two narrow joins + one native
+    intersection instead of a |pairs| x |shingles/doc| row fan-out;
+    per-pair cost (and shuffle width) is O(shingles/doc).
     """
-    if arrs is None:
-        cand_docs = _candidate_docs(pairs)
-        arrs = docs.join(cand_docs, "doc_id", "left_semi").select(
-            "doc_id", _hashed_shingle_array_udf(n)(text_col).alias("shs")
-        )
-        if checkpoint_shingles:
-            arrs = arrs.localCheckpoint(eager=False)
-
     # |A∩B| via the NATIVE array_intersect expression (round-6): the
     # previous per-pair numpy intersect1d ran at Python's ~17 us/pair
     # floor and serialized behind AQE-coalesced partitions — at sf0.1
@@ -683,71 +457,47 @@ def minhash_lsh_dedup(
     rows_per_band: int = 2,
     threshold: float = 0.5,
     checkpoint_candidates: bool = True,
-    verify: str = "arrays",
 ) -> DataFrame:
     """End-to-end MinHash-LSH near-dup pairs (verified Jaccard).
 
-    Round-5 shape: band keys come straight off the signature ARRAY
-    (:func:`minhash_band_table` — no explode->regroup shuffle), and the
-    default verify is the "arrays" fast path (see
-    :func:`jaccard_verify`; pass ``verify="counts"`` for the
-    long-document scale shape — the candidate generation is identical,
-    only the verify join geometry changes).
+    The whole pipeline runs off ONE fused Arrow pass
+    (:func:`_sig_and_shingles_udf`): each document is tokenized once and
+    each batch-distinct shingle md5'd once, yielding both the signature
+    (band keys, :func:`_band_keys_from_mh` — no explode->regroup
+    shuffle) and the hashed shingle array the verify intersects
+    (:func:`_jaccard_verify_arrays`).
 
-    With ``verify="arrays"`` AND checkpointing on, the whole pipeline
-    runs off ONE fused Arrow pass (:func:`_sig_and_shingles_udf`): each
-    document is tokenized once and each batch-distinct shingle md5'd
-    once, yielding both the signature (bands) and the hashed shingle
-    array (verify) — the standalone path pays that work twice.
-
-    The candidate pairs feed the verify step TWICE (as join keys and as
-    the doc pruning set), so by default they are lazily
-    local-checkpointed: computed once on first action, reused, lineage
-    cut (measured ~25% off the whole pipeline at sf0.1). Pass
-    ``checkpoint_candidates=False`` on clusters with aggressive dynamic
-    executor deallocation, where localCheckpoint blocks can be lost
-    with their executor mid-job (this also disables the banded-side and
-    shingle-table checkpoints and the fused single-pass, keeping the
-    whole plan visible).
+    Three tables are read twice per action and so are lazily
+    local-checkpointed: the fused signature/shingle table (bands +
+    verify), the candidate pairs (join keys + doc pruning set; measured
+    ~25% off the whole pipeline at sf0.1) and the candidate shingle
+    arrays (both verify join sides). Pass ``checkpoint_candidates=False``
+    on clusters with aggressive dynamic executor deallocation, where
+    localCheckpoint blocks can be lost with their executor mid-job; it
+    turns all three off and keeps the whole plan visible.
     """
-    if verify == "arrays" and checkpoint_candidates:
-        # fused single-pass: signature + hashed shingles together; the
-        # combo table is the one checkpoint both bands and verify read
-        combo = docs.select(
-            "doc_id",
-            _sig_and_shingles_udf(n, num_hashes)(text_col).alias("s"),
-        ).localCheckpoint(eager=False)
-        banded = _band_keys_from_mh(
-            combo.select("doc_id", F.col("s.mh").alias("mh")),
-            num_hashes, rows_per_band,
-        )
-        # banded is a cheap projection over the checkpointed combo —
-        # no further checkpoint needed for the self-join sides
-        cand = _pairs_from_banded(banded, checkpoint_banded=False)
-        cand = cand.localCheckpoint(eager=False)
-        # arrs feeds BOTH verify join sides; without its own lazy
-        # checkpoint the (combo scan + candidate-distinct + semi-join)
-        # subplan executes twice per action (round-6; the arrs=None
-        # branch of _jaccard_verify_arrays already checkpoints). The
-        # semi-join itself stays: it is what keeps shingle ARRAYS off
-        # the shuffle for non-candidate docs at scale.
-        arrs = combo.join(
-            _candidate_docs(cand), "doc_id", "left_semi"
-        ).select(
-            "doc_id", F.col("s.shs").alias("shs")
-        ).localCheckpoint(eager=False)
-        return _jaccard_verify_arrays(
-            cand, docs, text_col, n, threshold,
-            checkpoint_shingles=False, arrs=arrs,
-        )
-    banded = minhash_band_table(docs, text_col, n, num_hashes, rows_per_band)
-    cand = _pairs_from_banded(banded, checkpoint_banded=checkpoint_candidates)
-    if checkpoint_candidates:
-        cand = cand.localCheckpoint(eager=False)
-    return jaccard_verify(
-        cand, docs, text_col, n, threshold,
-        method=verify, checkpoint_shingles=checkpoint_candidates,
+    def ckpt(df: DataFrame) -> DataFrame:
+        return df.localCheckpoint(eager=False) if checkpoint_candidates else df
+
+    combo = ckpt(docs.select(
+        "doc_id",
+        _sig_and_shingles_udf(n, num_hashes)(text_col).alias("s"),
+    ))
+    banded = _band_keys_from_mh(
+        combo.select("doc_id", F.col("s.mh").alias("mh")),
+        num_hashes, rows_per_band,
     )
+    # banded is a cheap projection over the combo table — no checkpoint
+    # of its own for the self-join sides
+    cand = ckpt(_pairs_from_banded(banded))
+    # the semi-join keeps shingle ARRAYS off the shuffle for
+    # non-candidate docs at scale
+    arrs = ckpt(
+        combo.join(_candidate_docs(cand), "doc_id", "left_semi").select(
+            "doc_id", F.col("s.shs").alias("shs")
+        )
+    )
+    return _jaccard_verify_arrays(cand, arrs, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -772,7 +522,7 @@ def simhash(
     # bits x tokens conv/substring expressions; a fold-per-bit HOF
     # variant is worse still (re-hashes every token per bit).
     #
-    # Round-6 vectorization (the _minhash_array_udf playbook, guide
+    # Round-6 vectorization (the _sig_and_shingles_udf playbook, guide
     # §4.2): the old body looped words x bits in Python per row. Now
     # one factorize over the batch's flattened tokens, ONE md5 per
     # batch-distinct token, a (distinct x bits) ±1 matrix from the raw
@@ -849,7 +599,7 @@ def simhash_near_dups(
     The banded table feeds both self-join sides; the lazy
     localCheckpoint (round-4) runs the simhash Arrow pass once instead
     of twice per action — same escape-hatch rationale as
-    lsh_candidate_pairs.
+    minhash_lsh_dedup's checkpoint_candidates.
     """
     sh = simhash(docs, text_col, bits)
     n_bands = max_hamming + 1

@@ -51,7 +51,7 @@ def grid_search_eval(
 ) -> DataFrame:
     """Evaluate extract configs against the corpus ground truth.
 
-    ``configs``: [{"name": ..., "backend": ..., <extract kwargs>}, ...].
+    ``configs``: [{"name": ..., "backend": ...}, ...] (``extract_raw`` kwargs).
     Score = mean per-url zero-one-loss of predicted words vs the words of
     the ground-truth ``text`` column (the reference's golden word lists,
     text_src/*.txt). Returns (config, mean_score, n_docs) sorted best

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.pagestats import compute_page_stats
-from ..schemas import OCR_BLOCKS_SCHEMA, PAGE_STATS_SCHEMA
+from ..schemas import PAGE_STATS_SCHEMA
 from ..sources.decode import get_decoder
 
 # one row per *page*: url, page_no, stored image, exact page text, and the
@@ -72,18 +72,6 @@ _UDF_SCHEMA = T.StructType(
     ]
 )
 
-EXTRACT_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("page_no", T.IntegerType(), False),
-        T.StructField("image", T.BinaryType(), True),
-        T.StructField("page_text", T.StringType(), True),
-        T.StructField("raw", T.ArrayType(RAW_ROW_SCHEMA), True),
-        T.StructField("page_stats", PAGE_STATS_SCHEMA, True),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
-
 # Java-regex equivalent of Python str.isspace() over the chars tesseract
 # emits (ASCII + latin-1 NBSP). ``''`` does NOT match -> empty strings are
 # KEPT, exactly like ``not text.isspace()`` (OcrEngine.py:131, quirk 1).
@@ -95,34 +83,16 @@ def non_whitespace_filter(text_col: Column) -> Column:
     return ~text_col.rlike(WHITESPACE_ONLY_RE)
 
 
-def extract_raw(
-    pages: DataFrame,
-    backend: str = "bitmap",
-    num_partitions: int | None = None,
-    page_text_join: str = " ",
-    errors: str = "skip",
-    with_images: bool = True,
-) -> DataFrame:
+def extract_raw(pages: DataFrame, backend: str = "bitmap") -> DataFrame:
     """pages -> one row per rasterized page with raw OCR parallel arrays.
 
     ``backend`` selects the decode chain (sources/decode.py): 'bitmap'
     (deterministic, sandbox) or 'tesseract' (production). 1 input row ->
     N output rows for multi-page payloads (the PdfToImage.py flatMap
-    shape). ``errors='skip'`` (default) turns undecodable payloads into
-    quarantine rows (``error`` non-null) instead of task failures;
-    ``'fail'`` restores fail-fast for debugging.
-
-    ``with_images=False`` emits a null ``image`` column. Catalyst cannot
-    column-prune work that happens INSIDE a UDF — selecting only
-    ``page_text`` downstream still ships every image blob through Arrow
-    — so this flag is the pruning mechanism for text-only consumers
-    (dedup, textstats, index build). On the bench corpus decode CPU
-    dominates (throughput unchanged, measured), but any sink after the
-    extract stops carrying the blobs (memory, shuffle, storage).
+    shape). Undecodable payloads become quarantine rows (``error``
+    non-null, see :func:`quarantine`), never task failures.
     """
     decoder = get_decoder(backend)
-    if errors not in ("skip", "fail"):
-        raise ValueError("errors must be 'skip' or 'fail'")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = _UDF_SCHEMA.fieldNames()
@@ -134,8 +104,6 @@ def extract_raw(
                         raise ValueError("null html payload")
                     decoded = decoder(bytes(html))
                 except Exception as exc:
-                    if errors == "fail":
-                        raise
                     out.append(
                         (url, -1, None, None, [], [], [], [], [], [], None,
                          f"{type(exc).__name__}: {exc}")
@@ -148,7 +116,7 @@ def extract_raw(
                     if decoded_text is not None:
                         page_text = decoded_text
                     else:
-                        page_text = page_text_join.join(
+                        page_text = " ".join(
                             t for t in data["text"] if t and not t.isspace()
                         )
                     # the Decoder contract (sources/decode.py) guarantees
@@ -160,7 +128,7 @@ def extract_raw(
                         (
                             url,
                             page_no,
-                            png if with_images else None,
+                            png,
                             page_text,
                             data["left"],
                             data["top"],
@@ -174,8 +142,6 @@ def extract_raw(
                     )
             yield pd.DataFrame(out, columns=cols)
 
-    if num_partitions:
-        pages = pages.repartition(num_partitions)
     udf_out = pages.select("url", "html").mapInPandas(run, schema=_UDF_SCHEMA)
     # reassemble the array<struct> view JVM-side (arrays_zip is a zero-copy
     # projection); block_no = array ordinal, preserved through filtering
@@ -249,38 +215,6 @@ def assemble_doc_text(raw_df: DataFrame, sep: str = " ") -> DataFrame:
             F.count("*").alias("n_pages"),
         )
     )
-
-
-def run_extract(
-    pages: DataFrame,
-    backend: str = "bitmap",
-    num_partitions: int | None = None,
-    persist: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """Convenience: (ocr_pages_df, ocr_blocks_df) from a pages table.
-
-    ``ocr_pages`` carries page_stats computed shuffle-free from the raw
-    array column (operators/stats.py).
-
-    ``persist=True`` caches the decoded raw rows (MEMORY_AND_DISK) so a
-    caller that materializes BOTH outputs pays the decode UDF once, not
-    twice — at 100 TB the decode is the whole bill. It is opt-in: the
-    default keeps the plan pure/lazy so repeated calls in a long-lived
-    session never accumulate cached image blobs. A caller that opts in
-    owns cleanup — unpersist via either returned frame's lineage or
-    ``spark.catalog.clearCache()`` once both outputs are materialized.
-    """
-    raw = extract_raw(pages, backend=backend, num_partitions=num_partitions)
-    if persist:
-        from pyspark import StorageLevel
-
-        raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
-    ok = raw.filter(F.col("error").isNull())
-    ocr_pages = ok.select(
-        "url", "page_no", "image", "page_text", "page_stats"
-    )
-    ocr_blocks = blocks_from_raw(ok).select(*OCR_BLOCKS_SCHEMA.fieldNames())
-    return ocr_pages, ocr_blocks
 
 
 def quarantine(raw_df: DataFrame) -> DataFrame:

@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import blocks_from_raw, extract_raw
-from ..operators.stats import page_stats_from_raw
 
 MANIFEST_TABLE = "manifest"
 
@@ -89,14 +88,12 @@ def run_checkpointed_extract(
     t0 = time.time()
     # bucket is a pure function of url — recompute instead of joining, so
     # the image-carrying extract output never shuffles
-    raw = extract_raw(bucketed, backend=backend).withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-    )
+    raw = with_bucket(extract_raw(bucketed, backend=backend), n_buckets)
     # single materialization: pages+stats and blocks share the cached raw
     raw = raw.cache()
     obs = Observation("extract")
     ok = raw.filter(F.col("error").isNull())
-    ocr_pages = page_stats_from_raw(ok).select(
+    ocr_pages = ok.select(
         "url", "page_no", "image", "page_text", "page_stats", "bucket"
     ).observe(
         obs,
@@ -108,9 +105,8 @@ def run_checkpointed_extract(
     ocr_pages.write.mode("overwrite").partitionBy("bucket").parquet(
         os.path.join(out_root, "ocr_pages")
     )
-    blocks_from_raw(ok.drop("bucket")).withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-    ).write.mode("overwrite").partitionBy("bucket").parquet(
+    blocks = with_bucket(blocks_from_raw(ok.drop("bucket")), n_buckets)
+    blocks.write.mode("overwrite").partitionBy("bucket").parquet(
         os.path.join(out_root, "ocr_blocks")
     )
     wall = time.time() - t0

@@ -42,11 +42,12 @@ def extracted(spark, pages_df):
         blocks_from_raw,
         extract_raw,
     )
-    from studiocr_spark.operators.stats import page_stats_from_raw
 
     raw = extract_raw(pages_df, backend="bitmap").cache()
     raw.count()
-    ocr_pages = page_stats_from_raw(raw)
+    ocr_pages = raw.select(
+        "url", "page_no", "image", "page_text", "page_stats"
+    )
     ocr_blocks = blocks_from_raw(raw).cache()
     ocr_blocks.count()
     return raw, ocr_pages, ocr_blocks

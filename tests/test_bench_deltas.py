@@ -64,3 +64,28 @@ def test_deltas_flags_extract_improvement_and_handles_absence(monkeypatch):
     out2 = bench._deltas({}, extract={"sec": 6.0, "pipeline_sec": 9.0})
     assert out2["improvements"]["extract.sec"]["ratio"] == 0.6
     assert out2["improvements"]["extract.pipeline_sec"]["ratio"] == 0.45
+
+
+def test_deltas_survive_poisoned_previous_round(tmp_path, monkeypatch):
+    """A newest BENCH_r*.json recorded with ``"parsed": null`` (what a
+    round records when bench.py's JSON line overflowed the reader's tail
+    buffer) means "no previous round" — `_deltas` must return None, not
+    crash on ``parsed.get``."""
+    import shutil
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    shutil.copy(os.path.join(repo, "bench.py"), tmp_path / "bench.py")
+    (tmp_path / "BENCH_r01.json").write_text(
+        json.dumps({"parsed": {"queries": {"q1": 1.0}}})
+    )
+    (tmp_path / "BENCH_r02.json").write_text(json.dumps({"parsed": None}))
+    # bench.py prepends its own directory to sys.path on import
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    spec = importlib.util.spec_from_file_location(
+        "bench_poisoned", tmp_path / "bench.py"
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+
+    assert bench._prev_round() is None
+    assert bench._deltas({"q1": 5.0}, extract={"sec": 1.0}) is None

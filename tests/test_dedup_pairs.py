@@ -127,53 +127,12 @@ def test_arrow_shingles_match_expression_on_edge_cases(spark):
     assert ref.exceptAll(got).count() == 0
 
 
-def test_band_table_matches_exploded_grouping(spark):
-    """Round-5: minhash_band_table builds band keys by slicing the
-    signature ARRAY (zero shuffles); it must emit exactly the
-    (doc_id, band, band_key) rows the exploded-signatures + groupBy
-    form produced — including dropping null/empty-text docs."""
-    from pyspark.sql import functions as F
-
-    from studiocr_spark.operators.dedup import (
-        minhash_band_table,
-        minhash_signatures,
-    )
-
-    texts = [
-        "the quick brown fox jumps over the lazy dog",
-        "the quick brown fox jumps over the lazy cat",
-        "completely different words here",
-        "solo",
-        "",
-        None,
-    ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    got = minhash_band_table(docs)
-    sig = minhash_signatures(docs)
-    ref = (
-        sig.withColumn("band", (F.col("seed") / 2).cast("int"))
-        .groupBy("doc_id", "band")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("seed", "minhash"))),
-                    lambda s: s["minhash"].cast("string"),
-                ),
-                ",",
-            ).alias("band_key")
-        )
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, ref.collect())
-    )
-
-
-def test_jaccard_verify_methods_agree(spark):
-    """The "arrays" fast path and the "counts" scale path must return
-    identical (doc_a, doc_b, jaccard) rows."""
-    from studiocr_spark.operators.dedup import minhash_lsh_dedup
+def test_minhash_lsh_pairs_match_counts_verify(spark):
+    """Every MinHash-LSH pair's jaccard (fused signature + hashed-shingle
+    arrays) equals the exact counts-only jaccard_verify of that pair;
+    the checkpoint-free plan returns the same rows; null and empty-text
+    docs never pair."""
+    from studiocr_spark.operators.dedup import jaccard_verify, minhash_lsh_dedup
 
     rows = []
     base = "alpha beta gamma delta epsilon zeta eta theta"
@@ -183,11 +142,20 @@ def test_jaccard_verify_methods_agree(spark):
         rows.append((i, " ".join(words)))
     rows += [(100, None), (101, ""), (102, "solo")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    a = minhash_lsh_dedup(docs, threshold=0.2, verify="arrays")
-    c = minhash_lsh_dedup(docs, threshold=0.2, verify="counts")
-    ra = sorted(map(tuple, a.collect()))
-    rc = sorted(map(tuple, c.collect()))
-    assert ra == rc and len(ra) > 0
+
+    got = sorted(map(tuple, minhash_lsh_dedup(docs, threshold=0.2).collect()))
+    assert got
+    pairs = spark.createDataFrame(
+        [(a, b) for a, b, _ in got], "doc_a long, doc_b long"
+    )
+    exact = sorted(
+        map(tuple, jaccard_verify(pairs, docs, threshold=0.0).collect())
+    )
+    assert got == exact
+    plain = minhash_lsh_dedup(docs, threshold=0.2, checkpoint_candidates=False)
+    assert sorted(map(tuple, plain.collect())) == got
+    assert not {a for a, b, _ in got} & {100, 101}
+    assert not {b for a, b, _ in got} & {100, 101}
 
 
 def test_simhash_tokenizes_like_words_of(spark):

@@ -102,26 +102,6 @@ def test_page_stats_match_oracle(pages_df, extracted):
     assert sample >= 40
 
 
-def test_grouped_stats_match_raw_path(extracted):
-    """Strategy 2 (explode->groupBy) agrees with strategy 1 (HOF)."""
-    from studiocr_spark.operators.stats import page_stats_grouped
-
-    raw, ocr_pages, ocr_blocks = extracted
-    grouped = {
-        (r.url, r.page_no): r.asDict(recursive=True)
-        for r in page_stats_grouped(ocr_blocks).collect()
-    }
-    hof = {
-        (r.url, r.page_no): r.page_stats.asDict(recursive=True)
-        for r in ocr_pages.select("url", "page_no", "page_stats").collect()
-    }
-    assert set(grouped) == set(hof)
-    for k, g in grouped.items():
-        assert g["word_counts"] == hof[k]["word_counts"], k
-        assert g["unique_texts"] == hof[k]["unique_texts"], k
-        assert g["conf_by_text"] == hof[k]["conf_by_text"], k
-
-
 def test_quirk_fixture_unit():
     """FIXTURES.md §2 hand-built parallel arrays through the oracle."""
     data = {
@@ -170,28 +150,6 @@ def test_page_stats_map_key_order_is_first_occurrence():
     assert stats["unique_chars"] == sorted(stats["unique_chars"])
 
 
-def test_hof_expr_agrees_with_udf_stats(extracted):
-    """Declarative page_stats_expr == in-UDF page_stats (both strategies)."""
-    from studiocr_spark.operators.stats import page_stats_expr
-
-    raw, _, _ = extracted
-    both = raw.limit(30).select(
-        "url",
-        "page_no",
-        F.col("page_stats").alias("udf_stats"),
-        page_stats_expr(F.col("raw")).alias("hof_stats"),
-    )
-    for r in both.collect():
-        u = r.udf_stats.asDict(recursive=True)
-        h = r.hof_stats.asDict(recursive=True)
-        assert u["word_counts"] == h["word_counts"]
-        assert u["unique_texts"] == h["unique_texts"]
-        assert u["char_counts"] == h["char_counts"]
-        assert sorted(u["unique_chars"]) == sorted(h["unique_chars"])
-        assert u["ascii_histogram"] == h["ascii_histogram"]
-        assert u["conf_by_text"] == h["conf_by_text"]
-
-
 def test_tesseract_jpeg_q100():
     """S4 parity (OcrEngine.py:82-83): the tesseract backend stores
     JPEG q100 page images. cv2-gated — sandbox has no JPEG codec, so
@@ -217,24 +175,6 @@ def test_tesseract_jpeg_q100():
     assert len(pages) == 1
     blob = pages[0][0]
     assert blob[:3] == b"\xff\xd8\xff"  # JPEG SOI marker
-
-
-def test_extract_without_images(spark, pages_df):
-    """with_images=False nulls the blob column (the UDF-internal
-    pruning lever) without touching any other output."""
-    from studiocr_spark.operators.extract import extract_raw
-
-    slim = extract_raw(pages_df.limit(10), backend="bitmap",
-                       with_images=False)
-    full = extract_raw(pages_df.limit(10), backend="bitmap")
-    srows = {(r.url, r.page_no): r for r in slim.collect()}
-    frows = {(r.url, r.page_no): r for r in full.collect()}
-    assert set(srows) == set(frows)
-    for k, s in srows.items():
-        assert s.image is None
-        assert frows[k].image is not None
-        assert s.page_text == frows[k].page_text
-        assert s.page_stats == frows[k].page_stats
 
 
 def test_live_decode_matches_committed_fixture(spark):
@@ -265,3 +205,56 @@ def test_live_decode_matches_committed_fixture(spark):
         )
 
     assert canon(live) == canon(fixture)
+
+
+def test_bad_payloads_become_quarantine_rows(spark):
+    """A null payload, a truncated PNG and random bytes planted among
+    good pages each become one quarantine row (page_no -1, non-empty
+    error) without failing a task; every good url still extracts
+    byte-identical text."""
+    import random
+
+    from studiocr_spark.gen import make_doc
+    from studiocr_spark.operators.extract import extract_raw, quarantine
+
+    good = [make_doc(i) for i in range(12)]
+    png = next(d["html"] for d in good if d["html"][:4] == b"\x89PNG")
+    bad = {
+        "https://bad.example/null": None,
+        "https://bad.example/truncated-png": png[: len(png) // 2],
+        "https://bad.example/random": b"\x00" + random.Random(7).randbytes(255),
+    }
+    rows = [(d["url"], d["html"]) for d in good] + list(bad.items())
+    pages = spark.createDataFrame(rows, "url string, html binary")
+
+    sc = spark.sparkContext
+    raw = extract_raw(pages, backend="bitmap").cache()
+    sc.setJobGroup("quarantine-test", "bad payload isolation")
+    try:
+        q = {r.url: r.error for r in quarantine(raw).collect()}
+        marker_pages = {
+            r.url: r.page_no
+            for r in raw.filter(F.col("error").isNotNull()).collect()
+        }
+        texts = {
+            r.url: r.extracted_text for r in assemble_doc_text(raw).collect()
+        }
+        tracker = sc.statusTracker()
+        stage_ids = [
+            s
+            for j in tracker.getJobIdsForGroup("quarantine-test")
+            for s in tracker.getJobInfo(j).stageIds
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        raw.unpersist()
+
+    assert set(q) == set(bad)
+    assert all(err for err in q.values())
+    assert marker_pages == {url: -1 for url in bad}
+    assert stage_ids
+    for s in stage_ids:
+        info = tracker.getStageInfo(s)
+        assert info is not None and info.numFailedTasks == 0, s
+    assert texts == {d["url"]: d["text"] for d in good}

@@ -76,8 +76,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     from studiocr_spark.session import get_spark
     from studiocr_spark.streaming.incremental import (
-        pending_buckets,
-        read_manifest,
+        completed_buckets,
         run_checkpointed_extract,
     )
 
@@ -88,12 +87,18 @@ def main(argv: list[str] | None = None) -> int:
         spark, pages, args.output,
         n_buckets=args.n_buckets, backend=args.backend,
     )
-    still_pending = pending_buckets(spark, args.output, args.n_buckets)
+    # the one manifest read after the run: it serves both the pending
+    # count and the --build-index reconciliation below
+    completed = completed_buckets(spark, args.output)
+    still_pending = set(range(args.n_buckets)) - completed
     if manifest is not None:
-        stats = manifest.groupBy().sum("n_urls", "n_pages", "n_blocks").first()
+        # the appended rows are a local relation: collecting them runs no job
+        rows = manifest.collect()
         print(json.dumps({
-            "completed_buckets": manifest.count(),
-            "n_urls": stats[0], "n_pages": stats[1], "n_blocks": stats[2],
+            "completed_buckets": len(rows),
+            "n_urls": sum(r.n_urls for r in rows),
+            "n_pages": sum(r.n_pages for r in rows),
+            "n_blocks": sum(r.n_blocks for r in rows),
             "pending_buckets": len(still_pending),
         }))
     else:
@@ -111,12 +116,8 @@ def main(argv: list[str] | None = None) -> int:
         # invoked without --build-index. The blocks table is
         # partitionBy(bucket), so the isin filter prunes at the scan
         # and a 0.1% delta still never re-reads the whole corpus.
-        mf = read_manifest(spark, args.output)
-        completed = (
-            {r.bucket for r in mf.select("bucket").distinct().collect()}
-            if mf is not None
-            else set()
-        )
+        # ``completed`` is every manifest bucket, so buckets an earlier
+        # run completed under a larger --n-buckets are indexed too.
         covered = segment_coverage(index_root)
         if covered is None and list_segments(index_root):
             to_index: set[int] = set()  # an ALL segment covers everything

@@ -1,7 +1,10 @@
 """Deduplication family for web-scale corpora.
 
-All variants are pure DataFrame compositions (no UDFs), deterministic,
-and DuckDB-expressible for the oracle gate:
+All variants are deterministic and DuckDB-expressible for the oracle
+gate. Joins, grouping and verification are DataFrame compositions; the
+per-document passes (shingling, the fused MinHash signature + shingle
+pass, SimHash) are Arrow pandas UDFs whose outputs match the SQL
+expression forms the oracle runs:
 
 - exact: content-identity grouping (keep the smallest doc_id)
 - MinHash + LSH: word-shingle -> per-seed min-digest signature -> banded

@@ -16,9 +16,10 @@ into ``n_buckets`` url-hash buckets; each run
    publish step. The manifest is only written after the data commit, so
    a crash between the two reprocesses work but never loses or dupes it.
 
-Progress metrics (the reference's per-page % pipe, OcrWorker.py:89-93)
-map to ``df.observe`` rows counted during the same action — zero extra
-passes.
+The manifest holds at most ``n_buckets`` rows, so its bookkeeping stays
+on the driver: it is built as a pandas frame (an Arrow local relation,
+not a pickled Python RDD) and read back with its declared schema (no
+schema-inference job).
 """
 
 from __future__ import annotations
@@ -27,12 +28,19 @@ import os
 import time
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import blocks_from_raw, extract_raw
 
 MANIFEST_TABLE = "manifest"
+MANIFEST_SCHEMA = (
+    "bucket int, n_urls long, n_pages long, n_blocks long, "
+    "wall_sec double, docs_per_sec double, min_url string, "
+    "max_url string, completed_ts timestamp"
+)
+MANIFEST_COLUMNS = [field.split()[0] for field in MANIFEST_SCHEMA.split(", ")]
 
 
 def with_bucket(pages: DataFrame, n_buckets: int) -> DataFrame:
@@ -45,9 +53,18 @@ def with_bucket(pages: DataFrame, n_buckets: int) -> DataFrame:
 def read_manifest(spark: SparkSession, out_root: str) -> DataFrame | None:
     path = os.path.join(out_root, MANIFEST_TABLE)
     try:
-        return spark.read.parquet(path)
+        return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
     except Exception:
         return None
+
+
+def completed_buckets(spark: SparkSession, out_root: str) -> set[int]:
+    """Every bucket in the manifest, whatever ``n_buckets`` completed it.
+    One scan of about one row per bucket; the set dedups on the driver."""
+    manifest = read_manifest(spark, out_root)
+    if manifest is None:
+        return set()
+    return {r.bucket for r in manifest.select("bucket").collect()}
 
 
 def pending_buckets(
@@ -55,10 +72,7 @@ def pending_buckets(
 ) -> list[int]:
     """All buckets minus completed ones (anti-join semantics, driver-side
     because bucket ids are tiny: <= n_buckets integers)."""
-    manifest = read_manifest(spark, out_root)
-    done: set[int] = set()
-    if manifest is not None:
-        done = {r.bucket for r in manifest.select("bucket").distinct().collect()}
+    done = completed_buckets(spark, out_root)
     return [b for b in range(n_buckets) if b not in done]
 
 
@@ -91,16 +105,9 @@ def run_checkpointed_extract(
     raw = with_bucket(extract_raw(bucketed, backend=backend), n_buckets)
     # single materialization: pages+stats and blocks share the cached raw
     raw = raw.cache()
-    obs = Observation("extract")
     ok = raw.filter(F.col("error").isNull())
     ocr_pages = ok.select(
         "url", "page_no", "image", "page_text", "page_stats", "bucket"
-    ).observe(
-        obs,
-        F.count("*").alias("pages"),
-        # DISTINCT aggregates are disallowed in observed metrics; the
-        # approx sketch is mergeable and good enough for progress display
-        F.approx_count_distinct("url").alias("urls"),
     )
     ocr_pages.write.mode("overwrite").partitionBy("bucket").parquet(
         os.path.join(out_root, "ocr_pages")
@@ -150,11 +157,11 @@ def run_checkpointed_extract(
         for b in pending
         if b not in seen
     ]
+    # a pandas frame crosses as Arrow into a local relation: the append
+    # below skips the pickled-RDD round trip, and collect() on the result
+    # runs no Spark job
     manifest_df = spark.createDataFrame(
-        rows,
-        "bucket int, n_urls long, n_pages long, n_blocks long, "
-        "wall_sec double, docs_per_sec double, min_url string, "
-        "max_url string, completed_ts timestamp",
+        pd.DataFrame(rows, columns=MANIFEST_COLUMNS), MANIFEST_SCHEMA
     )
     manifest_df.coalesce(1).write.mode("append").parquet(
         os.path.join(out_root, MANIFEST_TABLE)

@@ -53,5 +53,19 @@ def extracted(spark, pages_df):
     return raw, ocr_pages, ocr_blocks
 
 
+@pytest.fixture(scope="session")
+def extract_job():
+    """The ``jobs/extract_submit.py`` module, loaded from its file."""
+    import importlib.util
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "extract_submit_test", os.path.join(repo, "jobs", "extract_submit.py")
+    )
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    return job
+
+
 def sf_dir(sf: str) -> str:
     return os.path.join(TESTDATA, f"sf{sf}")

@@ -2,10 +2,20 @@
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import io
+import json
+from datetime import datetime, timezone
+
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from studiocr_spark.streaming.incremental import (
+    MANIFEST_SCHEMA,
     pending_buckets,
+    read_manifest,
     run_checkpointed_extract,
 )
 
@@ -65,3 +75,80 @@ def test_reprocessing_is_idempotent(spark, pages_df, tmp_path):
     pages_out = spark.read.parquet(f"{out}/ocr_pages")
     assert pages_out.groupBy("url", "page_no").count().filter("count > 1").count() == 0
     assert pages_out.select("url").distinct().count() == pages_df.count()
+
+
+def test_resume_over_manifest_part_from_python_rows(spark, pages_df, tmp_path):
+    """A manifest part appended the earlier way, by ``createDataFrame``
+    over Python dicts, stays readable and counts as done after the
+    manifest moved to pandas/Arrow appends."""
+    out = str(tmp_path / "ckpt3")
+    old_rows = [
+        {
+            "bucket": b, "n_urls": 0, "n_pages": 0, "n_blocks": 0,
+            "wall_sec": 1.0, "docs_per_sec": 0.0, "min_url": None,
+            "max_url": None, "completed_ts": datetime.now(timezone.utc),
+        }
+        for b in (0, 1)
+    ]
+    spark.createDataFrame(old_rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(f"{out}/manifest")
+    assert pending_buckets(spark, out, N_BUCKETS) == list(range(2, N_BUCKETS))
+
+    m = run_checkpointed_extract(spark, pages_df, out, n_buckets=N_BUCKETS)
+    assert sorted(r.bucket for r in m.collect()) == list(range(2, N_BUCKETS))
+    assert pending_buckets(spark, out, N_BUCKETS) == []
+
+    manifest = read_manifest(spark, out)
+    assert manifest.schema == StructType.fromDDL(MANIFEST_SCHEMA)
+    rows = manifest.collect()
+    assert sorted(r.bucket for r in rows) == list(range(N_BUCKETS))
+    assert {r.bucket: r.wall_sec for r in rows if r.bucket < 2} == {0: 1.0, 1: 1.0}
+    assert all(isinstance(r.completed_ts, datetime) for r in rows)
+    # both parts carry the same parquet schema, completed_ts included
+    parts = glob.glob(f"{out}/manifest/*.parquet")
+    assert len(parts) == 2
+    assert pq.read_schema(parts[0]) == pq.read_schema(parts[1])
+
+
+def test_warm_submit_job_count_and_summary(spark, extract_job, tmp_path):
+    """A warm ``extract_submit --build-index`` run launches a pinned number
+    of Spark jobs, and its summary line equals the manifest totals."""
+    from studiocr_spark.gen import write_pages
+
+    inp = str(tmp_path / "pages")
+    write_pages(spark, 40, inp, partitions=2)
+    argv = [
+        "--input", inp, "--backend", "bitmap", "--n-buckets", "4",
+        "--build-index", "--term-buckets", "2", "--master", "local[4]",
+    ]
+    assert extract_job.main(argv + ["--output", str(tmp_path / "cold")]) == 0
+
+    sc = spark.sparkContext
+    out = str(tmp_path / "warm")
+    buf = io.StringIO()
+    sc.setJobGroup("warm-submit", "warm extract_submit run")
+    try:
+        with contextlib.redirect_stdout(buf):
+            assert extract_job.main(argv + ["--output", out]) == 0
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("warm-submit"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    summary = next(
+        line for line in map(json.loads, buf.getvalue().splitlines())
+        if "n_urls" in line
+    )
+    totals = read_manifest(spark, out).agg(
+        F.sum("n_urls"), F.sum("n_pages"), F.sum("n_blocks")
+    ).first()
+    assert (summary["n_urls"], summary["n_pages"], summary["n_blocks"]) == tuple(totals)
+    assert summary["n_urls"] == 40
+    assert summary["completed_buckets"] == 4
+    assert summary["pending_buckets"] == 0
+    # input schema, the two data writes, the per-bucket audit (3 with
+    # AQE), the manifest append, the one manifest read, the blocks schema
+    # and the postings segment (8); the manifest itself needs no schema
+    # inference, no distinct and no job for the summary
+    assert n_jobs <= 17, n_jobs

@@ -203,27 +203,18 @@ def test_vacuum_ages_from_unlisting_not_creation(spark, extracted, tmp_path):
     assert not os.path.isdir(os.path.join(root, seg))
 
 
-def test_build_index_reconciles_coverage_gaps(spark, tmp_path):
+def test_build_index_reconciles_coverage_gaps(spark, extract_job, tmp_path):
     """Round-4 ADVICE (medium) fix end-to-end: --build-index indexes
     every manifest-complete bucket NOT covered by a live segment — the
     pre-fix code printed 'up_to_date' whenever a segment existed and
     nothing was newly completed, leaving a permanent index gap for
     buckets completed by runs without --build-index (or by a run that
     crashed between manifest append and segment publish)."""
-    import importlib.util
-    import os
-
     from studiocr_spark.gen import write_pages
     from studiocr_spark.operators.index import segment_coverage
     from studiocr_spark.streaming.incremental import read_manifest
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "extract_submit_test", os.path.join(repo, "jobs", "extract_submit.py")
-    )
-    job = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(job)
-
+    job = extract_job
     inp = str(tmp_path / "pages")
     out = str(tmp_path / "ocr")
     write_pages(spark, 30, inp, partitions=2)

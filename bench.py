@@ -1,6 +1,7 @@
 """Benchmark harness: headline queries + extract throughput, one JSON line.
 
-Runs on ``local[$SPARK_GRAFT_CPUS]`` against ``$SPARK_GRAFT_SF_DIR``
+Runs on ``local[$SPARK_GRAFT_CPUS]`` (default: all cores, as
+``session.get_spark``) against ``$SPARK_GRAFT_SF_DIR``
 (default /root/testdata/sf0.1). Query results are forced with the noop
 writer (full execution, no driver collect cost). The extract benchmark
 generates a deterministic pages corpus (size scaled off the sf dir),
@@ -23,7 +24,7 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 # the SAME 60k-doc 200-400-word corpus as tools/bench_scaling.py: a
 # smaller corpus under-reports docs/sec (fixed ~1.4 s job overhead
 # amortizes over fewer docs), making round-over-round extract numbers

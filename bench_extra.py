@@ -8,7 +8,7 @@ driver's measurement protocol (bench.py is frozen for that).
 
 Usage: python bench_extra.py [-nN] entry [entry ...]
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-       SPARK_GRAFT_CPUS (default 32)
+       SPARK_GRAFT_CPUS (default: all cores, as session.get_spark)
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
 def _force(df) -> None:

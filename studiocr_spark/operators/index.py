@@ -4,14 +4,13 @@ Replaces the reference's O(docs x pages x blocks x words) nested-loop scan
 (/root/reference/StudiOCR/ListDocuments.py:206-221) with term tables:
 
 - ``postings(term, url, page_no, block_no, left, top, width, height,
-  conf)`` — FLAT rows, one per (term, block). This is the query-side
-  artifact: equi-joinable, and hot terms ("the") spread across partitions
-  naturally instead of forming one giant array; AQE skew-join splits any
-  residual hot partition.
-- ``inverted_index(term, postings array, doc_freq)`` — the compacted
-  array-per-term view from SURVEY §1.2, built with a two-phase salted
-  aggregation so a hot term never funnels through a single reducer until
-  its data is already partially combined.
+  conf)`` — FLAT rows, one per (term, block). This is the served
+  artifact and the only index layout: equi-joinable, and hot terms
+  ("the") spread across partitions naturally instead of forming one
+  giant array per term (SURVEY §1.2's array view); AQE skew-join splits
+  any residual hot partition.
+- ``term_stats(term, url, tf)`` and ``doc_lens(url, dl)`` — BM25's
+  serving aggregates, written beside each postings segment.
 
 Terms are lowercased block texts (the reference lowercases both sides of
 its search, ListDocuments.py:207,215). Substring queries are served by a
@@ -40,34 +39,6 @@ def build_postings(ocr_blocks: DataFrame) -> DataFrame:
     """
     return ocr_blocks.select(
         F.lower(F.col("text")).alias("term"), *POSTING_COLS
-    )
-
-
-def build_inverted_index(
-    ocr_blocks: DataFrame, salt_buckets: int = 16
-) -> DataFrame:
-    """Compacted term -> postings-array table (SURVEY §1.2 schema).
-
-    Two-phase aggregation: phase 1 groups by (term, salt) — the hot-term
-    combine happens across ``salt_buckets`` parallel reducers — phase 2
-    merges the per-salt arrays. doc_freq = distinct urls per term.
-    """
-    p = build_postings(ocr_blocks)
-    salted = p.withColumn(
-        "salt", F.pmod(F.xxhash64("url", "page_no", "block_no"), F.lit(salt_buckets))
-    )
-    phase1 = salted.groupBy("term", "salt").agg(
-        F.collect_list(F.struct(*POSTING_COLS)).alias("partial"),
-        F.collect_set("url").alias("urls_partial"),
-    )
-    return (
-        phase1.groupBy("term")
-        .agg(
-            F.array_sort(F.flatten(F.collect_list("partial"))).alias("postings"),
-            F.size(
-                F.array_distinct(F.flatten(F.collect_list("urls_partial")))
-            ).cast("long").alias("doc_freq"),
-        )
     )
 
 

@@ -159,14 +159,6 @@ def in_doc_search(
     )
 
 
-def doc_name_search(documents: DataFrame, query: str) -> DataFrame:
-    """J5: case-insensitive substring match on document name
-    (ListDocuments.py:202-205), sorted like the doc grid (:111)."""
-    return documents.filter(
-        F.lower(F.col("name")).contains(query.lower())
-    ).orderBy(F.lower(F.col("name")))
-
-
 def matched_page_navigation(
     matched_pages: DataFrame, current_page: int
 ) -> DataFrame:

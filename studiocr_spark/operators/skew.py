@@ -5,16 +5,11 @@ runtime; this module covers the AGGREGATION side, where one hot key
 (a crawl host with 10^8 pages, the term "the" in an inverted index)
 would otherwise funnel through a single reducer:
 
-- ``salted_aggregate``: generic two-phase aggregation — phase 1 groups by
-  (key, salt) so the hot key's partial aggregation spreads over
-  ``n_salts`` reducers, phase 2 merges the partials. Works for any
-  algebraic aggregate given its (partial, merge) expression pair.
-- ``hot_keys``: cheap frequency probe to decide WHICH keys need salting
-  (sampling + approx counts), so salting is applied surgically — salting
-  everything doubles the shuffle for the long tail that didn't need it.
-
-The inverted-index builder (operators/index.py) applies the same
-two-phase pattern inline for postings arrays.
+``salted_aggregate`` is a generic two-phase aggregation: phase 1 groups
+by (key, salt) so the hot key's partial aggregation spreads over
+``n_salts`` reducers, phase 2 merges the partials. Works for any
+algebraic aggregate given its (partial, merge) expression pair. The
+``domain_stats`` entry runs it against a plain GROUP BY oracle.
 """
 
 from __future__ import annotations
@@ -23,32 +18,6 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def hot_keys(
-    df: DataFrame,
-    key_cols: list[str],
-    threshold_ratio: float = 0.01,
-    sample_fraction: float = 0.05,
-) -> DataFrame:
-    """Keys whose (sampled, approximate) share exceeds the threshold.
-
-    One pass over a sample; returns the small hot-key dim to broadcast.
-
-    NOTE: the ``sample.count()`` below is a DRIVER-SIDE ACTION — this
-    is a planning probe, intended to run once before wiring the result
-    into a plan, not inside a lazily re-evaluated subtree. Callers that
-    also reuse the sample for other statistics should ``.cache()`` /
-    ``.localCheckpoint()`` it first so the sampling scan runs once.
-    """
-    sample = df.sample(sample_fraction, seed=7) if sample_fraction < 1 else df
-    total = sample.count() or 1
-    return (
-        sample.groupBy(*key_cols)
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") / total >= threshold_ratio)
-        .select(*key_cols)
-    )
 
 
 def salted_aggregate(
@@ -71,24 +40,3 @@ def salted_aggregate(
     )
     phase1 = salted.groupBy(*key_cols, "_salt").agg(*partial_aggs)
     return phase1.groupBy(*key_cols).agg(*merge_aggs())
-
-
-def pages_per_host_salted(pages: DataFrame, n_salts: int = 16) -> DataFrame:
-    """Example: per-host page counts + bytes on a host-skewed crawl
-    (the planted hot host holds ~30% of the corpus — gen.py)."""
-    hosts = pages.withColumn(
-        "host", F.regexp_extract("url", r"https?://([^/]+)/", 1)
-    ).select("host", F.length("html").alias("n_bytes"))
-    return salted_aggregate(
-        hosts,
-        ["host"],
-        [
-            F.count("*").alias("p_n"),
-            F.sum("n_bytes").alias("p_bytes"),
-        ],
-        lambda: [
-            F.sum("p_n").alias("n_pages"),
-            F.sum("p_bytes").alias("total_bytes"),
-        ],
-        n_salts=n_salts,
-    )

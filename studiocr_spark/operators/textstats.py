@@ -217,17 +217,6 @@ def repetition_stats(
     )
 
 
-def char_ngrams(text_col: Column, n: int = 5) -> Column:
-    """All character n-grams of a text as an array (rolling window)."""
-    return F.transform(
-        F.sequence(
-            F.lit(1),
-            F.greatest(F.length(text_col) - (n - 1), F.lit(1)),
-        ),
-        lambda i: F.substring(text_col, i, n),
-    )
-
-
 def fingerprints(
     docs: DataFrame, text_col: str = "text", n: int = 5, k: int = 4
 ) -> DataFrame:

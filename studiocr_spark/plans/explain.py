@@ -23,14 +23,6 @@ def formatted_plan(df: DataFrame) -> str:
     return buf.getvalue()
 
 
-def count_exchanges(df: DataFrame) -> int:
-    """Number of shuffle exchanges (excludes broadcast exchanges)."""
-    plan = formatted_plan(df)
-    return len(re.findall(r"\bExchange\b(?! )|\(\d+\) Exchange\b", plan)) or len(
-        [l for l in plan.splitlines() if re.search(r"\)\s+Exchange\b", l)]
-    )
-
-
 def shuffle_exchanges(df: DataFrame) -> list[str]:
     """The shuffle-exchange plan lines (hashpartitioning/rangepartitioning)."""
     plan = formatted_plan(df)
@@ -48,24 +40,6 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)
 
 
-def broadcast_hash_join_keys(df: DataFrame) -> list[str]:
-    """The 'Left keys' detail line of every BroadcastHashJoin in the plan.
-
-    Lets tests pin WHICH joins are broadcast: e.g. BM25 must broadcast
-    per-term stats (keys on ``term``) but never the per-url doc-length
-    aggregate of the full postings corpus (keys on ``url``).
-    """
-    plan = formatted_plan(df)
-    keys: list[str] = []
-    blocks = re.split(r"\n\(\d+\) ", plan)
-    for block in blocks:
-        if block.startswith("BroadcastHashJoin"):
-            m = re.search(r"Left keys \[\d+\]: \[([^\]]*)\]", block)
-            if m:
-                keys.append(m.group(1))
-    return keys
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """PushedFilters lists from every parquet scan in the plan."""
     plan = formatted_plan(df)
@@ -76,8 +50,3 @@ def read_schemas(df: DataFrame) -> list[str]:
     """ReadSchema of every file scan (column-pruning evidence)."""
     plan = formatted_plan(df)
     return re.findall(r"ReadSchema: (\S+)", plan)
-
-
-def whole_stage_codegen_ids(df: DataFrame) -> list[str]:
-    plan = formatted_plan(df)
-    return re.findall(r"WholeStageCodegen \((\d+)\)", plan)

@@ -1,58 +1,17 @@
-"""Structured Streaming variants of the engine's pipelines.
+"""Structured Streaming windowed rollups.
 
 The reference's work queue (/root/reference/StudiOCR/OcrWorker.py:60-68)
-maps primarily to batch-with-checkpoints (incremental.py), but the same
-extract plan runs unchanged as a stream: new page files landing in the
-corpus directory are discovered by the file source, decoded by the SAME
-Arrow UDF, and appended to the block/page sinks exactly-once via the
-streaming checkpoint. This is the ingest-as-it-crawls deployment shape.
-
-Also provides watermarked event-time windowed aggregation over an events
-stream (late data handled by the watermark) — the standard streaming
-rollup a training-data pipeline needs for monitoring extraction metrics.
+maps to batch-with-checkpoints (incremental.py); the extract itself is a
+batch job. The one streaming shape here is a watermarked event-time
+windowed aggregation over an events stream (late data dropped after the
+watermark), driven to completion into a memory table; the
+``stream_window_counts`` entry serves it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-
-from ..operators.extract import blocks_from_raw, extract_raw
-from ..schemas import PAGES_SCHEMA
-
-
-def read_pages_stream(
-    spark: SparkSession, pages_dir: str, max_files_per_trigger: int = 8
-) -> DataFrame:
-    """File-source stream over a pages parquet directory."""
-    return (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(pages_dir)
-    )
-
-
-def stream_extract_blocks(
-    pages_stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    backend: str = "bitmap",
-) -> StreamingQuery:
-    """pages stream -> ocr_blocks parquet sink, exactly-once.
-
-    The extract UDF is identical to the batch path — mapInPandas composes
-    with streaming sources; state-free, so no watermark needed.
-    """
-    raw = extract_raw(pages_stream, backend=backend)
-    blocks = blocks_from_raw(raw.filter(F.col("error").isNull()))
-    return (
-        blocks.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
 
 
 def windowed_event_counts(

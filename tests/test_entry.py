@@ -39,7 +39,7 @@ def test_query_and_oracle_keys_align():
 
 @pytest.mark.parametrize(
     "name", ["q1_pricing_summary", "j3_keyword_search", "dedup_minhash_lsh",
-             "ann_cosine_topk", "quality_scores"]
+             "ann_cosine_topk", "quality_scores", "domain_stats"]
 )
 def test_query_matches_oracle_sample(spark, name):
     """Spot-check the oracle gate in-suite (full sweep: tools/check_oracle.py)."""

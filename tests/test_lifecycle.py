@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from studiocr_spark.operators.lifecycle import (
     dedup_manifest,
@@ -130,40 +129,6 @@ def test_catalog_append_and_versions(spark, tmp_path):
     # two versions exist until vacuum
     assert cat.vacuum("t") == 1
     assert cat.read("t").count() == 5
-
-
-def test_salted_aggregate_matches_plain(spark, pages_df):
-    """Two-phase salted agg == plain groupBy on the host-skewed corpus."""
-    from pyspark.sql import functions as F
-
-    from studiocr_spark.operators.skew import (
-        hot_keys,
-        pages_per_host_salted,
-    )
-
-    salted = {
-        r.host: (r.n_pages, r.total_bytes)
-        for r in pages_per_host_salted(pages_df, n_salts=8).collect()
-    }
-    plain = {
-        r.host: (r.n_pages, r.total_bytes)
-        for r in pages_df.withColumn(
-            "host", F.regexp_extract("url", r"https?://([^/]+)/", 1)
-        )
-        .groupBy("host")
-        .agg(
-            F.count("*").alias("n_pages"),
-            F.sum(F.length("html")).alias("total_bytes"),
-        )
-        .collect()
-    }
-    assert salted == plain
-    # the planted hot host is detected by the frequency probe
-    hosts = pages_df.select(
-        F.regexp_extract("url", r"https?://([^/]+)/", 1).alias("host")
-    )
-    hot = {r.host for r in hot_keys(hosts, ["host"], 0.1, 1.0).collect()}
-    assert "host0.example" in hot
 
 
 def test_catalog_upsert_merge_semantics(spark, tmp_path):

@@ -259,52 +259,6 @@ def test_range_join_entry_is_equijoin(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
-    """Round-4: bucket-by-key tables (the parquet analog of the Iceberg
-    bucket-by-url DDL) must join with ZERO shuffle exchanges — the
-    write-once-shuffle-never-again shape the north_rule's explicit
-    bucketing mandate is about. A non-bucketed control join of the same
-    data must show the usual exchanges, proving the elision came from
-    bucketing and not from plan size."""
-    from studiocr_spark.plans.explain import shuffle_exchanges
-    from studiocr_spark.sources.bucketed import bucketed_join, write_bucketed
-
-    orders = spark.read.parquet(f"{SF}/orders.parquet")
-    customer = spark.read.parquet(f"{SF}/customer.parquet")
-    # at toy scale Catalyst would auto-broadcast the dim and sidestep
-    # bucketing entirely ("Bucketed: false (disabled by query planner)");
-    # disabling broadcast forces the sort-merge shape 100 TB would take,
-    # which is exactly where bucketing must elide both exchanges
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        write_bucketed(
-            orders, "t_orders_b", "o_custkey", 4,
-            path=str(tmp_path / "ob"),
-        )
-        write_bucketed(
-            customer, "t_customer_b", "c_custkey", 4,
-            path=str(tmp_path / "cb"),
-        )
-        joined = bucketed_join(
-            spark, "t_orders_b", "t_customer_b", "o_custkey", "c_custkey"
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert shuffle_exchanges(joined) == [], plan
-        assert "Bucketed: true" in plan, plan
-        # same rows as the plain join; the non-bucketed control DOES
-        # shuffle under the same no-broadcast conf
-        plain = orders.join(
-            customer, orders.o_custkey == customer.c_custkey
-        )
-        assert joined.count() == plain.count()
-        assert shuffle_exchanges(plain) != []
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_customer_b")
-
-
 def test_round4_entry_shuffle_budgets(spark):
     """Plan-shape budgets for the round-4 curation entries: each one's
     exchange count is pinned at the number its scale story promises —

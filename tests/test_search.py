@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from studiocr_spark.operators.index import build_inverted_index, build_postings
+from studiocr_spark.operators.index import build_postings
 from studiocr_spark.operators.search import (
     conf_color,
     first_page_per_doc,
@@ -136,23 +136,3 @@ def test_first_page_per_doc(extracted):
     rows = fp.collect()
     assert all(r.page_no == 0 for r in rows)
     assert all(r.thumbnail is not None for r in rows)
-
-
-def test_inverted_index_consistency(extracted):
-    """Array view agrees with flat postings on doc_freq and posting counts."""
-    _, _, ocr_blocks = extracted
-    postings = build_postings(ocr_blocks)
-    idx = build_inverted_index(ocr_blocks, salt_buckets=4)
-    flat = (
-        postings.groupBy("term")
-        .agg(F.count("*").alias("n"), F.countDistinct("url").alias("df"))
-        .collect()
-    )
-    flat_map = {r.term: (r.n, r.df) for r in flat}
-    for r in idx.collect():
-        n, df = flat_map[r.term]
-        assert len(r.postings) == n, r.term
-        assert r.doc_freq == df, r.term
-        # postings sorted (url, page_no, block_no)
-        keys = [(p.url, p.page_no, p.block_no) for p in r.postings]
-        assert keys == sorted(keys)

@@ -1,4 +1,4 @@
-"""Structured Streaming: streaming extract parity + windowed rollups."""
+"""Structured Streaming: watermarked windowed rollups."""
 
 from __future__ import annotations
 
@@ -7,47 +7,11 @@ import os
 from pyspark.sql import functions as F
 
 from studiocr_spark.streaming.stream_extract import (
-    read_pages_stream,
     run_stream_to_memory,
-    stream_extract_blocks,
     windowed_event_counts,
 )
 
 from .conftest import sf_dir
-
-
-def test_stream_extract_matches_batch(spark, pages_df, extracted, tmp_path):
-    """The SAME extract over a file stream produces the batch block set."""
-    pages_dir = str(tmp_path / "pages")
-    out_dir = str(tmp_path / "blocks_out")
-    ckpt = str(tmp_path / "ckpt")
-    pages_df.write.mode("overwrite").parquet(pages_dir)
-
-    stream = read_pages_stream(spark, pages_dir, max_files_per_trigger=2)
-    assert stream.isStreaming
-    q = stream_extract_blocks(stream, out_dir, ckpt)
-    q.processAllAvailable()
-    q.stop()
-
-    got = spark.read.parquet(out_dir)
-    _, _, batch_blocks = extracted
-    assert got.count() == batch_blocks.count()
-    # spot-check exact equality of a slice
-    key = ["url", "page_no", "block_no"]
-    diff = (
-        got.select(*key, "text")
-        .exceptAll(batch_blocks.select(*key, "text"))
-        .count()
-    )
-    assert diff == 0
-
-    # restart with no new files: exactly-once, no duplicates
-    q2 = stream_extract_blocks(
-        read_pages_stream(spark, pages_dir), out_dir, ckpt
-    )
-    q2.processAllAvailable()
-    q2.stop()
-    assert spark.read.parquet(out_dir).count() == batch_blocks.count()
 
 
 def test_windowed_event_counts(spark, tmp_path):
@@ -75,142 +39,3 @@ def test_windowed_event_counts(spark, tmp_path):
     )
     got_total = sum(r.n for r in rows)
     assert got_total == sum(r.n for r in batch.collect())
-
-
-def test_observed_metrics(spark, pages_df):
-    from studiocr_spark.operators.extract import extract_raw
-    from studiocr_spark.streaming.metrics import observed
-
-    raw = extract_raw(pages_df, backend="bitmap")
-    df, obs = observed(raw, "x")
-    n = df.count()
-    got = obs.get
-    assert got["rows"] == n
-    assert got["errors"] == 0
-    assert got["urls_approx"] > 100  # ~120 urls, approx sketch
-
-
-def test_stateful_sessionization(spark, tmp_path):
-    """applyInPandasWithState sessions == batch-computed CLOSED sessions."""
-    import pandas as pd
-
-    from studiocr_spark.streaming.stateful import sessionize_stateful
-
-    src = os.path.join(sf_dir("0.001"), "events.parquet")
-    ev = (
-        spark.read.parquet(src)
-        .select("user_id", F.col("ts").cast("timestamp").alias("ts"), "value")
-        .orderBy("ts")
-    )
-    pdf = ev.toPandas()
-    ev_dir = tmp_path / "ev_stream"
-    ev_dir.mkdir()
-    # three time-sliced files so sessions must cross micro-batches
-    third = len(pdf) // 3
-    for i in range(3):
-        chunk = pdf.iloc[i * third : (i + 1) * third if i < 2 else len(pdf)]
-        # Spark's parquet reader expects microsecond timestamps
-        chunk = chunk.assign(ts=chunk["ts"].astype("datetime64[us]"))
-        chunk.to_parquet(ev_dir / f"part-{i:03d}.parquet", index=False)
-
-    # batch oracle first: ALL sessions — the stream emits gap-closed
-    # sessions during processing and flushes the remaining open ones via
-    # the processing-time timeout
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts")
-    epoch = F.col("ts").cast("long")
-    sess = (
-        ev.withColumn(
-            "new_s",
-            F.when(epoch - F.lag(epoch).over(w) > 1800, 1).otherwise(0),
-        )
-        .withColumn(
-            "s_no",
-            F.sum("new_s").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-        .groupBy("user_id", "s_no")
-        .agg(F.min(epoch).alias("start"), F.count("*").alias("n"))
-    )
-    expected = {(r.user_id, r.start, r.n) for r in sess.collect()}
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(ev_dir))
-    )
-    q = (
-        sessionize_stateful(stream, gap_sec=1800, timeout_ms=3000)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sess_out")
-        .start()
-    )
-    # processAllAvailable() never settles here: timeout cleanup keeps
-    # scheduling triggers. Poll until every session has been emitted.
-    import time
-
-    got: set = set()
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        got = {
-            (r.user_id, int(r.session_start.timestamp()), r.n_events)
-            for r in spark.table("sess_out").collect()
-        }
-        if len(got) >= len(expected):
-            break
-        if q.exception() is not None:
-            raise AssertionError(str(q.exception()))
-        time.sleep(2)
-    q.stop()
-    assert got == expected
-    assert len(got) > 50  # real session structure, not a trivial pass
-
-
-def test_stream_dedup_matches_batch_distinct(spark, tmp_path):
-    """Streaming dropDuplicates on content hash == batch distinct set,
-    and exactly-once across a restart with no new files."""
-    from studiocr_spark.streaming.stream_dedup import stream_dedup_exact
-
-    docs_dir = str(tmp_path / "docs")
-    out_dir = str(tmp_path / "deduped")
-    ckpt = str(tmp_path / "ckpt_dedup")
-    # duplicate-heavy corpus: 300 docs over 60 distinct texts
-    spark.range(300).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("text "), (F.col("id") % 60).cast("string")).alias(
-            "text"
-        ),
-    ).repartition(6).write.mode("overwrite").parquet(docs_dir)
-
-    def run():
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 2)
-            .parquet(docs_dir)
-        )
-        q = (
-            stream_dedup_exact(stream)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .format("parquet")
-            .option("path", out_dir)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    run()
-    got = spark.read.parquet(out_dir)
-    assert got.count() == 60
-    batch_hashes = {
-        r.h
-        for r in spark.read.parquet(docs_dir)
-        .select(F.md5("text").alias("h"))
-        .distinct()
-        .collect()
-    }
-    assert {r.content_hash for r in got.collect()} == batch_hashes
-
-    run()  # restart, no new input -> no duplicates
-    assert spark.read.parquet(out_dir).count() == 60

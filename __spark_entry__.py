@@ -16,6 +16,7 @@ pseudo-confidence — portable arithmetic reproduced verbatim in SQL:
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 from collections.abc import Callable
 
@@ -407,14 +408,14 @@ def _bm25_index_root(spark: SparkSession, sf_dir: str) -> str:
     hashes overflows under ANSI) — so a changed corpus forces a
     rebuild and a stale cross-corpus pairing is impossible (same
     protocol as the ANN dumps). Bump the version prefix whenever
-    _blocks or write_postings semantics change: the stamp must
+    _blocks or the segment store's semantics change: the stamp must
     invalidate on CODE changes too, or a stale store serves old
     postings until an oracle mismatch."""
     docs = _t(spark, sf_dir, "documents")
     n, content = docs.agg(
         F.count("*"), F.bit_xor(F.xxhash64("doc_id", "text"))
     ).first()
-    fp = f"v2 n={n} h={content}"
+    fp = f"v3 n={n} h={content}"
     root = os.path.join(
         _BM25_INDEX, os.path.basename(os.path.normpath(sf_dir))
     )
@@ -424,15 +425,16 @@ def _bm25_index_root(spark: SparkSession, sf_dir: str) -> str:
         with open(fpr) as f:
             current = f.read().strip()
     if current != fp:
-        from studiocr_spark.operators.index import write_postings
+        from studiocr_spark.operators.index import write_postings_segment
 
         postings = _blocks(spark, sf_dir).select(
             F.col("text").alias("term"),
             F.col("doc_id").cast("string").alias("url"),
         )
-        # write_postings clears the dir (stale _FPR included), then the
-        # stamp commits the build
-        write_postings(postings, root, term_buckets=8)
+        # clear the old store (stale _FPR included), build a one-segment
+        # store, then the stamp commits the build
+        shutil.rmtree(root, ignore_errors=True)
+        write_postings_segment(postings, root, term_buckets=8)
         with open(fpr, "w") as f:
             f.write(fp + "\n")
     return root
@@ -441,8 +443,8 @@ def _bm25_index_root(spark: SparkSession, sf_dir: str) -> str:
 def bm25_ranked_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 ranked retrieval served from the MATERIALIZED index: the
     (term, url, tf) and (url, dl) aggregations are paid at index-build
-    time (operators/index.py write_postings), so the query plan is a
-    pushed IN(term) scan + df mini-agg + one url join + final sum —
+    time (operators/index.py write_postings_segment), so the query plan
+    is a pushed IN(term) scan + df mini-agg + one url join + final sum —
     ~3 exchanges instead of 8 (round-4 verdict task 6)."""
     from studiocr_spark.operators.index import read_doc_lens, read_term_stats
     from studiocr_spark.operators.search import bm25_search

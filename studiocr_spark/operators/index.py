@@ -4,13 +4,17 @@ Replaces the reference's O(docs x pages x blocks x words) nested-loop scan
 (/root/reference/StudiOCR/ListDocuments.py:206-221) with term tables:
 
 - ``postings(term, url, page_no, block_no, left, top, width, height,
-  conf)`` — FLAT rows, one per (term, block). This is the served
-  artifact and the only index layout: equi-joinable, and hot terms
-  ("the") spread across partitions naturally instead of forming one
-  giant array per term (SURVEY §1.2's array view); AQE skew-join splits
-  any residual hot partition.
+  conf)`` — FLAT rows, one per (term, block): equi-joinable, and hot
+  terms ("the") spread across partitions naturally instead of forming
+  one giant array per term (SURVEY §1.2's array view); AQE skew-join
+  splits any residual hot partition.
 - ``term_stats(term, url, tf)`` and ``doc_lens(url, dl)`` — BM25's
-  serving aggregates, written beside each postings segment.
+  serving aggregates, written beside the postings in each segment.
+
+The segment store below is the only layout: a ``SEGMENTS`` manifest
+lists immutable segment dirs, each holding its postings, its ``_aux/``
+serving tables and its ``_BUCKETS`` coverage. Every reader goes through
+the manifest; a directory without one is not a store.
 
 Terms are lowercased block texts (the reference lowercases both sides of
 its search, ListDocuments.py:207,215). Substring queries are served by a
@@ -69,13 +73,11 @@ TERM_STATS = "term_stats"
 DOC_LENS = "doc_lens"
 
 
-def write_postings(
-    postings: DataFrame,
-    path: str,
-    term_buckets: int = 64,
-    with_bm25_stats: bool = True,
+def _write_segment_dir(
+    postings: DataFrame, path: str, term_buckets: int = 64
 ) -> None:
-    """Persist the postings table partition-clustered by term hash.
+    """Persist one segment dir: the postings partition-clustered by term
+    hash, plus the BM25 serving tables under ``path/_aux/``.
 
     Parquet fallback for the sandbox; production DDL (Iceberg) is
     ``PARTITIONED BY (bucket(N, term))`` so search joins are
@@ -83,15 +85,18 @@ def write_postings(
     term-hash bucket column so files are term-clustered and min/max
     stats prune scans.
 
-    ``with_bm25_stats`` also materializes the ranked-retrieval serving
-    tables (:func:`build_term_stats`, :func:`build_doc_lens`) under
-    ``path/_aux/`` — paying the two corpus aggregations once per build
-    instead of once per query. The aggregations read the JUST-WRITTEN
-    parquet rather than the input plan (round-6 ADVICE fix: a computed
-    ``postings`` subplan — e.g. an extraction chain — used to execute
-    three times per build, once per reference); the re-read also prunes
-    to the two columns the aggregations touch and guarantees the aux
-    tables describe exactly what was persisted.
+    The aux tables (:func:`build_term_stats`, :func:`build_doc_lens`)
+    pay the two corpus aggregations once per build instead of once per
+    query. They read the JUST-WRITTEN parquet rather than the input
+    plan (round-6 ADVICE fix: a computed ``postings`` subplan — e.g. an
+    extraction chain — used to execute three times per build, once per
+    reference); the re-read also prunes to the two columns the
+    aggregations touch and guarantees the aux tables describe exactly
+    what was persisted.
+
+    A bare dir is not a store: readers only see it once
+    :func:`write_postings_segment` or :func:`compact_postings` lists it
+    in SEGMENTS.
     """
     import os
 
@@ -104,22 +109,19 @@ def write_postings(
         .write.mode("overwrite")
         .parquet(path)
     )
-    if with_bm25_stats:
-        written = postings.sparkSession.read.parquet(path).select(
-            "term", "url"
-        )
-        # term-clustered like the postings themselves, so a query's
-        # pushed IN(term, ...) filter prunes row groups by min/max
-        (
-            build_term_stats(written)
-            .repartition(term_buckets, "term")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, AUX_DIR, TERM_STATS))
-        )
-        build_doc_lens(written).write.mode("overwrite").parquet(
-            os.path.join(path, AUX_DIR, DOC_LENS)
-        )
+    written = postings.sparkSession.read.parquet(path).select("term", "url")
+    # term-clustered like the postings themselves, so a query's pushed
+    # IN(term, ...) filter prunes row groups by min/max
+    (
+        build_term_stats(written)
+        .repartition(term_buckets, "term")
+        .sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .parquet(os.path.join(path, AUX_DIR, TERM_STATS))
+    )
+    build_doc_lens(written).write.mode("overwrite").parquet(
+        os.path.join(path, AUX_DIR, DOC_LENS)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -315,22 +317,20 @@ def write_postings_segment(
     postings: DataFrame,
     root: str,
     term_buckets: int = 64,
-    segment_id: str | None = None,
     buckets: list[int] | str = "ALL",
 ) -> str:
     """Write ``postings`` as a new segment under ``root`` and publish it.
 
-    Same term-clustered layout as :func:`write_postings`, but additive:
-    existing segments are untouched and stay readable throughout.
-    ``buckets`` records the segment's extract-bucket coverage (see
-    :func:`segment_coverage`); incremental callers pass the bucket ids
-    they indexed. Returns the segment dir name.
+    Additive: existing segments are untouched and stay readable
+    throughout. ``buckets`` records the segment's extract-bucket
+    coverage (see :func:`segment_coverage`); incremental callers pass
+    the bucket ids they indexed. Returns the segment dir name.
     """
     import os
     import uuid
 
-    seg = segment_id or f"seg_{uuid.uuid4().hex[:12]}"
-    write_postings(
+    seg = f"seg_{uuid.uuid4().hex[:12]}"
+    _write_segment_dir(
         postings, os.path.join(root, seg), term_buckets=term_buckets
     )
     _write_coverage(root, seg, buckets)
@@ -340,50 +340,33 @@ def write_postings_segment(
 
 
 def read_postings(spark, root: str) -> DataFrame:
-    """Union of all live segments (single multi-path parquet scan).
+    """Union of all live segments (single multi-path parquet scan)."""
+    return spark.read.parquet(*_segment_paths(root))
 
-    Falls back to reading ``root`` directly when no SEGMENTS manifest
-    exists — a plain :func:`write_postings` output is then treated as a
-    one-segment store, so pre-segmentation indexes keep working.
-    """
+
+def _segment_paths(root: str, *sub: str) -> list[str]:
+    """``root/<seg>/<sub...>`` for every live segment; a dir without a
+    SEGMENTS manifest is not a store and fails here."""
     import os
 
     segs = list_segments(root)
     if not segs:
-        return spark.read.parquet(root)
-    return spark.read.parquet(*[os.path.join(root, s) for s in segs])
-
-
-def _read_aux(spark, root: str, which: str) -> DataFrame | None:
-    """Union of one aux dataset across live segments; ``None`` when any
-    live segment predates aux materialization (callers fall back to
-    recomputing from postings — correctness never depends on aux)."""
-    import os
-
-    segs = list_segments(root)
-    dirs = [root] if not segs else [os.path.join(root, s) for s in segs]
-    paths = [os.path.join(d, AUX_DIR, which) for d in dirs]
-    if not all(os.path.exists(p) for p in paths):
-        return None
-    return spark.read.parquet(*paths)
+        raise FileNotFoundError(
+            f"no postings store at {root}: no {SEGMENTS_FILE} manifest"
+        )
+    return [os.path.join(root, s, *sub) for s in segs]
 
 
 def read_term_stats(spark, root: str) -> DataFrame:
-    """(term, url, tf) for the live index — materialized when the store
-    has it, recomputed from postings otherwise."""
-    aux = _read_aux(spark, root, TERM_STATS)
-    if aux is not None:
-        return aux
-    return build_term_stats(read_postings(spark, root))
+    """(term, url, tf) for the live index: the union of every segment's
+    materialized aux table."""
+    return spark.read.parquet(*_segment_paths(root, AUX_DIR, TERM_STATS))
 
 
 def read_doc_lens(spark, root: str) -> DataFrame:
-    """(url, dl) for the live index — materialized when the store has
-    it, recomputed from postings otherwise."""
-    aux = _read_aux(spark, root, DOC_LENS)
-    if aux is not None:
-        return aux
-    return build_doc_lens(read_postings(spark, root))
+    """(url, dl) for the live index: the union of every segment's
+    materialized aux table."""
+    return spark.read.parquet(*_segment_paths(root, AUX_DIR, DOC_LENS))
 
 
 def compact_postings(spark, root: str, term_buckets: int = 64) -> str:
@@ -408,7 +391,7 @@ def compact_postings(spark, root: str, term_buckets: int = 64) -> str:
         merged = read_postings(spark, root)
         coverage = segment_coverage(root)
         seg = f"seg_compacted_{uuid.uuid4().hex[:12]}"
-        write_postings(
+        _write_segment_dir(
             merged, os.path.join(root, seg), term_buckets=term_buckets
         )
         _write_coverage(

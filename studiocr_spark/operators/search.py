@@ -28,6 +28,7 @@ import operator
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .index import build_doc_lens, build_term_stats
 from .textstats import round6
 
 
@@ -175,11 +176,15 @@ def matched_page_navigation(
     )
 
 
+# BM25 free parameters, fixed at the textbook values the DuckDB oracle
+# (``bm25_ranked_search``) also uses
+BM25_K1 = 1.2
+BM25_B = 0.75
+
+
 def bm25_search(
     postings: DataFrame | None,
     query: str,
-    k1: float = 1.2,
-    b: float = 0.75,
     limit: int | None = None,
     term_stats: DataFrame | None = None,
     doc_lens: DataFrame | None = None,
@@ -188,73 +193,62 @@ def bm25_search(
     Jones — public formula), token-match semantics.
 
     score(d) = Σ_t idf(t) * tf / (tf + k1 * (1 - b + b * len_d / avg_len))
-    with idf(t) = ln(1 + (N - df + 0.5) / (df + 0.5)).
+    with idf(t) = ln(1 + (N - df + 0.5) / (df + 0.5)), k1 = ``BM25_K1``
+    and b = ``BM25_B``.
 
-    Two serving shapes (round-4 verdict task 6):
+    One plan, served from the (term, url, tf) and (url, dl) tables: pass
+    them as ``term_stats`` + ``doc_lens`` (the segment store
+    materializes both at index-build time; read_term_stats/read_doc_lens
+    load them, and ``postings`` may be None), or pass only ``postings``
+    and they are derived in-plan with build_term_stats/build_doc_lens.
+    The plan is filter-by-term -> df_t mini-agg -> one url equi-join ->
+    final per-url sum. On derived tables Catalyst pushes the IN(term)
+    filter below the tf aggregate, so the ad-hoc form aggregates only
+    the query's terms.
 
-    - ``term_stats`` (term, url, tf) + ``doc_lens`` (url, dl) given —
-      the MATERIALIZED path: both corpus aggregations were paid at
-      index-build time (operators.index.write_postings writes them to
-      the segment store; read_term_stats/read_doc_lens load them), so
-      the query plan is filter-by-term -> df_t mini-agg -> one url
-      equi-join -> final per-url sum. ``postings`` may be None.
-    - Only ``postings`` given — everything derived in-plan (ad-hoc
-      corpora, tests): tf and dl each cost a corpus aggregation per
-      query.
-
-    Query terms enter as a broadcast list; per-term df is a tiny
-    broadcast. Doc lengths are a per-url aggregate of the WHOLE corpus,
-    so they are NEVER broadcast-hinted: at 10^9 docs that would be a
-    multi-GB driver broadcast. The tf⋈doc_len join stays a shuffle
-    equi-join on url (AQE may still downgrade it to a broadcast at
-    runtime when the corpus is genuinely small). Deterministic
-    tie-break by url.
+    Per-term df is a tiny broadcast. Doc lengths are a per-url aggregate
+    of the WHOLE corpus, so they are NEVER broadcast-hinted: at 10^9
+    docs that would be a multi-GB driver broadcast. The tf⋈doc_len join
+    stays a shuffle equi-join on url (AQE may still downgrade it to a
+    broadcast at runtime when the corpus is genuinely small).
+    Deterministic tie-break by url.
     """
     if (term_stats is None) != (doc_lens is None):
         raise ValueError(
             "pass term_stats and doc_lens together (both materialized "
             "at index build) or neither"
         )
-    if term_stats is None and postings is None:
-        raise ValueError("need postings or (term_stats, doc_lens)")
+    if term_stats is None:
+        if postings is None:
+            raise ValueError("need postings or (term_stats, doc_lens)")
+        term_stats, doc_lens = (
+            build_term_stats(postings), build_doc_lens(postings)
+        )
     words = split_query(query)
-    spark = (
-        postings if postings is not None else term_stats
-    ).sparkSession
     if not words:
-        return spark.createDataFrame([], "url string, score double")
+        return term_stats.sparkSession.createDataFrame(
+            [], "url string, score double"
+        )
 
-    if term_stats is not None:
-        doc_len = doc_lens
-        # a static IN-filter (terms are plan-time literals) instead of
-        # a join: it pushes into the parquet scan (PushedFilters), so a
-        # term-clustered store prunes row groups before any operator
-        tf = term_stats.filter(F.col("term").isin(list(set(words))))
-        # df per term: count rows of the pre-aggregated (term, url, tf)
-        # — already distinct per (term, url), no count_distinct needed
-        df_t = tf.groupBy("term").agg(F.count("*").alias("df"))
-    else:
-        terms_df = F.broadcast(
-            spark.createDataFrame([(w,) for w in set(words)], "term string")
-        )
-        doc_len = postings.groupBy("url").agg(F.count("*").alias("dl"))
-        matched = postings.join(terms_df, "term")
-        df_t = matched.groupBy("term").agg(
-            F.count_distinct("url").alias("df")
-        )
-        tf = matched.groupBy("url", "term").agg(F.count("*").alias("tf"))
+    # a static IN-filter (terms are plan-time literals) instead of a
+    # join: it pushes into the parquet scan (PushedFilters), so a
+    # term-clustered store prunes row groups before any operator
+    tf = term_stats.filter(F.col("term").isin(list(set(words))))
+    # df per term: count rows of the pre-aggregated (term, url, tf) —
+    # already distinct per (term, url), no count_distinct needed
+    df_t = tf.groupBy("term").agg(F.count("*").alias("df"))
     # corpus stats stay LAZY: a 1-row broadcast cross-join instead of a
     # driver collect(), so building the query plan never triggers a full
     # postings scan (and the stats job fuses into the one submitted job)
     stats = F.broadcast(
-        doc_len.agg(
+        doc_lens.agg(
             F.count("*").cast("double").alias("n_docs"),
             F.avg("dl").alias("avg_dl"),
         )
     )
     scored = (
         tf.join(F.broadcast(df_t), "term")
-        .join(doc_len, "url")  # corpus-sized side: no broadcast hint
+        .join(doc_lens, "url")  # corpus-sized side: no broadcast hint
         .crossJoin(stats)
         .withColumn(
             "idf",
@@ -270,7 +264,8 @@ def bm25_search(
             * F.col("tf")
             / (
                 F.col("tf")
-                + k1 * (1 - b + b * F.col("dl") / F.col("avg_dl"))
+                + BM25_K1
+                * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avg_dl"))
             ),
         )
         .groupBy("url")

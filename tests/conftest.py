@@ -53,18 +53,45 @@ def extracted(spark, pages_df):
     return raw, ocr_pages, ocr_blocks
 
 
-@pytest.fixture(scope="session")
-def extract_job():
-    """The ``jobs/extract_submit.py`` module, loaded from its file."""
+def _load_job(spark, name: str):
+    """``jobs/<name>.py`` loaded from its file, its ``main`` run in this
+    process on the session fixture.
+
+    The job's ``get_spark`` call reuses the session but re-applies the
+    job's runtime conf, which resets ``spark.sql.shuffle.partitions``
+    from the fixture's 4 to ``max(cpus, 8)``; ``main`` restores it so
+    later tests keep the fixture's plans."""
     import importlib.util
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(
-        "extract_submit_test", os.path.join(repo, "jobs", "extract_submit.py")
+        f"{name}_test", os.path.join(repo, "jobs", f"{name}.py")
     )
     job = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(job)
+    job_main = job.main
+
+    def main(argv):
+        keep = spark.conf.get("spark.sql.shuffle.partitions")
+        try:
+            return job_main(argv)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", keep)
+
+    job.main = main
     return job
+
+
+@pytest.fixture(scope="session")
+def extract_job(spark):
+    """The ``jobs/extract_submit.py`` module (see :func:`_load_job`)."""
+    return _load_job(spark, "extract_submit")
+
+
+@pytest.fixture(scope="session")
+def clean_job(spark):
+    """The ``jobs/clean_submit.py`` module (see :func:`_load_job`)."""
+    return _load_job(spark, "clean_submit")
 
 
 def sf_dir(sf: str) -> str:

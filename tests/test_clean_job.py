@@ -1,23 +1,25 @@
 """jobs/clean_submit.py end-to-end: runs, writes both sinks, and is
-deterministic across re-runs (salted-hash sampling)."""
+deterministic across re-runs (salted-hash sampling). The job runs in
+process on the session fixture, as the extract-job tests do."""
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
-import sys
 
 from .conftest import sf_dir
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+def _run(job, argv, capsys) -> dict:
+    """Run the job and parse its JSON summary line."""
+    capsys.readouterr()  # drop anything printed before this run
+    assert job.main(argv) == 0
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
 
-def test_clean_submit_runs_and_is_deterministic(tmp_path):
+def test_clean_submit_runs_and_is_deterministic(clean_job, tmp_path, capsys):
     out = str(tmp_path / "clean")
-    cmd = [
-        sys.executable,
-        os.path.join(REPO, "jobs", "clean_submit.py"),
+    argv = [
         "--input", os.path.join(sf_dir("0.001"), "documents.parquet"),
         "--output", out,
         "--sample", "0.5",
@@ -26,24 +28,17 @@ def test_clean_submit_runs_and_is_deterministic(tmp_path):
         "--master", "local[4]",
     ]
 
-    def run():
-        proc = subprocess.run(
-            cmd, capture_output=True, text=True, timeout=300, cwd=str(tmp_path)
-        )
-        assert proc.returncode == 0, proc.stderr[-2000:]
-        return json.loads(proc.stdout.strip().splitlines()[-1])
-
-    first = run()
+    first = _run(clean_job, argv, capsys)
     assert first["docs_in"] == 500
     assert 0 < first["docs_kept"] < 500
     assert first["n_shards"] > 0 and first["n_tokens"] > 0
     assert os.path.isdir(f"{out}/clean_docs") and os.path.isdir(f"{out}/shards")
 
-    second = run()  # deterministic: identical summary on re-run
+    second = _run(clean_job, argv, capsys)  # deterministic: identical summary
     assert second == first
 
 
-def test_clean_submit_curation_flags(tmp_path):
+def test_clean_submit_curation_flags(clean_job, tmp_path, capsys):
     """Round-4 stages: line dedup, per-source cap, and decontamination
     compose into the job and stay deterministic across re-runs."""
     out = str(tmp_path / "clean2")
@@ -56,9 +51,7 @@ def test_clean_submit_curation_flags(tmp_path):
         f"'{sf_dir('0.001')}/documents.parquet') WHERE doc_id < 5) "
         f"TO '{eval_dir}' (FORMAT PARQUET)"
     )
-    cmd = [
-        sys.executable,
-        os.path.join(REPO, "jobs", "clean_submit.py"),
+    argv = [
         "--input", os.path.join(sf_dir("0.001"), "documents.parquet"),
         "--output", out,
         "--sample", "0.9",
@@ -70,16 +63,8 @@ def test_clean_submit_curation_flags(tmp_path):
         "--master", "local[4]",
     ]
 
-    def run():
-        proc = subprocess.run(
-            cmd, capture_output=True, text=True, timeout=300,
-            cwd=str(tmp_path),
-        )
-        assert proc.returncode == 0, proc.stderr[-2000:]
-        return json.loads(proc.stdout.strip().splitlines()[-1])
-
-    first = run()
+    first = _run(clean_job, argv, capsys)
     assert first["docs_in"] == 500
     assert 0 < first["docs_kept"] < 500
-    second = run()
+    second = _run(clean_job, argv, capsys)
     assert second == first

@@ -39,13 +39,23 @@ def test_query_and_oracle_keys_align():
 
 @pytest.mark.parametrize(
     "name", ["q1_pricing_summary", "j3_keyword_search", "dedup_minhash_lsh",
-             "ann_cosine_topk", "quality_scores", "domain_stats"]
+             "ann_cosine_topk", "quality_scores", "domain_stats",
+             "bm25_ranked_search", "j3_indexed_search"]
 )
 def test_query_matches_oracle_sample(spark, name):
-    """Spot-check the oracle gate in-suite (full sweep: tools/check_oracle.py)."""
+    """Spot-check the oracle gate in-suite (full sweep: tools/check_oracle.py).
+
+    The DuckDB oracle is BM25's independent reference. The bm25 case
+    starts from a stale store stamp, so the call must rebuild the store
+    as a segment store."""
     import duckdb
 
     d = sf_dir("0.001")
+    store = os.path.join(entry_mod._BM25_INDEX, os.path.basename(d))
+    if name == "bm25_ranked_search":
+        os.makedirs(store, exist_ok=True)
+        with open(os.path.join(store, "_FPR"), "w") as f:
+            f.write("v2 stale\n")
     con = duckdb.connect()
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:
@@ -57,3 +67,5 @@ def test_query_matches_oracle_sample(spark, name):
     from tools.check_oracle import canon
 
     assert canon(sdf.toPandas()) == canon(duck_pdf)
+    if name == "bm25_ranked_search":
+        assert os.path.exists(os.path.join(store, "SEGMENTS"))

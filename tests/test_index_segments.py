@@ -12,12 +12,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from studiocr_spark.operators.index import (
+    _write_segment_dir,
     build_postings,
     compact_postings,
     list_segments,
     read_postings,
     vacuum_segments,
-    write_postings,
     write_postings_segment,
 )
 
@@ -50,15 +50,15 @@ def test_incremental_segments_equal_full_rebuild(spark, extracted, tmp_path):
         write_postings_segment(delta, root, term_buckets=4)
     assert len(list_segments(root)) == 2
 
-    write_postings(build_postings(ocr_blocks), full, term_buckets=4)
-    expected = _canon(spark.read.parquet(full))
+    write_postings_segment(build_postings(ocr_blocks), full, term_buckets=4)
+    expected = _canon(read_postings(spark, full))
     assert _canon(read_postings(spark, root)) == expected
 
     # search parity over the segmented index
     from studiocr_spark.operators.search import bm25_search
 
     seg_hits = bm25_search(read_postings(spark, root), "cat dog")
-    full_hits = bm25_search(spark.read.parquet(full), "cat dog")
+    full_hits = bm25_search(read_postings(spark, full), "cat dog")
     assert sorted((r.url, r.score) for r in seg_hits.collect()) == sorted(
         (r.url, r.score) for r in full_hits.collect()
     )
@@ -75,16 +75,6 @@ def test_incremental_segments_equal_full_rebuild(spark, extracted, tmp_path):
     assert _canon(read_postings(spark, root)) == expected
 
 
-def test_read_postings_falls_back_to_flat_dir(spark, extracted, tmp_path):
-    """A pre-segmentation index (plain write_postings dir, no SEGMENTS
-    manifest) must keep reading as a one-segment store."""
-    _, _, ocr_blocks = extracted
-    flat = str(tmp_path / "postings_flat")
-    write_postings(build_postings(ocr_blocks), flat, term_buckets=4)
-    assert list_segments(flat) == []
-    assert read_postings(spark, flat).count() == ocr_blocks.count()
-
-
 def test_unpublished_segment_is_invisible(spark, extracted, tmp_path):
     """Write-audit-publish: a segment dir written but not yet listed in
     SEGMENTS (crash before publish) must not appear to readers, and
@@ -94,7 +84,7 @@ def test_unpublished_segment_is_invisible(spark, extracted, tmp_path):
     p = build_postings(ocr_blocks)
     write_postings_segment(p.limit(10), root, term_buckets=2)
     # simulate a crashed writer: data written, publish never happened
-    write_postings(p.limit(5), f"{root}/seg_orphan", term_buckets=2)
+    _write_segment_dir(p.limit(5), f"{root}/seg_orphan", term_buckets=2)
     assert read_postings(spark, root).count() == 10
     assert vacuum_segments(root, min_age_seconds=0) == 1
     assert read_postings(spark, root).count() == 10

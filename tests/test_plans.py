@@ -195,6 +195,18 @@ def test_bm25_never_hints_doc_length_broadcast(spark, extracted):
     assert all("broadcast" not in line for line in url_joins), url_joins
     # term-keyed stats joins keep their hints
     assert "strategy=broadcast" in optimized
+    # on bare postings the query terms filter BELOW the in-plan tf
+    # aggregate, so it aggregates only the query's terms
+    lines = optimized.splitlines()
+    tf_agg = next(
+        i for i, line in enumerate(lines)
+        if re.search(r"Aggregate \[(term#\d+, url|url#\d+, term)#\d+\]", line)
+    )
+    term_filters = [
+        i for i, line in enumerate(lines)
+        if re.search(r" IN \((cat|dog),(cat|dog)\)", line)
+    ]
+    assert term_filters and min(term_filters) > tf_agg, optimized
 
 
 def test_bm25_materialized_plan_is_narrow(spark, extracted, tmp_path):
@@ -207,13 +219,13 @@ def test_bm25_materialized_plan_is_narrow(spark, extracted, tmp_path):
         build_postings,
         read_doc_lens,
         read_term_stats,
-        write_postings,
+        write_postings_segment,
     )
     from studiocr_spark.operators.search import bm25_search
 
     _, _, ocr_blocks = extracted
     root = str(tmp_path / "bm25_store")
-    write_postings(build_postings(ocr_blocks), root, term_buckets=2)
+    write_postings_segment(build_postings(ocr_blocks), root, term_buckets=2)
     df = bm25_search(
         None, "cat dog",
         term_stats=read_term_stats(spark, root),
@@ -233,7 +245,7 @@ def test_bm25_materialized_plan_is_narrow(spark, extracted, tmp_path):
     ]
     assert url_joins, optimized
     assert all("broadcast" not in line for line in url_joins), url_joins
-    # and the two serving shapes rank identically
+    # the store's aux tables rank like tables derived in-plan
     adhoc = bm25_search(build_postings(ocr_blocks), "cat dog")
     assert sorted(map(tuple, df.collect())) == sorted(
         map(tuple, adhoc.collect())

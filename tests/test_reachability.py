@@ -1,13 +1,16 @@
 """Reachability guard: no package code that only tests reach.
 
-Every public top-level function or class in ``studiocr_spark/`` must be
-referenced from production code, or be listed in ``ALLOWED`` with its
-reason. Production is the package itself, ``jobs/``, ``tools/``,
-``perfbench/``, ``__spark_entry__.py`` and ``bench.py``; ``tests/`` does
-not count. A reference is an AST name, attribute or import alias, so
-docstrings and comments never count, and neither does a definition's
-use of its own name (recursion). Names match by their bare spelling: a
-dead function that shares its name with a live one passes, so the guard
+Every public top-level function, class or constant in ``studiocr_spark/``
+must be referenced from production code, or be listed in ``ALLOWED``
+with its reason. Production is the package itself, ``jobs/``,
+``tools/``, ``perfbench/``, ``__spark_entry__.py`` and ``bench.py``;
+``tests/`` does not count. For a function or class a reference is an
+AST name, attribute or import alias, so docstrings and comments never
+count, and neither does a definition's use of its own name (recursion).
+A constant (an ``Assign``/``AnnAssign`` target) is reached only by a
+name or attribute that loads it, so neither its own assignment nor a
+bare import counts. Names match by their bare spelling: a dead
+definition that shares its name with a live one passes, so the guard
 is a floor, not a proof.
 """
 
@@ -40,18 +43,6 @@ ALLOWED = {
     "operators/lifecycle.py::rename_document": "SURVEY §2 D2",
     "operators/lifecycle.py::renumber_pages": "SURVEY §2 W1/W2, D3",
     "operators/lifecycle.py::resolve_unique_names": "SURVEY §2 J6",
-    "operators/multimodal.py::extract_features": (
-        "test-only, next direction-6 candidate"
-    ),
-    "operators/multimodal.py::media_metadata": (
-        "test-only, next direction-6 candidate"
-    ),
-    "operators/multimodal.py::resize_images": (
-        "test-only, next direction-6 candidate"
-    ),
-    "operators/multimodal.py::sample_frames": (
-        "test-only, next direction-6 candidate"
-    ),
     "operators/search.py::first_page_per_doc": "SURVEY §2 S8/W6",
     "operators/search.py::matched_page_navigation": "SURVEY §2 W4/W5",
     "operators/similarity.py::hyperplane_signature": (
@@ -83,6 +74,41 @@ def _public_defs() -> dict[str, str]:
     return out
 
 
+def _public_constants() -> dict[str, str]:
+    """"<module>::<NAME>" -> NAME for every public module-level
+    assignment target."""
+    out = {}
+    for path in sorted(PKG.rglob("*.py")):
+        mod = path.relative_to(PKG).as_posix()
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign):
+                targets = [node.target]
+            else:
+                continue
+            for target in targets:
+                for name in ast.walk(target):
+                    if isinstance(name, ast.Name) and not name.id.startswith("_"):
+                        out[f"{mod}::{name.id}"] = name.id
+    return out
+
+
+def _loaded() -> set[str]:
+    """Bare names that production loads (Load-context names and
+    attributes)."""
+    loads: set[str] = set()
+    for path in _production_files():
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                loads.add(node.id)
+            elif isinstance(node, ast.Attribute) and isinstance(
+                node.ctx, ast.Load
+            ):
+                loads.add(node.attr)
+    return loads
+
+
 def _referenced() -> set[str]:
     """Bare names referenced from production. Inside a top-level package
     definition its own name is skipped, so recursion does not count."""
@@ -106,8 +132,10 @@ def _referenced() -> set[str]:
 
 
 def _unreached() -> set[str]:
-    refs = _referenced()
-    return {key for key, name in _public_defs().items() if name not in refs}
+    refs, loads = _referenced(), _loaded()
+    return {
+        key for key, name in _public_defs().items() if name not in refs
+    } | {key for key, name in _public_constants().items() if name not in loads}
 
 
 def test_every_public_definition_is_reached_or_allowlisted():
@@ -119,7 +147,7 @@ def test_every_public_definition_is_reached_or_allowlisted():
 
 
 def test_allowlist_is_current():
-    defs = _public_defs()
+    defs = _public_defs() | _public_constants()
     unreached = _unreached()
     gone = sorted(k for k in ALLOWED if k not in defs)
     reached = sorted(k for k in ALLOWED if k in defs and k not in unreached)

@@ -94,10 +94,10 @@ def test_in_doc_search_matches_oracle(extracted, corpus, query, case_sensitive):
 
 def test_duplicate_per_word_quirk(spark):
     """A block matching k query words appears k times (DocWindow.py:369-371)."""
-    from studiocr_spark.schemas import OCR_BLOCKS_SCHEMA
-
     blocks = spark.createDataFrame(
-        [("u", 0, 0, 1, 1, 5, 5, 90, "catalog dogma")], OCR_BLOCKS_SCHEMA
+        [("u", 0, 0, 1, 1, 5, 5, 90, "catalog dogma")],
+        "url string, page_no int, block_no int, left int, top int, "
+        "width int, height int, conf int, text string",
     )
     rows = in_doc_search(blocks, "u", "cat dog").collect()
     assert len(rows) == 1

@@ -522,11 +522,11 @@ def j7_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- training-data ops ------------------------------------------------------
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """hash_first: the gate runs the 100 TB shape (digest-only shuffle);
-    the oracle groups by full text — identical result set."""
+    """The gate runs the 100 TB shape (digest-only shuffle); the oracle
+    groups by full text — identical result set."""
     from studiocr_spark.operators.dedup import exact_duplicates
 
-    return exact_duplicates(_t(spark, sf_dir, "documents"), hash_first=True)
+    return exact_duplicates(_t(spark, sf_dir, "documents"))
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -773,7 +773,7 @@ def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "embedding_near_dups", sf_dir, lambda: _corpus_fp(emb),
     )
-    truth = exact_near_dup_pairs(emb, threshold=0.35, vectorized=False)
+    truth = exact_near_dup_pairs(emb, threshold=0.35)
     # lazy: aggregate both sides, cross-join the two 1-row frames
     # (count the truth-intersection rather than trusting precision == 1)
     inter = found.join(

@@ -119,10 +119,8 @@ def main(argv: list[str] | None = None) -> int:
         # ``completed`` is every manifest bucket, so buckets an earlier
         # run completed under a larger --n-buckets are indexed too.
         covered = segment_coverage(index_root)
-        if covered is None and list_segments(index_root):
-            to_index: set[int] = set()  # an ALL segment covers everything
-        else:
-            to_index = completed - (covered or set())
+        # None: a live ALL segment covers everything
+        to_index = set() if covered is None else completed - covered
         if to_index:
             blocks = spark.read.parquet(f"{args.output}/ocr_blocks").filter(
                 F.col("bucket").isin(sorted(to_index))

@@ -25,7 +25,7 @@ Determinism: at most one right row per (key, time) must survive into
 the union — otherwise "the" last row at a timestamp is partition-order
 dependent. ``dedup_right`` (round 4) makes the API foolproof: the
 default ``"max_by"`` keeps, per (key, time), the right row maximizing
-``tie_break`` (first right_cols column unless given) — callers that
+its payload, first right_cols column first — callers that
 already pre-aggregate pay one extra no-op-cheap partial agg;
 ``dedup_right=None`` opts out for inputs unique by construction.
 """
@@ -44,7 +44,6 @@ def asof_join(
     right_cols: list[str] | None = None,
     prefix: str = "asof_",
     dedup_right: str | None = "max_by",
-    tie_break: str | None = None,
 ) -> DataFrame:
     """Left as-of-backward join (inclusive): every ``left`` row gains
     ``prefix + c`` for each ``c`` in ``right_cols``, taken from the
@@ -52,11 +51,10 @@ def asof_join(
     left[on]``; nulls when no such row exists.
 
     ``dedup_right="max_by"`` (default) first collapses right rows that
-    tie on (``by``, ``on``) to the one maximizing (``tie_break``, then
-    the remaining payload columns — a total order, so the carry is
-    deterministic regardless of partition order; fully identical rows
-    are interchangeable by definition). ``tie_break`` defaults to the
-    first right_cols column. Payload columns must be orderable types
+    tie on (``by``, ``on``) to the one maximizing its payload struct in
+    ``right_cols`` order — a total order, so the carry is deterministic
+    regardless of partition order; fully identical rows are
+    interchangeable by definition. Payload columns must be orderable types
     for this mode (no maps); pass ``dedup_right=None`` to skip the
     pre-aggregate when the right side is unique by construction."""
     if right_cols is None:
@@ -80,30 +78,20 @@ def asof_join(
                 "or dedup_right=None (a payload-free right side has "
                 "nothing to carry, and nothing to tie-break on)"
             )
-        tb = tie_break if tie_break is not None else right_cols[0]
         # one whole-row struct per (key, ts): max_by on a TOTAL order —
         # partial-agg-friendly (map-side combine collapses ties before
-        # the (key, ts) exchange). The ordering struct leads with the
-        # tie-break, then every remaining payload column (round-5
-        # ADVICE fix: ordering by tie_break alone left rows that ALSO
-        # tie on it resolved partition-order-dependently; the full
-        # struct is a total order over the carried payload, so the
-        # winner is unique whenever the payloads differ at all). The
-        # ordering values sit inside a struct because max_by IGNORES
-        # rows whose ordering value is NULL, which would silently drop
-        # a (key, ts) whose only row carries a null tie-break — a
-        # struct with null fields is never null itself (null fields
-        # sort lowest).
-        order_cols = [tb] + [c for c in right_cols if c != tb]
-        picked = (
-            right.groupBy(by, on)
-            .agg(
-                F.max_by(
-                    F.struct(*[F.col(c) for c in right_cols]),
-                    F.struct(*[F.col(c) for c in order_cols]),
-                ).alias("_row")
-            )
-        )
+        # the (key, ts) exchange). The ordering struct is the whole
+        # payload, first right column leading (round-5 ADVICE fix:
+        # ordering by one column alone left rows that ALSO tie on it
+        # resolved partition-order-dependently; the full struct is a
+        # total order over the carried payload, so the winner is unique
+        # whenever the payloads differ at all). The ordering values sit
+        # inside a struct because max_by IGNORES rows whose ordering
+        # value is NULL, which would silently drop a (key, ts) whose
+        # only row carries a null first column — a struct with null
+        # fields is never null itself (null fields sort lowest).
+        row = F.struct(*[F.col(c) for c in right_cols])
+        picked = right.groupBy(by, on).agg(F.max_by(row, row).alias("_row"))
         right = picked.select(
             by, on, *[F.col("_row").getField(c).alias(c) for c in right_cols]
         )
@@ -152,7 +140,6 @@ def range_join(
     start_ts: str = "start",
     end_ts: str = "end",
     bucket_seconds: int = 3600,
-    by: str | None = None,
     salt_buckets: int = 8,
 ) -> DataFrame:
     """Point-in-interval join (half-open: start <= point < end) without
@@ -162,34 +149,29 @@ def range_join(
     a cartesian — O(|points| x |intervals|). The scale shape here is
     interval bucketing: each interval explodes into the fixed-width
     time buckets it covers, each point lives in exactly ONE bucket, and
-    candidates meet on a bucket equi-join (+ optional ``by`` key), then
-    the exact range predicate filters. Because a point has one bucket,
-    every qualifying (point, interval) pair meets exactly once — no
-    dedup pass. ``bucket_seconds`` trades shuffle fan-out (intervals
-    emit span/bucket_seconds rows) against candidate selectivity; size
-    it near the median interval length.
+    candidates meet on a bucket equi-join, then the exact range
+    predicate filters. Because a point has one bucket, every qualifying
+    (point, interval) pair meets exactly once — no dedup pass.
+    ``bucket_seconds`` trades shuffle fan-out (intervals emit
+    span/bucket_seconds rows) against candidate selectivity; size it
+    near the median interval length.
 
-    Skew: with ``by=None`` the equi-join key is the time bucket alone,
-    so a bursty stream puts a whole burst (plus every interval
-    overlapping it) into ONE reducer. The keyless path therefore salts:
-    each point hashes its full row into one of ``salt_buckets`` salts,
-    each interval-bucket row replicates across ALL salts, and the join
-    key becomes (bucket, salt) — a burst spreads over ``salt_buckets``
-    reducers at the cost of ``salt_buckets``× interval fan-out (cheap:
-    intervals are the small side of a point-in-interval join). Keyed
-    joins (``by`` set) skip the salt; AQE skew-split covers residual
-    per-key skew there.
+    Skew: the equi-join key is the time bucket alone, so a bursty stream
+    would put a whole burst (plus every interval overlapping it) into
+    ONE reducer. The join therefore salts: each point hashes its full
+    row into one of ``salt_buckets`` salts, each interval-bucket row
+    replicates across ALL salts, and the join key becomes (bucket,
+    salt) — a burst spreads over ``salt_buckets`` reducers at the cost
+    of ``salt_buckets``× interval fan-out (cheap: intervals are the
+    small side of a point-in-interval join). ``salt_buckets=1`` joins on
+    the bucket alone.
 
     Output: all point columns plus every interval column (interval
     columns keep their names; disambiguate before calling if they
     clash).
     """
-    salted = by is None and salt_buckets > 1
-    keys = (
-        ["_bucket"]
-        + ([by] if by else [])
-        + (["_salt"] if salted else [])
-    )
+    salted = salt_buckets > 1
+    keys = ["_bucket", "_salt"] if salted else ["_bucket"]
 
     def epoch(c: str):
         # TIMESTAMP_NTZ has no direct long cast; unix_timestamp is
@@ -230,5 +212,5 @@ def range_join(
             (F.col(point_ts) >= F.col(start_ts))
             & (F.col(point_ts) < F.col(end_ts))
         )
-        .drop(*[k for k in ("_bucket", "_salt") if k in keys])
+        .drop(*keys)
     )

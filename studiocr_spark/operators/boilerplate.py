@@ -156,31 +156,14 @@ MAIN_TEXT_SCHEMA = T.StructType(
         T.StructField("main_text", T.StringType(), True),
         T.StructField("n_blocks", T.IntegerType(), True),
         T.StructField("n_content_blocks", T.IntegerType(), True),
-        T.StructField(
-            "blocks",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("tag", T.StringType()),
-                        T.StructField("text", T.StringType()),
-                        T.StructField("n_words", T.IntegerType()),
-                        T.StructField("link_density", T.DoubleType()),
-                        T.StructField("text_density", T.DoubleType()),
-                        T.StructField("is_content", T.BooleanType()),
-                    ]
-                )
-            ),
-            True,
-        ),
     ]
 )
 
 
 def strip_boilerplate(
-    df: DataFrame, url_col: str = "url", html_col: str = "html_text",
-    keep_blocks: bool = False,
+    df: DataFrame, url_col: str = "url", html_col: str = "html_text"
 ) -> DataFrame:
-    """(url, main_text, n_blocks, n_content_blocks[, blocks]).
+    """(url, main_text, n_blocks, n_content_blocks).
 
     ``html_col`` holds HTML as a string column (decode binary payloads
     upstream). One parse per row, Arrow-batched.
@@ -191,29 +174,18 @@ def strip_boilerplate(
             rows = []
             for url, html in zip(pdf[url_col], pdf[html_col]):
                 if html is None:
-                    rows.append((url, None, None, None, None))
+                    rows.append((url, None, None, None))
                     continue
                 blocks = segment_blocks(str(html))
                 keep = classify_blocks(blocks)
                 main = "\n".join(
                     b["text"] for b, k in zip(blocks, keep) if k
                 )
-                detail = (
-                    [
-                        {**b, "is_content": k}
-                        for b, k in zip(blocks, keep)
-                    ]
-                    if keep_blocks
-                    else None
-                )
-                rows.append(
-                    (url, main, len(blocks), sum(keep), detail)
-                )
+                rows.append((url, main, len(blocks), sum(keep)))
             yield pd.DataFrame(
                 rows, columns=MAIN_TEXT_SCHEMA.fieldNames()
             )
 
-    out = df.select(
+    return df.select(
         df[url_col].alias("url"), df[html_col].alias(html_col)
     ).mapInPandas(run, MAIN_TEXT_SCHEMA)
-    return out if keep_blocks else out.drop("blocks")

@@ -37,7 +37,6 @@ def contamination_pairs(
     min_shared: int = 2,
     id_col: str = "doc_id",
     eval_id_col: str = "eval_id",
-    broadcast_eval: bool | None = None,
     max_broadcast_eval_docs: int = 50_000,
 ) -> DataFrame:
     """(doc_id, eval_id, shared_ngrams): training docs sharing at least
@@ -48,13 +47,12 @@ def contamination_pairs(
     overlapping n-grams — a doc repeating one benchmark phrase ten
     times still counts it once.
 
-    ``broadcast_eval`` guards the scale precondition: ``None`` (default)
-    counts ``eval_docs`` (a cheap count on the benchmark table — no
-    shingling) and broadcasts only when it has at most
-    ``max_broadcast_eval_docs`` rows (50k eval docs x a few hundred
-    n-grams each ~= low-hundreds-MB broadcast, the practical ceiling);
-    past that it falls back to a plain shuffle join instead of
-    OOM-ing the driver/executors. ``True``/``False`` force either path.
+    The broadcast guards the scale precondition: it counts
+    ``eval_docs`` (a cheap count on the benchmark table — no shingling)
+    and broadcasts only when it has at most ``max_broadcast_eval_docs``
+    rows (50k eval docs x a few hundred n-grams each ~= low-hundreds-MB
+    broadcast, the practical ceiling); past that it falls back to a
+    plain shuffle join instead of OOM-ing the driver/executors.
     """
     d = shingle_table(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col)),
@@ -68,10 +66,10 @@ def contamination_pairs(
         text_col,
         n,
     ).select(F.col("doc_id").alias(eval_id_col), "shingle")
-    if broadcast_eval is None:
-        broadcast_eval = eval_docs.count() <= max_broadcast_eval_docs
+    if eval_docs.count() <= max_broadcast_eval_docs:
+        e = F.broadcast(e)
     return (
-        d.join(F.broadcast(e) if broadcast_eval else e, "shingle")
+        d.join(e, "shingle")
         .groupBy(id_col, eval_id_col)
         .agg(F.count("*").cast("long").alias("shared_ngrams"))
         .filter(F.col("shared_ngrams") >= min_shared)
@@ -85,12 +83,10 @@ def decontaminate(
     n: int = 3,
     min_shared: int = 2,
     id_col: str = "doc_id",
-    broadcast_eval: bool | None = None,
 ) -> DataFrame:
     """``docs`` minus every contaminated document (left-anti against the
     flagged ids). Keeps all caller columns."""
     flagged = contamination_pairs(
-        docs, eval_docs, text_col, n, min_shared, id_col=id_col,
-        broadcast_eval=broadcast_eval,
+        docs, eval_docs, text_col, n, min_shared, id_col=id_col
     ).select(id_col).distinct()
     return docs.join(flagged, id_col, "left_anti")

@@ -6,7 +6,7 @@ per-document passes (shingling, the fused MinHash signature + shingle
 pass, SimHash) are Arrow pandas UDFs whose outputs match the SQL
 expression forms the oracle runs:
 
-- exact: content-identity grouping (keep the smallest doc_id)
+- exact: md5-digest grouping (keep the smallest doc_id)
 - MinHash + LSH: word-shingle -> per-seed min-digest signature -> banded
   bucket join -> exact-Jaccard verification of candidates
 - SimHash: per-bit majority over token digests -> near-dup by Hamming
@@ -30,44 +30,23 @@ from pyspark.sql import functions as F
 from .textstats import round6, words_of
 
 
-def exact_duplicates(
-    docs: DataFrame, text_col: str = "text", hash_first: bool = False
-) -> DataFrame:
+def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, canonical_id, is_duplicate): group by exact content.
 
-    Hash-groupBy on the text; canonical = min doc_id of the group.
-
-    ``hash_first`` is the 100 TB shape: the groupBy and join shuffle
+    Canonical = min doc_id of the group. The groupBy and join shuffle
     32-byte md5 digests instead of multi-KB documents (~100x less
-    shuffle for web pages). Duplicate-by-digest stands in for
-    duplicate-by-text — at md5 strength the corpus-wide collision odds
-    are ~2^-64 even at 10^10 documents, which is how production exact
-    dedup (e.g. CCNet-style pipelines) runs; a paranoid deployment can
-    re-verify inside digest groups with the near-dup verifier.
+    shuffle for web pages), the 100 TB shape. Duplicate-by-digest stands
+    in for duplicate-by-text — at md5 strength the corpus-wide collision
+    odds are ~2^-64 even at 10^10 documents, which is how production
+    exact dedup (e.g. CCNet-style pipelines) runs; a paranoid deployment
+    can re-verify inside digest groups with the near-dup verifier.
     """
-    if hash_first:
-        hashed = docs.select("doc_id", F.md5(F.col(text_col)).alias("_h"))
-        canon = hashed.groupBy("_h").agg(
-            F.min("doc_id").alias("canonical_id")
-        )
-        return (
-            hashed.join(canon, "_h")
-            .select(
-                "doc_id",
-                "canonical_id",
-                (F.col("doc_id") != F.col("canonical_id")).alias(
-                    "is_duplicate"
-                ),
-            )
-        )
-    canon = docs.groupBy(text_col).agg(F.min("doc_id").alias("canonical_id"))
-    return (
-        docs.join(canon, text_col)
-        .select(
-            "doc_id",
-            "canonical_id",
-            (F.col("doc_id") != F.col("canonical_id")).alias("is_duplicate"),
-        )
+    hashed = docs.select("doc_id", F.md5(F.col(text_col)).alias("_h"))
+    canon = hashed.groupBy("_h").agg(F.min("doc_id").alias("canonical_id"))
+    return hashed.join(canon, "_h").select(
+        "doc_id",
+        "canonical_id",
+        (F.col("doc_id") != F.col("canonical_id")).alias("is_duplicate"),
     )
 
 
@@ -659,7 +638,6 @@ def connected_components(
     max_iter: int = 20,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    strict: bool = True,
 ) -> DataFrame:
     """(doc_id, cluster_id): connected components over near-dup pairs.
 
@@ -677,9 +655,7 @@ def connected_components(
 
     Convergence is CHECKED (a round that changes nothing ends the
     loop); if ``max_iter`` rounds still changed labels the result would
-    be silently wrong, so ``strict=True`` (default) raises instead —
-    ``strict=False`` callers get the unconverged labels and must treat
-    them as an under-merge.
+    be silently wrong (an under-merge), so it raises instead.
 
     Scale shape: each round is two joins + one min-aggregate on
     key-partitioned id tables — the standard large-graph CC under Spark
@@ -770,12 +746,12 @@ def connected_components(
             converged = True
             break
     edges.unpersist()
-    if not converged and strict:
+    if not converged:
         raise RuntimeError(
             f"connected_components: labels still changing after "
             f"max_iter={max_iter} rounds — result would under-merge "
             f"clusters. Raise max_iter (each round doubles reachable "
-            f"distance) or pass strict=False to accept partial labels."
+            f"distance)."
         )
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")

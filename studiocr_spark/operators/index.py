@@ -291,21 +291,19 @@ def _write_coverage(root: str, seg: str, buckets: list[int] | str) -> None:
 def segment_coverage(root: str) -> set[int] | None:
     """Union of extract buckets covered by the LIVE segments.
 
-    ``None`` means total coverage is unknowable-but-assumed-complete: at
-    least one live segment is marked ALL (full build / compaction of an
-    ALL store) or predates coverage tracking. Callers diff the
-    completion manifest against this to find buckets that were
-    completed but never indexed (the round-4 ADVICE gap: a crash
-    between manifest append and segment publish, or a run without
-    --build-index, used to leave a permanent hole)."""
+    ``None`` means every bucket is covered: at least one live segment is
+    marked ALL (full build / compaction of an ALL store). Every writer
+    records coverage before it publishes, so a live segment without its
+    coverage file raises ``FileNotFoundError`` instead of passing for
+    ALL. Callers diff the completion manifest against this to find
+    buckets that were completed but never indexed (the round-4 ADVICE
+    gap: a crash between manifest append and segment publish, or a run
+    without --build-index, used to leave a permanent hole)."""
     import os
 
     covered: set[int] = set()
     for seg in list_segments(root):
-        path = os.path.join(root, seg, COVERAGE_FILE)
-        if not os.path.exists(path):
-            return None
-        with open(path) as f:
+        with open(os.path.join(root, seg, COVERAGE_FILE)) as f:
             lines = [ln.strip() for ln in f if ln.strip()]
         if lines and lines[0] == "ALL":
             return None

@@ -68,7 +68,6 @@ def stratified_sample(
 def pack_sequences(
     docs: DataFrame,
     budget: int,
-    token_col: str | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
     n_buckets: int = 8,
@@ -84,19 +83,15 @@ def pack_sequences(
     current doc — so a shard can overrun the budget only by its final
     document, and a doc larger than the budget gets a shard to itself.
 
-    ``token_col`` defaults to the whitespace token count of
-    ``text_col``. Fully deterministic; one shuffle (the per-bucket
-    window sort).
+    A document's tokens are the whitespace tokens of ``text_col``.
+    Fully deterministic; one shuffle (the per-bucket window sort).
     """
-    if token_col:
-        tokens = F.col(token_col)
-    else:
-        # words_of semantics (textstats.py): filtered split, so empty/
-        # whitespace-only docs count 0 tokens, not 1 phantom — a bare
-        # split counts a leading-tab doc one token high
-        from .textstats import words_of
+    # words_of semantics (textstats.py): filtered split, so empty/
+    # whitespace-only docs count 0 tokens, not 1 phantom — a bare split
+    # counts a leading-tab doc one token high
+    from .textstats import words_of
 
-        tokens = F.size(words_of(F.col(text_col)))
+    tokens = F.size(words_of(F.col(text_col)))
     bucket = (
         F.conv(
             F.substring(

@@ -11,8 +11,8 @@
 
 Scale notes: brute force is O(Q x N) — fine when the query side is small
 and broadcast. For corpus-vs-corpus at 10^9 vectors use the LSH variant
-(bucket join) or an IVF partitioner (coarse k-means assignment), both of
-which shuffle on uniform keys.
+(bucket join) or the IVF partitioner (nearest hash-seeded centroid),
+both of which shuffle on uniform keys.
 """
 
 from __future__ import annotations
@@ -47,7 +47,8 @@ def cosine_sim(a: Column, b: Column) -> Column:
     """Sequential-fold cosine: bit-stable order, DuckDB-oracle parity.
 
     Interpreted per element (HOFs are CodegenFallback) — use ONLY where
-    hash-parity with an oracle matters (brute_force_topk). Bulk scoring
+    hash-parity with an oracle matters (brute_force_topk,
+    exact_near_dup_pairs). Bulk scoring
     goes through :func:`vectorized_cosine` (~40x faster, measured)."""
     return _dot(a, b) / (_norm(a) * _norm(b))
 
@@ -375,97 +376,19 @@ def seed_centroids(
     )
 
 
-def kmeans_refine(
-    corpus: DataFrame,
-    n_centroids: int,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(centroid_id, cvec): Lloyd-refined coarse quantizer for IVF.
-
-    Init = :func:`seed_centroids` (deterministic hash-ordered sample).
-    Each iteration: assign every vector to its nearest centroid
-    (broadcast centroids + Arrow batch cosine + window argmin), then
-    recompute each cell's mean vector (one groupBy). Centroids are
-    collected per iteration (n_centroids x dim floats — trivially
-    driver-sized; iterative training materializes per step exactly like
-    MLlib's k-means, rather than stacking ``iters`` crossJoins into one
-    lazy plan). Empty cells keep their previous centroid. Mean summation
-    order makes ~1e-16 nondeterminism — irrelevant to cell quality.
-    """
-    import numpy as np
-    from pyspark.sql import Window
-
-    spark = corpus.sparkSession
-    cents_rows = [
-        (int(r[0]), list(map(float, r[1])))
-        for r in seed_centroids(
-            corpus, n_centroids, id_col, vec_col
-        ).collect()
-    ]
-    for _ in range(iters):
-        cents = spark.createDataFrame(
-            cents_rows, "centroid_id long, cvec array<double>"
-        )
-        scored = corpus.select(
-            F.col(id_col).alias("vid"), F.col(vec_col).alias("v")
-        ).crossJoin(F.broadcast(cents)).select(
-            "vid",
-            "v",
-            "centroid_id",
-            vectorized_cosine(F.col("v"), F.col("cvec")).alias("csim"),
-        )
-        w = Window.partitionBy("vid").orderBy(
-            F.desc("csim"), F.asc("centroid_id")
-        )
-        assigned = scored.withColumn(
-            "r", F.row_number().over(w)
-        ).filter("r = 1")
-        means = (
-            assigned.groupBy("centroid_id")
-            .applyInPandas(
-                lambda pdf: pd.DataFrame(
-                    {
-                        "centroid_id": [int(pdf["centroid_id"].iloc[0])],
-                        "cvec": [
-                            list(
-                                map(
-                                    float,
-                                    np.stack(pdf["v"].values).mean(axis=0),
-                                )
-                            )
-                        ],
-                    }
-                ),
-                "centroid_id long, cvec array<double>",
-            )
-            .collect()
-        )
-        moved = {r.centroid_id: list(r.cvec) for r in means}
-        cents_rows = [
-            (cid, moved.get(cid, vec)) for cid, vec in cents_rows
-        ]
-    return spark.createDataFrame(
-        cents_rows, "centroid_id long, cvec array<double>"
-    )
-
-
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
     n_centroids: int = 16,
     n_probe: int = 4,
-    kmeans_iters: int = 0,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-style ANN: coarse quantize -> probe nearest cells -> re-rank.
 
     Centroids are a deterministic hash-ordered sample
-    (:func:`seed_centroids`); ``kmeans_iters`` > 0 Lloyd-refines them first
-    (:func:`kmeans_refine` — moves the centroids, not the plan shape).
+    (:func:`seed_centroids`), used as drawn: no Lloyd refinement.
     Every corpus vector is assigned to its nearest centroid (broadcast
     centroid join); each query probes its ``n_probe`` nearest cells and
     exact-cosine re-ranks within them.
@@ -476,14 +399,7 @@ def ivf_topk(
     """
     from pyspark.sql import Window
 
-    if kmeans_iters > 0:
-        cents = F.broadcast(
-            kmeans_refine(
-                corpus, n_centroids, kmeans_iters, id_col, vec_col
-            )
-        )
-    else:
-        cents = seed_centroids(corpus, n_centroids, id_col, vec_col)
+    cents = seed_centroids(corpus, n_centroids, id_col, vec_col)
 
     def assign(df: DataFrame, ident: str, vec: str, keep: int) -> DataFrame:
         scored = df.crossJoin(F.broadcast(cents)).select(
@@ -604,20 +520,15 @@ def exact_near_dup_pairs(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: bool = True,
 ) -> DataFrame:
     """(vec_a, vec_b, cosine): EXACT all-pairs ground truth for near-dup
     recall audits. O(N^2) — audit/test scale only; the production path is
     ``embedding_near_dups`` (LSH-blocked).
 
-    ``vectorized=True`` (default) scores with :func:`vectorized_cosine`
-    (Arrow batch) — right for pytest audits where last-ulp divergence at
-    the threshold boundary is noise. ``vectorized=False`` uses the
-    sequential fold :func:`cosine_sim`, which keeps bit parity with
-    DuckDB's sequential ``list_cosine_similarity(DOUBLE[])`` — required
-    for the hash-compared ``embedding_near_dups`` gate entry, where one
-    boundary flip would shift ``n_true``."""
-    cos = vectorized_cosine if vectorized else cosine_sim
+    Scores with the sequential fold :func:`cosine_sim`, which keeps bit
+    parity with DuckDB's sequential ``list_cosine_similarity(DOUBLE[])``
+    — the hash-compared ``embedding_near_dups`` gate entry needs it,
+    since one threshold-boundary flip would shift ``n_true``."""
     v = vectors.select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("v")
     )
@@ -627,7 +538,7 @@ def exact_near_dup_pairs(
         .select(
             F.col("a.vid").alias("vec_a"),
             F.col("b.vid").alias("vec_b"),
-            cos(F.col("a.v"), F.col("b.v")).alias("cos_raw"),
+            cosine_sim(F.col("a.v"), F.col("b.v")).alias("cos_raw"),
         )
         .filter(F.col("cos_raw") >= threshold)
         .select("vec_a", "vec_b", round6(F.col("cos_raw")).alias("cosine"))

@@ -94,7 +94,7 @@ def url_dedup(
         F.col(id_col).alias("doc_id"),
         canonicalize_url(F.col(url_col)).alias("canonical_url"),
     )
-    labeled = exact_duplicates(canon, text_col="canonical_url", hash_first=True)
+    labeled = exact_duplicates(canon, text_col="canonical_url")
     return (
         labeled.join(canon, "doc_id")
         .select("doc_id", "canonical_url", "canonical_id", "is_duplicate")

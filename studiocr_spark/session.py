@@ -1,11 +1,12 @@
 """SparkSession factory with scale-oriented defaults.
 
-Every config here is chosen for the 100 TB target, then sized down by env
-for the local[32] sandbox:
+Every config here is chosen for the 100 TB target, then sized down for a
+local run: ``SPARK_GRAFT_CPUS`` sets the local width (default: every core
+of the host).
 
 - AQE on (runtime coalescing, skew-join splitting) — the north_rule mandates
-  explicit skew handling; AQE is the first line, salting (operators/extract)
-  the second.
+  explicit skew handling; AQE is the first line, salting
+  (``operators/skew.py``, ``asof.range_join``) the second.
 - ``spark.sql.shuffle.partitions`` ~ cores locally; on a real cluster this is
   overridden per job (2-3x total cores) and AQE coalesces down.
 - Arrow enabled everywhere: every hot Python path is a pandas UDF.

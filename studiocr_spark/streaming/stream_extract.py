@@ -17,17 +17,13 @@ from pyspark.sql import functions as F
 def windowed_event_counts(
     events_stream: DataFrame,
     window: str = "5 minutes",
-    slide: str | None = None,
     watermark: str = "10 minutes",
 ) -> DataFrame:
-    """Watermarked event-time windowed rollup (late data dropped after
-    the watermark). Returns the aggregation plan; attach any sink."""
-    win = (
-        F.window("ts", window, slide) if slide else F.window("ts", window)
-    )
+    """Watermarked event-time tumbling-window rollup (late data dropped
+    after the watermark). Returns the aggregation plan; attach any sink."""
     return (
         events_stream.withWatermark("ts", watermark)
-        .groupBy(win, "event_type")
+        .groupBy(F.window("ts", window), "event_type")
         .agg(
             F.count("*").alias("n"),
             F.sum("value").alias("total_value"),

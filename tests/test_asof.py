@@ -82,9 +82,10 @@ def test_asof_single_shuffle(spark):
 
 def test_asof_dedup_right_breaks_ties_deterministically(spark):
     """Round-4: multiple right rows at the same (key, ts) — the default
-    max_by pre-agg keeps the row maximizing tie_break, whatever
-    partition order the union saw. A 50-way repartition shake makes the
-    old partition-order dependence visible if it regresses."""
+    max_by pre-agg keeps the row maximizing the payload (first right
+    column first), whatever partition order the union saw. A 50-way
+    repartition shake makes the old partition-order dependence visible
+    if it regresses."""
     left = spark.createDataFrame(
         [(1, 20, "x")], "user_id long, ts long, tag string"
     )
@@ -94,11 +95,6 @@ def test_asof_dedup_right_breaks_ties_deterministically(spark):
     ).repartition(50)
     row = asof_join(left, dup, on="ts", by="user_id").first()
     assert (row.asof_v, row.asof_src) == (39.0, "r39")
-    # explicit tie_break column wins over the first-right-col default
-    row2 = asof_join(
-        left, dup, on="ts", by="user_id", tie_break="src"
-    ).first()
-    assert row2.asof_src == "r9"  # lexicographic max of r0..r39
     # opting out on a unique-by-construction right side is unchanged
     l2, r2 = _frames(spark)
     got = {
@@ -111,9 +107,10 @@ def test_asof_dedup_right_breaks_ties_deterministically(spark):
 
 
 def test_asof_dedup_right_total_order_on_tiebreak_ties(spark):
-    """Round-5 ADVICE fix: right rows that tie on (key, ts, tie_break)
-    too must still resolve deterministically — the max_by ordering is
-    the full payload struct (a total order), not tie_break alone."""
+    """Round-5 ADVICE fix: right rows that tie on (key, ts, first right
+    column) too must still resolve deterministically — the max_by
+    ordering is the full payload struct (a total order), not the first
+    column alone."""
     left = spark.createDataFrame(
         [(1, 20, "x")], "user_id long, ts long, tag string"
     )
@@ -174,7 +171,7 @@ def test_range_join_semantics(spark):
 
 def test_range_join_keyless_salts_bursts(spark):
     """A burst (many points at ONE timestamp) must not land on a single
-    reducer in the keyless case: the join key carries a salt derived
+    reducer: the join key carries a salt derived
     from the whole point row, intervals replicate across salts, and the
     results are identical to the unsalted join."""
     from studiocr_spark.operators.asof import range_join

@@ -77,7 +77,3 @@ def test_strip_boilerplate_operator(spark):
     assert out["u1"].n_content_blocks >= 3
     assert out["u2"].main_text is None
     assert out["u3"].n_content_blocks == 1
-    detail = strip_boilerplate(df, keep_blocks=True).filter("url = 'u1'")
-    blocks = detail.first().blocks
-    assert any(b.is_content for b in blocks)
-    assert any(not b.is_content for b in blocks)

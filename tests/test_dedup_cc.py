@@ -41,9 +41,6 @@ def test_nonconvergence_raises_not_mislabels(spark):
     )
     with pytest.raises(RuntimeError, match="max_iter"):
         connected_components(pairs, max_iter=1).collect()
-    # strict=False: partial labels allowed, caller opted in
-    loose = connected_components(pairs, max_iter=1, strict=False)
-    assert loose.count() == 13
 
 
 def test_cc_result_schema_and_internal_flag_not_leaked(spark):
@@ -52,7 +49,7 @@ def test_cc_result_schema_and_internal_flag_not_leaked(spark):
     must never leak into the operator's output, and convergence must
     still be detected by the first no-change round: this star graph
     stops changing after round 2, so round 3 must read 'no change' from
-    the carried column (strict would raise at max_iter=3 otherwise)."""
+    the carried column (it would raise at max_iter=3 otherwise)."""
     from studiocr_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(

@@ -52,23 +52,33 @@ def test_distance3_pair_spanning_both_halves_found(spark):
     assert got == expect
 
 
-def test_exact_dedup_hash_first_equals_direct(spark):
+def test_exact_dedup_digest_matches_min_id_per_text(spark):
+    """The md5-digest grouping labels every row as plain-Python grouping
+    by text does: canonical = the minimum doc_id among identical texts."""
     from studiocr_spark.operators.dedup import exact_duplicates
 
-    docs = spark.createDataFrame(
-        [(i, f"text {i % 7}") for i in range(50)],
-        "doc_id long, text string",
+    # ids scrambled against text order, so the canonical is not simply
+    # the first row of its group; "" and a 1-char text are groups too
+    rows = [((i * 37) % 101, f"text {i % 7}") for i in range(50)]
+    rows += [(500, ""), (501, ""), (502, "x")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    canon: dict[str, int] = {}
+    for doc_id, text in rows:
+        canon[text] = min(doc_id, canon.get(text, doc_id))
+    expect = sorted(
+        (doc_id, canon[text], doc_id != canon[text]) for doc_id, text in rows
     )
-    direct = exact_duplicates(docs).collect()
-    hashed = exact_duplicates(docs, hash_first=True).collect()
-    key = lambda r: (r.doc_id, r.canonical_id, r.is_duplicate)
-    assert sorted(map(key, direct)) == sorted(map(key, hashed))
+    got = sorted(
+        (r.doc_id, r.canonical_id, r.is_duplicate)
+        for r in exact_duplicates(docs).collect()
+    )
+    assert got == expect
 
 
 def test_keep_canonical_matches_exact_duplicates(spark):
     """The single-window canonical keep must select exactly the rows
     exact_duplicates labels non-duplicate, with all caller columns
-    intact — in both digest modes."""
+    intact."""
     from studiocr_spark.operators.dedup import (
         exact_duplicates,
         keep_canonical,

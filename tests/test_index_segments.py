@@ -93,9 +93,12 @@ def test_unpublished_segment_is_invisible(spark, extracted, tmp_path):
 def test_segment_coverage_and_writer_lock(spark, extracted, tmp_path):
     """Round-4: segments record their extract-bucket coverage; the
     SEGMENTS read-modify-write is single-writer via a lock file."""
+    import os
+
     import pytest
 
     from studiocr_spark.operators.index import (
+        COVERAGE_FILE,
         segment_coverage,
         segments_writer_lock,
     )
@@ -128,6 +131,11 @@ def test_segment_coverage_and_writer_lock(spark, extracted, tmp_path):
     # lock released -> publish works again
     write_postings_segment(p.limit(3), root2, term_buckets=2, buckets=[9])
     assert segment_coverage(root2) == {9}
+    # every writer records coverage before it publishes, so a live
+    # segment without it is damage, never "covers every bucket"
+    os.remove(os.path.join(root2, list_segments(root2)[0], COVERAGE_FILE))
+    with pytest.raises(FileNotFoundError):
+        segment_coverage(root2)
 
 
 def test_stale_writer_lock_from_dead_pid_is_reclaimed(tmp_path):

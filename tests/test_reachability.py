@@ -12,11 +12,23 @@ name or attribute that loads it, so neither its own assignment nor a
 bare import counts. Names match by their bare spelling: a dead
 definition that shares its name with a live one passes, so the guard
 is a floor, not a proof.
+
+The parameter check closes a blind spot of the reference check: a branch
+behind a parameter default. A parameter of a public top-level package
+function whose default is ``None``, ``True`` or ``False`` must take at
+least two different values across production call sites, or be listed
+in ``KNOBS_ALLOWED`` with its reason. An omitted argument counts as its
+default, a non-literal argument (a variable, a ``**kwargs`` spread) as a
+second value, and a call through ``from ... import f as g`` resolves to
+``f``. A function is matched by its bare name, and one never called
+from production (a dispatch-table entry, say) takes only its defaults.
+Functions in ``ALLOWED`` are skipped.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -52,6 +64,40 @@ ALLOWED = {
     "plans/explain.py::read_schemas": "plan-pin helper of test_plans",
     "sources/catalog.py::IcebergCatalog": (
         "SURVEY §2 S5/S9 Iceberg commit path, gated on the runtime jar"
+    ),
+}
+
+# "<module path>::<function>(<parameter>)" -> why an on/off parameter
+# stays although production gives it a single value
+KNOBS_ALLOWED = {
+    "session.py::build_pyfiles_zip(dest)": (
+        "deployment path: writes the zip that spark-submit --py-files ships"
+    ),
+    "operators/search.py::global_search(documents)": (
+        "the reference's empty query lists every document, "
+        "ListDocuments.py:210-212"
+    ),
+    "operators/search.py::global_search_indexed(documents)": (
+        "the reference's empty query lists every document, "
+        "ListDocuments.py:210-212"
+    ),
+    "operators/search.py::in_doc_search(case_sensitive)": (
+        "DocWindow.py:357-360, oracle-tested by test_search"
+    ),
+    "streaming/incremental.py::run_checkpointed_extract(fail_after_buckets)": (
+        "the crash-injection hook of the resume tests"
+    ),
+    "sources/decode.py::tesseract_decode(best)": (
+        "the reference's OcrEngine surface; the native libraries are "
+        "absent and get_decoder passes no options"
+    ),
+    "sources/decode.py::tesseract_decode(preprocessing)": (
+        "the reference's OcrEngine surface; the native libraries are "
+        "absent and get_decoder passes no options"
+    ),
+    "sources/decode.py::tesseract_decode(tessdata_root)": (
+        "the reference's OcrEngine surface; the native libraries are "
+        "absent and get_decoder passes no options"
     ),
 }
 
@@ -154,3 +200,112 @@ def test_allowlist_is_current():
     assert not gone, f"allowlisted but no longer defined: {gone}"
     assert not reached, f"allowlisted but now reached from production: {reached}"
     assert all(reason.strip() for reason in ALLOWED.values())
+
+
+_NON_LITERAL = object()
+
+
+@functools.cache
+def _production_calls() -> dict[str, list[ast.Call]]:
+    """Bare callee name -> every production call of it, with
+    ``from ... import f as g`` aliases resolved to ``f``."""
+    calls: dict[str, list[ast.Call]] = {}
+    for path in _production_files():
+        tree = ast.parse(path.read_text())
+        aliases = {
+            a.asname: a.name
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom)
+            for a in node.names
+            if a.asname
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                f = node.func
+                called = getattr(f, "id", None) or getattr(f, "attr", None)
+                calls.setdefault(aliases.get(called, called), []).append(node)
+    return calls
+
+
+def _switch_params() -> dict[str, tuple[str, list[str], dict]]:
+    """"<module>::<function>" -> (name, positional parameter names,
+    {on/off parameter: default}) for every public top-level function
+    with a ``None``/``True``/``False`` default, ``ALLOWED`` ones aside."""
+    out = {}
+    for path in sorted(PKG.rglob("*.py")):
+        mod = path.relative_to(PKG).as_posix()
+        for node in ast.parse(path.read_text()).body:
+            if not isinstance(node, ast.FunctionDef):
+                continue
+            key = f"{mod}::{node.name}"
+            if node.name.startswith("_") or key in ALLOWED:
+                continue
+            a = node.args
+            positional = a.posonlyargs + a.args
+            with_default = positional[len(positional) - len(a.defaults):]
+            pairs = list(zip(with_default, a.defaults))
+            pairs += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+            switches = {
+                p.arg: d.value
+                for p, d in pairs
+                if isinstance(d, ast.Constant)
+                and (d.value is None or isinstance(d.value, bool))
+            }
+            if switches:
+                out[key] = (node.name, [p.arg for p in positional], switches)
+    return out
+
+
+def _call_values(name: str, positional: list[str], params) -> dict[str, set]:
+    """Values each of ``params`` takes across production calls of
+    ``name``: a literal's value, ``_NON_LITERAL`` for anything else, the
+    default when the argument is omitted."""
+    values = {p: set() for p in params}
+    for node in _production_calls().get(name, []):
+        passed: dict[str, ast.AST | None] = {}
+        for i, arg in enumerate(node.args):
+            if isinstance(arg, ast.Starred):
+                passed.update({p: None for p in positional[i:]})
+                break
+            if i < len(positional):
+                passed[positional[i]] = arg
+        for kw in node.keywords:
+            if kw.arg is None:  # **kwargs
+                passed.update({p: None for p in params if p not in passed})
+            else:
+                passed[kw.arg] = kw.value
+        for p, default in params.items():
+            if p not in passed:
+                values[p].add(default)
+            elif isinstance(passed[p], ast.Constant):
+                values[p].add(passed[p].value)
+            else:
+                values[p].add(_NON_LITERAL)
+    return values
+
+
+def _fixed_switches() -> set[str]:
+    """"<module>::<function>(<parameter>)" for every on/off parameter
+    that production gives a single literal value (its default included)."""
+    fixed = set()
+    for key, (name, positional, params) in _switch_params().items():
+        for p, seen in _call_values(name, positional, params).items():
+            if _NON_LITERAL not in seen and len(seen) < 2:
+                fixed.add(f"{key}({p})")
+    return fixed
+
+
+def test_every_switch_takes_two_values_or_is_allowlisted():
+    fixed = sorted(_fixed_switches() - KNOBS_ALLOWED.keys())
+    assert not fixed, (
+        "production gives these parameters one value only; delete the "
+        "parameter and the path it selects, or allowlist it with a "
+        f"reason: {fixed}"
+    )
+
+
+def test_switch_allowlist_is_current():
+    fixed = _fixed_switches()
+    stale = sorted(k for k in KNOBS_ALLOWED if k not in fixed)
+    assert not stale, f"allowlisted but not a one-value switch: {stale}"
+    assert all(reason.strip() for reason in KNOBS_ALLOWED.values())

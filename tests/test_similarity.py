@@ -176,41 +176,6 @@ def test_signature_forms_agree(emb):
     assert expr.exceptAll(batched).count() == 0
 
 
-def test_kmeans_refine_invariants(emb):
-    """Lloyd refinement keeps centroid count/ids and stays above the
-    recall floor when plugged into ivf_topk."""
-    import numpy as np
-
-    from studiocr_spark.operators.similarity import (
-        kmeans_refine,
-        recall_at_k,
-    )
-
-    from studiocr_spark.operators.similarity import seed_centroids
-
-    cents = kmeans_refine(emb, n_centroids=8, iters=2).collect()
-    assert len(cents) == 8
-    # ids come from the unbiased hash-ordered seed sample (round-4)
-    assert sorted(r.centroid_id for r in cents) == sorted(
-        r.centroid_id for r in seed_centroids(emb, 8).collect()
-    )
-    for r in cents:
-        v = np.array(r.cvec)
-        assert v.shape == (64,) and np.isfinite(v).all()
-
-    q = emb.filter(F.col("vec_id") < N_QUERIES)
-    exact = brute_force_topk(q, emb, k=K)
-    # floors sized to the isotropic-corpus ceiling at this small probe
-    # budget (~ probe fraction; see the ann_ivf_topk entry docstring)
-    refined = recall_at_k(
-        ivf_topk(q, emb, k=K, n_centroids=16, n_probe=4, kmeans_iters=2),
-        exact,
-        floor=0.2,
-        mean_floor=0.45,
-    ).collect()
-    assert all(r.passed for r in refined), refined
-
-
 def test_embedding_near_dups_are_true_pairs(emb):
     pairs = embedding_near_dups(emb, dim=64, threshold=0.3, n_planes=4)
     rows = pairs.collect()

@@ -532,9 +532,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from studiocr_spark.operators.dedup import minhash_lsh_dedup
 
-    return minhash_lsh_dedup(
-        _t_wide(spark, sf_dir, "documents"), threshold=0.3
-    )
+    return minhash_lsh_dedup(_t_wide(spark, sf_dir, "documents"))
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -551,17 +549,13 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs at sf0.1 vs ~200k here."""
     from studiocr_spark.operators.dedup import simhash_near_dups
 
-    return simhash_near_dups(
-        _t_wide(spark, sf_dir, "documents"), bits=32, max_hamming=3
-    )
+    return simhash_near_dups(_t_wide(spark, sf_dir, "documents"))
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from studiocr_spark.operators.dedup import ngram_jaccard_pairs
 
-    return ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.3, max_doc_freq=50
-    )
+    return ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -572,7 +566,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_lsh_dedup,
     )
 
-    pairs = minhash_lsh_dedup(_t_wide(spark, sf_dir, "documents"), threshold=0.3)
+    pairs = minhash_lsh_dedup(_t_wide(spark, sf_dir, "documents"))
     return connected_components(pairs).orderBy("doc_id")
 
 
@@ -586,9 +580,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from studiocr_spark.operators.textstats import quality_scores
 
-    pairs = minhash_lsh_dedup(
-        _t_wide(spark, sf_dir, "documents"), threshold=0.3
-    )
+    pairs = minhash_lsh_dedup(_t_wide(spark, sf_dir, "documents"))
     scored = quality_scores(_t(spark, sf_dir, "documents")).select(
         "doc_id", "quality"
     )
@@ -725,7 +717,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic embeddings are isotropic (no cluster structure), so cell
     membership of a query's true neighbors is nearly independent of the
     query's cell and recall tops out near the probe fraction
-    (measured 0.70-0.75 mean at n_probe=8/16 across sf0.001-0.1).
+    (measured 0.70-0.75 mean probing 8 of 16 cells across sf0.001-0.1).
     Round-3's 0.9 mean was an artifact of first-N-by-id seeding: the
     audit queries (vec_id < 8) WERE the first 16 centroids, centering a
     cell on every query. The round-4 unbiased hash-ordered seeding
@@ -741,7 +733,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
-    approx = ivf_topk(queries, emb, k=5, n_centroids=16, n_probe=8)
+    approx = ivf_topk(queries, emb)
     found = _dump_ann(
         approx.select("query_id", "neighbor_id"), "ann_ivf_topk",
         sf_dir, lambda: _corpus_fp(emb),
@@ -768,12 +760,10 @@ def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     found = _dump_ann(
-        nd(emb, dim=64, threshold=0.35, n_planes=4, n_tables=16).select(
-            "vec_a", "vec_b"
-        ),
+        nd(emb, dim=64).select("vec_a", "vec_b"),
         "embedding_near_dups", sf_dir, lambda: _corpus_fp(emb),
     )
-    truth = exact_near_dup_pairs(emb, threshold=0.35)
+    truth = exact_near_dup_pairs(emb)
     # lazy: aggregate both sides, cross-join the two 1-row frames
     # (count the truth-intersection rather than trusting precision == 1)
     inter = found.join(
@@ -869,7 +859,7 @@ def range_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     points = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("point_id"), "ts"
     )
-    out = range_join(points, intervals, bucket_seconds=600)
+    out = range_join(points, intervals)
     return out.select("point_id", "interval_id")
 
 
@@ -1166,7 +1156,6 @@ def domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("p_n").cast("long").alias("n_docs"),
             F.sum("p_chars").cast("long").alias("total_chars"),
         ],
-        n_salts=8,
     )
     return out.select(
         "source",
@@ -1188,7 +1177,7 @@ def decontaminate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = docs.filter(F.col("doc_id") < 25).select(
         F.col("doc_id").alias("eval_id"), "text"
     )
-    return contamination_pairs(train, ev, n=3, min_shared=2)
+    return contamination_pairs(train, ev)
 
 
 def boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:

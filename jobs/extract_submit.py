@@ -2,7 +2,6 @@
 
 Submit::
 
-    python -m studiocr_spark.session  # or directly:
     spark-submit --master yarn \
       --py-files studiocr_spark.zip \
       --conf spark.sql.adaptive.enabled=true \

@@ -35,6 +35,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# range_join dials: 10-minute time buckets (the median interval of the
+# range_join_events entry) and 8 salts per bucket
+RANGE_BUCKET_SECONDS = 600
+RANGE_SALT_BUCKETS = 8
+
 
 def asof_join(
     left: DataFrame,
@@ -139,8 +144,6 @@ def range_join(
     point_ts: str = "ts",
     start_ts: str = "start",
     end_ts: str = "end",
-    bucket_seconds: int = 3600,
-    salt_buckets: int = 8,
 ) -> DataFrame:
     """Point-in-interval join (half-open: start <= point < end) without
     a quadratic range theta join.
@@ -152,26 +155,24 @@ def range_join(
     candidates meet on a bucket equi-join, then the exact range
     predicate filters. Because a point has one bucket, every qualifying
     (point, interval) pair meets exactly once — no dedup pass.
-    ``bucket_seconds`` trades shuffle fan-out (intervals emit
-    span/bucket_seconds rows) against candidate selectivity; size it
-    near the median interval length.
+    ``RANGE_BUCKET_SECONDS`` trades shuffle fan-out (intervals emit
+    span/RANGE_BUCKET_SECONDS rows) against candidate selectivity; it
+    sits near the median interval length.
 
     Skew: the equi-join key is the time bucket alone, so a bursty stream
     would put a whole burst (plus every interval overlapping it) into
     ONE reducer. The join therefore salts: each point hashes its full
-    row into one of ``salt_buckets`` salts, each interval-bucket row
-    replicates across ALL salts, and the join key becomes (bucket,
-    salt) — a burst spreads over ``salt_buckets`` reducers at the cost
-    of ``salt_buckets``× interval fan-out (cheap: intervals are the
-    small side of a point-in-interval join). ``salt_buckets=1`` joins on
-    the bucket alone.
+    row into one of ``RANGE_SALT_BUCKETS`` salts, each interval-bucket
+    row replicates across ALL salts, and the join key becomes (bucket,
+    salt) — a burst spreads over ``RANGE_SALT_BUCKETS`` reducers at the
+    cost of ``RANGE_SALT_BUCKETS``× interval fan-out (cheap: intervals
+    are the small side of a point-in-interval join).
 
     Output: all point columns plus every interval column (interval
     columns keep their names; disambiguate before calling if they
     clash).
     """
-    salted = salt_buckets > 1
-    keys = ["_bucket", "_salt"] if salted else ["_bucket"]
+    keys = ["_bucket", "_salt"]
 
     def epoch(c: str):
         # TIMESTAMP_NTZ has no direct long cast; unix_timestamp is
@@ -179,33 +180,30 @@ def range_join(
         return F.unix_timestamp(F.col(c))
 
     p = points.withColumn(
-        "_bucket", F.floor(epoch(point_ts) / bucket_seconds)
+        "_bucket", F.floor(epoch(point_ts) / RANGE_BUCKET_SECONDS)
     )
     i = intervals.withColumn(
         "_bucket",
         F.explode(
             F.sequence(
-                F.floor(epoch(start_ts) / bucket_seconds),
-                F.floor(epoch(end_ts) / bucket_seconds),
+                F.floor(epoch(start_ts) / RANGE_BUCKET_SECONDS),
+                F.floor(epoch(end_ts) / RANGE_BUCKET_SECONDS),
             )
         ),
     )
-    if salted:
-        # hash the WHOLE point row: a burst shares its timestamp, so
-        # hashing ts alone would put the burst back on one reducer
-        p = p.withColumn(
-            "_salt",
-            F.pmod(
-                F.hash(*[F.col(c) for c in points.columns]),
-                F.lit(salt_buckets),
-            ),
-        )
-        i = i.withColumn(
-            "_salt",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(salt_buckets - 1))
-            ),
-        )
+    # hash the WHOLE point row: a burst shares its timestamp, so
+    # hashing ts alone would put the burst back on one reducer
+    p = p.withColumn(
+        "_salt",
+        F.pmod(
+            F.hash(*[F.col(c) for c in points.columns]),
+            F.lit(RANGE_SALT_BUCKETS),
+        ),
+    )
+    i = i.withColumn(
+        "_salt",
+        F.explode(F.sequence(F.lit(0), F.lit(RANGE_SALT_BUCKETS - 1))),
+    )
     return (
         p.join(i, keys)
         .filter(

@@ -29,6 +29,17 @@ from pyspark.sql import functions as F
 
 from .textstats import round6, words_of
 
+# The near-dup dials, one value each (the dedup_* entries and their
+# DuckDB oracles run exactly these).
+SHINGLE_N = 2  # word n-gram size of MinHash-LSH and n-gram Jaccard
+JACCARD_THRESHOLD = 0.3  # verified-Jaccard floor of both pair finders
+MINHASH_NUM_HASHES = 8
+MINHASH_ROWS_PER_BAND = 2
+NGRAM_MAX_DOC_FREQ = 50  # the hot-shingle skew guard
+SIMHASH_PAIR_BITS = 32
+SIMHASH_MAX_HAMMING = 3
+CC_MAX_ITER = 20  # pointer jumping: covers diameters beyond 10^6
+
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, canonical_id, is_duplicate): group by exact content.
@@ -186,27 +197,26 @@ def minhash_params(num_hashes: int) -> tuple[list[int], list[int]]:
     return a, b
 
 
-def _band_keys_from_mh(
-    mins: DataFrame, num_hashes: int, rows_per_band: int
-) -> DataFrame:
+def _band_keys_from_mh(mins: DataFrame) -> DataFrame:
     """(doc_id, band, band_key) from a (doc_id, mh array) frame.
 
-    Band ``b`` covers seeds ``[b*rows_per_band, (b+1)*rows_per_band)``
-    and its key is those minhashes joined by ``','`` in seed order. The
-    signature is ONE array in seed order, so each key is a per-row
-    ``slice`` projection — zero shuffles, no explode->regroup."""
+    Band ``b`` covers seeds ``[b*r, (b+1)*r)`` for
+    ``r = MINHASH_ROWS_PER_BAND`` and its key is those minhashes joined
+    by ``','`` in seed order. The signature is ONE array in seed order,
+    so each key is a per-row ``slice`` projection — zero shuffles, no
+    explode->regroup."""
     import math
 
-    n_bands = math.ceil(num_hashes / rows_per_band)
+    r = MINHASH_ROWS_PER_BAND
     keys = F.array(*[
         F.array_join(
             F.transform(
-                F.slice("mh", i * rows_per_band + 1, rows_per_band),
+                F.slice("mh", i * r + 1, r),
                 lambda c: c.cast("string"),
             ),
             ",",
         )
-        for i in range(n_bands)
+        for i in range(math.ceil(MINHASH_NUM_HASHES / r))
     ])
     # null signature (null/empty text) contributes no bands
     return mins.filter(F.col("mh").isNotNull()).select(
@@ -229,7 +239,7 @@ def _pairs_from_banded(banded: DataFrame) -> DataFrame:
     )
 
 
-def _sig_and_shingles_udf(n: int, num_hashes: int):
+def _sig_and_shingles_udf():
     """Factory: text -> struct(mh: array<long>, shs: array<long>) — the
     minhash signature AND the 60-bit hashed shingle array from ONE
     tokenize + ONE md5 per batch-distinct shingle (the full hexdigest
@@ -251,13 +261,13 @@ def _sig_and_shingles_udf(n: int, num_hashes: int):
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    a_co, b_co = minhash_params(num_hashes)
+    a_co, b_co = minhash_params(MINHASH_NUM_HASHES)
 
     @pandas_udf("struct<mh: array<long>, shs: array<long>>")
     def _combo(texts: pd.Series) -> pd.DataFrame:
         A = np.array(a_co, dtype=np.int64)[:, None]
         B = np.array(b_co, dtype=np.int64)[:, None]
-        sh = [_py_shingles(t, n) for t in texts]
+        sh = [_py_shingles(t, SHINGLE_N) for t in texts]
         lens = np.array([len(s) for s in sh], dtype=np.int64)
         flat: list[str] = []
         for s in sh:
@@ -321,20 +331,17 @@ def _candidate_docs(pairs: DataFrame) -> DataFrame:
 
 
 def jaccard_verify(
-    pairs: DataFrame,
-    docs: DataFrame,
-    text_col: str = "text",
-    n: int = 2,
-    threshold: float = 0.5,
+    pairs: DataFrame, docs: DataFrame, text_col: str = "text"
 ) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs; keep >= threshold.
+    """Exact shingle-set Jaccard for candidate pairs; keep those at or
+    above ``JACCARD_THRESHOLD``.
 
     (doc_a, doc_b, jaccard). |A∩B| comes from an equi-join of the
     exploded distinct-shingle table restricted to candidate pairs, and
     |A∪B| = |A| + |B| - |A∩B| — no per-doc shingle ARRAYS are ever
     materialized or shipped, so a 10^5-shingle document costs rows, not
     a wide array in every pair row. A pair with zero shared shingles
-    drops out of the join, which is correct for any threshold > 0.
+    drops out of the join, which is correct for a threshold > 0.
 
     The shingle table feeds three consumers (sizes + both join sides),
     so it is lazily checkpointed — otherwise the Arrow shingler's
@@ -343,7 +350,9 @@ def jaccard_verify(
     """
     # distinct (doc_id, shingle) of candidate docs only
     sh = shingle_table(
-        docs.join(_candidate_docs(pairs), "doc_id", "left_semi"), text_col, n
+        docs.join(_candidate_docs(pairs), "doc_id", "left_semi"),
+        text_col,
+        SHINGLE_N,
     ).localCheckpoint(eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
@@ -372,14 +381,12 @@ def jaccard_verify(
             ).alias("jaccard"),
         )
     )
-    return out.filter(F.col("jaccard") >= threshold).select(
+    return out.filter(F.col("jaccard") >= JACCARD_THRESHOLD).select(
         "doc_a", "doc_b", round6(F.col("jaccard")).alias("jaccard")
     )
 
 
-def _jaccard_verify_arrays(
-    pairs: DataFrame, arrs: DataFrame, threshold: float
-) -> DataFrame:
+def _jaccard_verify_arrays(pairs: DataFrame, arrs: DataFrame) -> DataFrame:
     """:func:`jaccard_verify` over per-doc hashed-shingle ARRAYS — the
     short-document shape the fused MinHash pass feeds: ``arrs`` is its
     (doc_id, shs) table of 60-bit shingle hashes (see
@@ -426,7 +433,7 @@ def _jaccard_verify_arrays(
             ).alias("jaccard"),
         )
     )
-    return joined.filter(F.col("jaccard") >= threshold).select(
+    return joined.filter(F.col("jaccard") >= JACCARD_THRESHOLD).select(
         "doc_a", "doc_b", round6(F.col("jaccard")).alias("jaccard")
     )
 
@@ -434,10 +441,6 @@ def _jaccard_verify_arrays(
 def minhash_lsh_dedup(
     docs: DataFrame,
     text_col: str = "text",
-    n: int = 2,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    threshold: float = 0.5,
     checkpoint_candidates: bool = True,
 ) -> DataFrame:
     """End-to-end MinHash-LSH near-dup pairs (verified Jaccard).
@@ -463,11 +466,10 @@ def minhash_lsh_dedup(
 
     combo = ckpt(docs.select(
         "doc_id",
-        _sig_and_shingles_udf(n, num_hashes)(text_col).alias("s"),
+        _sig_and_shingles_udf()(text_col).alias("s"),
     ))
     banded = _band_keys_from_mh(
-        combo.select("doc_id", F.col("s.mh").alias("mh")),
-        num_hashes, rows_per_band,
+        combo.select("doc_id", F.col("s.mh").alias("mh"))
     )
     # banded is a cheap projection over the combo table — no checkpoint
     # of its own for the self-join sides
@@ -479,7 +481,7 @@ def minhash_lsh_dedup(
             "doc_id", F.col("s.shs").alias("shs")
         )
     )
-    return _jaccard_verify_arrays(cand, arrs, threshold)
+    return _jaccard_verify_arrays(cand, arrs)
 
 
 # ---------------------------------------------------------------------------
@@ -564,15 +566,14 @@ def simhash(
 def simhash_near_dups(
     docs: DataFrame,
     text_col: str = "text",
-    bits: int = 16,
-    max_hamming: int = 3,
     checkpoint_banded: bool = True,
 ) -> DataFrame:
-    """(doc_a, doc_b, hamming) pairs within Hamming distance.
+    """(doc_a, doc_b, hamming) pairs within Hamming distance
+    ``SIMHASH_MAX_HAMMING`` of the ``SIMHASH_PAIR_BITS``-bit simhash.
 
     Blocking is EXACT by pigeonhole: the signature is split into
-    ``max_hamming + 1`` disjoint bit-bands, so any pair within distance
-    ``max_hamming`` has at least one band with zero differing bits and
+    ``SIMHASH_MAX_HAMMING + 1`` disjoint bit-bands, so any pair within
+    that distance has at least one band with zero differing bits and
     meets in that band's bucket. (The earlier 2-half variant only
     guaranteed recall for distance < 2 while defaulting to 3.)
     Candidates meet on an equi-join keyed by (band index, band value) —
@@ -583,11 +584,9 @@ def simhash_near_dups(
     of twice per action — same escape-hatch rationale as
     minhash_lsh_dedup's checkpoint_candidates.
     """
-    sh = simhash(docs, text_col, bits)
-    n_bands = max_hamming + 1
-    if n_bands > bits:
-        raise ValueError("max_hamming + 1 bands need at least that many bits")
-    base, rem = divmod(bits, n_bands)
+    sh = simhash(docs, text_col, SIMHASH_PAIR_BITS)
+    n_bands = SIMHASH_MAX_HAMMING + 1
+    base, rem = divmod(SIMHASH_PAIR_BITS, n_bands)
     widths = [base + (1 if i < rem else 0) for i in range(n_bands)]
     offsets = [sum(widths[:i]) for i in range(n_bands)]
     bands = F.array(
@@ -628,14 +627,13 @@ def simhash_near_dups(
             "hamming",
             F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select("doc_a", "doc_b", "hamming")
     )
 
 
 def connected_components(
     pairs: DataFrame,
-    max_iter: int = 20,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
 ) -> DataFrame:
@@ -648,13 +646,13 @@ def connected_components(
     table). Plain propagation needs O(component diameter) rounds —
     near-dup graphs at corpus scale produce exactly the long chains
     that exhaust a fixed budget; the shortcut halves remaining distance
-    per round, so convergence is O(log diameter): ``max_iter=20``
-    covers diameters beyond 10^6. The canonical dedup-clustering step
+    per round, so convergence is O(log diameter): ``CC_MAX_ITER`` = 20
+    rounds cover diameters beyond 10^6. The canonical dedup-clustering step
     after pair generation: cluster_id = the smallest doc id in the
     component (keep it, drop the rest).
 
     Convergence is CHECKED (a round that changes nothing ends the
-    loop); if ``max_iter`` rounds still changed labels the result would
+    loop); if ``CC_MAX_ITER`` rounds still changed labels the result would
     be silently wrong (an under-merge), so it raises instead.
 
     Scale shape: each round is two joins + one min-aggregate on
@@ -678,7 +676,7 @@ def connected_components(
         .cache()
     )
     converged = False
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         neighbor_min = (
             edges.join(labels, edges.src == labels.node)
             .groupBy("dst")
@@ -749,8 +747,8 @@ def connected_components(
     if not converged:
         raise RuntimeError(
             f"connected_components: labels still changing after "
-            f"max_iter={max_iter} rounds — result would under-merge "
-            f"clusters. Raise max_iter (each round doubles reachable "
+            f"CC_MAX_ITER={CC_MAX_ITER} rounds — result would under-merge "
+            f"clusters. Raise CC_MAX_ITER (each round doubles reachable "
             f"distance)."
         )
     return labels.select(
@@ -761,24 +759,22 @@ def connected_components(
 def ngram_jaccard_pairs(
     docs: DataFrame,
     text_col: str = "text",
-    n: int = 2,
-    threshold: float = 0.5,
-    max_doc_freq: int = 100,
     checkpoint_candidates: bool = True,
 ) -> DataFrame:
     """Near-dup pairs via shared-shingle blocking + exact Jaccard.
 
-    ``max_doc_freq`` drops shingles appearing in more docs — the
+    ``NGRAM_MAX_DOC_FREQ`` drops shingles appearing in more docs — the
     explicit skew guard: a stopword shingle in 10^9 docs would otherwise
     create a quadratic join partition.
 
-    The guard broadcasts the HOT set (df > max_doc_freq) and anti-joins
-    it away. Hot shingles are tiny by construction (each needs more than
-    max_doc_freq occurrences, so there are at most |corpus shingle
-    instances| / max_doc_freq of them); the rare set is ~every distinct
-    shingle — billions of rows at 100 TB, never broadcastable.
+    The guard broadcasts the HOT set (df > NGRAM_MAX_DOC_FREQ) and
+    anti-joins it away. Hot shingles are tiny by construction (each
+    needs more than NGRAM_MAX_DOC_FREQ occurrences, so there are at most
+    |corpus shingle instances| / NGRAM_MAX_DOC_FREQ of them); the rare
+    set is ~every distinct shingle — billions of rows at 100 TB, never
+    broadcastable.
     """
-    sh = shingle_table(docs, text_col, n)
+    sh = shingle_table(docs, text_col, SHINGLE_N)
     # the shingle table feeds THREE consumers per action (the hot-set
     # aggregate and both sides of the self-join), so the tokenize+
     # shingle Arrow pass used to run 3x — the repo's twice-referenced-
@@ -789,7 +785,7 @@ def ngram_jaccard_pairs(
     hot = (
         sh.groupBy("shingle")
         .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > max_doc_freq)
+        .filter(F.col("df") > NGRAM_MAX_DOC_FREQ)
         .select("shingle")
     )
     sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
@@ -809,7 +805,7 @@ def ngram_jaccard_pairs(
     # tests) or avoids localCheckpoint under dynamic allocation.
     if checkpoint_candidates:
         pairs = pairs.localCheckpoint(eager=False)
-    return jaccard_verify(pairs, docs, text_col, n, threshold)
+    return jaccard_verify(pairs, docs, text_col)
 
 
 def line_dedup(

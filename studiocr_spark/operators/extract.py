@@ -10,9 +10,10 @@ only wide operation in the whole job is the optional per-url text
 reassembly for multi-page documents.
 
 Scale notes (100 TB):
-- decode cost is per-row and embarrassingly parallel -> ``repartition(N)``
-  round-robin spreads payload bytes evenly; no key skew exists at this
-  stage (skew handling lives where keys do: index build / search joins).
+- decode cost is per-row and embarrassingly parallel: the scan splits
+  (``spark.sql.files.maxPartitionBytes``, as bench.py sets it) give the
+  parallelism, no repartition shuffle; no key skew exists at this stage
+  (skew handling lives where keys do: index build / search joins).
 - Arrow batch size is capped (session.ARROW_BATCH_ROWS) because rows carry
   ~10-100 KB binary payloads.
 - blocks explode from an array column -> stays in the same stage as the

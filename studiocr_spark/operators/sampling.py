@@ -47,17 +47,16 @@ def stratified_sample(
     strata_col: str = "stratum",
     id_col: str = "doc_id",
     salt: str = "sample",
-    default_fraction: float = 0.0,
 ) -> DataFrame:
     """Keep each row with its stratum's probability, deterministically.
 
     A row survives iff ``hash_unit(salt, id) < fractions[stratum]``.
-    Unknown strata get ``default_fraction``. Narrow (no shuffle, no
+    Unknown strata are dropped. Narrow (no shuffle, no
     RNG): the filter pushes to the scan side and the same ids survive
     on every run/cluster — what an incremental 100 TB pipeline needs
     (re-sampling a late partition must not flap rows).
     """
-    frac = F.lit(float(default_fraction))
+    frac = F.lit(0.0)
     for value, f in sorted(fractions.items()):
         frac = F.when(
             F.col(strata_col) == value, F.lit(float(f))
@@ -192,6 +191,5 @@ def rebalance_mixture(
     total = min(counts[s] / t for s, t in eligible.items())
     fractions = {s: total * t / counts[s] for s, t in eligible.items()}
     return stratified_sample(
-        docs, fractions, strata_col=strata_col, id_col=id_col, salt=salt,
-        default_fraction=0.0,
+        docs, fractions, strata_col=strata_col, id_col=id_col, salt=salt
     )

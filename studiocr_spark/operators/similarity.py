@@ -23,6 +23,12 @@ from pyspark.sql import functions as F
 
 from .textstats import round6
 
+# embedding near-dups: the cosine floor, and the LSH blocking that finds
+# >= 90% of the pairs above it (4 planes x 16 OR-amplified tables)
+NEAR_DUP_COSINE = 0.35
+NEAR_DUP_N_PLANES = 4
+NEAR_DUP_N_TABLES = 16
+
 
 def _dot(a: Column, b: Column) -> Column:
     """Deterministic sequential-fold dot product (double)."""
@@ -379,27 +385,24 @@ def seed_centroids(
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF-style ANN: coarse quantize -> probe nearest cells -> re-rank.
+    """IVF-style ANN: coarse quantize -> probe nearest cells -> top 5.
 
-    Centroids are a deterministic hash-ordered sample
+    Centroids are a deterministic hash-ordered sample of 16 vectors
     (:func:`seed_centroids`), used as drawn: no Lloyd refinement.
     Every corpus vector is assigned to its nearest centroid (broadcast
-    centroid join); each query probes its ``n_probe`` nearest cells and
+    centroid join); each query probes its 8 nearest cells and
     exact-cosine re-ranks within them.
 
     Scale shape: the corpus-side assignment is a broadcast join + window
-    (one shuffle on cell), the query side touches ``n_probe / n_centroids``
-    of the corpus — the standard recall/cost dial.
+    (one shuffle on cell), the query side touches 8/16 of the corpus
+    (the probe fraction is the standard recall/cost dial).
     """
     from pyspark.sql import Window
 
-    cents = seed_centroids(corpus, n_centroids, id_col, vec_col)
+    cents = seed_centroids(corpus, 16, id_col, vec_col)
 
     def assign(df: DataFrame, ident: str, vec: str, keep: int) -> DataFrame:
         scored = df.crossJoin(F.broadcast(cents)).select(
@@ -431,7 +434,7 @@ def ivf_topk(
         ),
         "query_id",
         "qv",
-        n_probe,
+        8,
     )
     scored = (
         c.join(q, "centroid_id")
@@ -449,7 +452,7 @@ def ivf_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select(
             "query_id",
             "neighbor_id",
@@ -517,12 +520,12 @@ def recall_at_k(
 
 def exact_near_dup_pairs(
     vectors: DataFrame,
-    threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(vec_a, vec_b, cosine): EXACT all-pairs ground truth for near-dup
-    recall audits. O(N^2) — audit/test scale only; the production path is
+    """(vec_a, vec_b, cosine): EXACT all-pairs ground truth (cosine at
+    least ``NEAR_DUP_COSINE``) for near-dup recall audits. O(N^2) —
+    audit/test scale only; the production path is
     ``embedding_near_dups`` (LSH-blocked).
 
     Scores with the sequential fold :func:`cosine_sim`, which keeps bit
@@ -540,7 +543,7 @@ def exact_near_dup_pairs(
             F.col("b.vid").alias("vec_b"),
             cosine_sim(F.col("a.v"), F.col("b.v")).alias("cos_raw"),
         )
-        .filter(F.col("cos_raw") >= threshold)
+        .filter(F.col("cos_raw") >= NEAR_DUP_COSINE)
         .select("vec_a", "vec_b", round6(F.col("cos_raw")).alias("cosine"))
     )
 
@@ -548,19 +551,18 @@ def exact_near_dup_pairs(
 def embedding_near_dups(
     vectors: DataFrame,
     dim: int,
-    threshold: float = 0.95,
-    n_planes: int = 8,
-    n_tables: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(vec_a, vec_b, cosine) pairs above threshold — embedding-cosine
-    near-dup detection, LSH-blocked then exactly verified.
+    """(vec_a, vec_b, cosine) pairs with cosine at least
+    ``NEAR_DUP_COSINE`` — embedding-cosine near-dup detection,
+    LSH-blocked then exactly verified.
 
-    ``n_tables`` OR-amplifies recall exactly as in :func:`lsh_topk`:
-    a pair is a candidate if it collides in ANY table. Precision is
-    always 1.0 (candidates verify with exact cosine); recall for a pair
-    at angle theta is ``1 - (1 - (1 - theta/pi)^n_planes)^n_tables``.
+    The ``NEAR_DUP_N_TABLES`` tables OR-amplify recall exactly as in
+    :func:`lsh_topk`: a pair is a candidate if it collides in ANY table.
+    Precision is always 1.0 (candidates verify with exact cosine);
+    recall for a pair at angle theta is ``1 - (1 - (1 - theta/pi)^P)^T``
+    with P = NEAR_DUP_N_PLANES planes and T = NEAR_DUP_N_TABLES tables.
     """
     vecs = vectors.select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("v")
@@ -568,7 +570,7 @@ def embedding_near_dups(
     sigged = vectors.select(
         F.col(id_col).alias("vid"),
         hyperplane_signatures(
-            F.col(vec_col), dim, n_planes, n_tables
+            F.col(vec_col), dim, NEAR_DUP_N_PLANES, NEAR_DUP_N_TABLES
         ).alias("_sigs"),
     )
     # bucket rows carry IDS ONLY: shipping the vector through the bucket
@@ -580,8 +582,9 @@ def embedding_near_dups(
         F.explode(
             F.array(
                 *[
-                    F.element_at("_sigs", t + 1) + t * (2 ** n_planes)
-                    for t in range(n_tables)
+                    F.element_at("_sigs", t + 1)
+                    + t * (2 ** NEAR_DUP_N_PLANES)
+                    for t in range(NEAR_DUP_N_TABLES)
                 ]
             )
         ).alias("bucket"),
@@ -604,6 +607,6 @@ def embedding_near_dups(
             vectorized_cosine(F.col("va"), F.col("vb")).alias("cos_raw"),
         )
     )
-    return pairs.filter(F.col("cos_raw") >= threshold).select(
+    return pairs.filter(F.col("cos_raw") >= NEAR_DUP_COSINE).select(
         "vec_a", "vec_b", round6(F.col("cos_raw")).alias("cosine")
     )

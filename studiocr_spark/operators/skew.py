@@ -7,7 +7,7 @@ would otherwise funnel through a single reducer:
 
 ``salted_aggregate`` is a generic two-phase aggregation: phase 1 groups
 by (key, salt) so the hot key's partial aggregation spreads over
-``n_salts`` reducers, phase 2 merges the partials. Works for any
+``N_SALTS`` reducers, phase 2 merges the partials. Works for any
 algebraic aggregate given its (partial, merge) expression pair. The
 ``domain_stats`` entry runs it against a plain GROUP BY oracle.
 """
@@ -19,13 +19,14 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+N_SALTS = 8
+
 
 def salted_aggregate(
     df: DataFrame,
     key_cols: list[str],
     partial_aggs: list[Column],
     merge_aggs: Callable[[], list[Column]],
-    n_salts: int = 16,
 ) -> DataFrame:
     """Two-phase salted aggregation.
 
@@ -36,7 +37,7 @@ def salted_aggregate(
     spread evenly.
     """
     salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(*df.columns), F.lit(n_salts))
+        "_salt", F.pmod(F.xxhash64(*df.columns), F.lit(N_SALTS))
     )
     phase1 = salted.groupBy(*key_cols, "_salt").agg(*partial_aggs)
     return phase1.groupBy(*key_cols).agg(*merge_aggs())

@@ -163,11 +163,9 @@ def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def repetition_stats(
-    docs: DataFrame, text_col: str = "text", n: int = 2
-) -> DataFrame:
+def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, n_ngrams, n_unique, dup_ngram_frac, top_gram_frac):
-    RefinedWeb-style repetition signals over word ``n``-grams (public
+    RefinedWeb-style repetition signals over word 2-grams (public
     heuristic family: heavily self-repeating documents are low-quality
     machine text).
 
@@ -193,7 +191,7 @@ def repetition_stats(
             if t is None:
                 rows.append((None, None, None))
                 continue
-            c = Counter(_py_ngrams(t, n))
+            c = Counter(_py_ngrams(t, 2))
             total = sum(c.values())
             rows.append(
                 (total, len(c), max(c.values()) if c else 0)
@@ -217,12 +215,10 @@ def repetition_stats(
     )
 
 
-def fingerprints(
-    docs: DataFrame, text_col: str = "text", n: int = 5, k: int = 4
-) -> DataFrame:
+def fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Bottom-k document fingerprint (winnowing-style rolling sketch).
 
-    md5 each char n-gram, keep the k lexicographically smallest digests,
+    md5 each char 5-gram, keep the 4 lexicographically smallest digests,
     concatenate -> a stable doc fingerprint whose equality implies high
     content overlap. (doc_id, fingerprint).
 
@@ -242,12 +238,12 @@ def fingerprints(
         def fp(t):
             if t is None:
                 return None
-            hi = max(len(t) - (n - 1), 1)
+            hi = max(len(t) - 4, 1)
             digests = (
-                hashlib.md5(t[i : i + n].encode()).hexdigest()
+                hashlib.md5(t[i : i + 5].encode()).hexdigest()
                 for i in range(hi)
             )
-            return "".join(heapq.nsmallest(k, digests))
+            return "".join(heapq.nsmallest(4, digests))
 
         return texts.map(fp)
 

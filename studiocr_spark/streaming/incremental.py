@@ -8,18 +8,19 @@ into ``n_buckets`` url-hash buckets; each run
 1. reads the completion manifest (if any),
 2. anti-joins to find PENDING buckets,
 3. extracts only those buckets, writing outputs ``partitionBy(bucket)``
-   with dynamic partition overwrite — so re-processing a bucket after a
-   crash REPLACES its partition instead of duplicating it (idempotent
-   retry),
+   with dynamic partition overwrite, set per write so the session keeps
+   its own mode — re-processing a bucket after a crash REPLACES its
+   partition instead of duplicating it (idempotent retry),
 4. appends one manifest row per completed bucket: counts, wall seconds,
    docs/sec, min/max url (lineage), completion timestamp — the audit +
    publish step. The manifest is only written after the data commit, so
    a crash between the two reprocesses work but never loses or dupes it.
 
-The manifest holds at most ``n_buckets`` rows, so its bookkeeping stays
-on the driver: it is built as a pandas frame (an Arrow local relation,
-not a pickled Python RDD) and read back with its declared schema (no
-schema-inference job).
+The manifest holds about one row per bucket (reruns under another
+``n_buckets`` add rows; see :func:`completed_buckets`), so its
+bookkeeping stays on the driver: it is built as a pandas frame (an
+Arrow local relation, not a pickled Python RDD) and read back with its
+declared schema (no schema-inference job).
 """
 
 from __future__ import annotations
@@ -94,7 +95,6 @@ def run_checkpointed_extract(
     if not pending:
         return None
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     bucketed = with_bucket(pages, n_buckets).filter(
         F.col("bucket").isin(pending)
     )
@@ -109,13 +109,13 @@ def run_checkpointed_extract(
     ocr_pages = ok.select(
         "url", "page_no", "image", "page_text", "page_stats", "bucket"
     )
-    ocr_pages.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(out_root, "ocr_pages")
-    )
+    ocr_pages.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("bucket").parquet(os.path.join(out_root, "ocr_pages"))
     blocks = with_bucket(blocks_from_raw(ok.drop("bucket")), n_buckets)
-    blocks.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(out_root, "ocr_blocks")
-    )
+    blocks.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("bucket").parquet(os.path.join(out_root, "ocr_blocks"))
     wall = time.time() - t0
 
     # audit: per-bucket counts + lineage, computed from the cached raw

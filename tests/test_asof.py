@@ -138,8 +138,9 @@ def test_asof_dedup_right_requires_payload_columns(spark):
 
 
 def test_range_join_semantics(spark):
-    """Half-open [start, end); multi-bucket intervals; each qualifying
-    pair appears exactly once (a point has one bucket)."""
+    """Half-open [start, end); multi-bucket intervals (2 h spans over
+    10-minute buckets); each qualifying pair appears exactly once (a
+    point has one bucket)."""
     from studiocr_spark.operators.asof import range_join
 
     points = spark.createDataFrame(
@@ -149,7 +150,7 @@ def test_range_join_semantics(spark):
     ).withColumn("ts", F.to_timestamp("ts"))
     intervals = spark.createDataFrame(
         [
-            # spans 3 one-hour buckets
+            # spans 13 ten-minute buckets
             (10, "2020-01-01 00:00:00", "2020-01-01 02:00:00"),
             # exactly at point 2's ts -> inclusive start
             (20, "2020-01-01 02:00:00", "2020-01-01 02:30:00"),
@@ -160,20 +161,20 @@ def test_range_join_semantics(spark):
     )
     got = sorted(
         (r.point_id, r.interval_id)
-        for r in range_join(
-            points, intervals, bucket_seconds=3600
-        ).collect()
+        for r in range_join(points, intervals).collect()
     )
     # point 1 in interval 10; point 2 NOT in 10 (end exclusive) but in
     # 20 (start inclusive); point 3 in nothing
     assert got == [(1, 10), (2, 20)]
 
 
-def test_range_join_keyless_salts_bursts(spark):
+def test_range_join_keyless_salts_bursts(spark, monkeypatch):
     """A burst (many points at ONE timestamp) must not land on a single
     reducer: the join key carries a salt derived
     from the whole point row, intervals replicate across salts, and the
-    results are identical to the unsalted join."""
+    results are identical to the unsalted join (one salt: the bucket
+    alone)."""
+    from studiocr_spark.operators import asof
     from studiocr_spark.operators.asof import range_join
 
     points = spark.createDataFrame(
@@ -190,13 +191,14 @@ def test_range_join_keyless_salts_bursts(spark):
     ).withColumn("start", F.to_timestamp("start")).withColumn(
         "end", F.to_timestamp("end")
     )
-    salted = range_join(points, intervals, bucket_seconds=3600)
-    unsalted = range_join(
-        points, intervals, bucket_seconds=3600, salt_buckets=1
-    )
-    assert sorted(
-        (r.point_id, r.interval_id) for r in salted.collect()
-    ) == sorted((r.point_id, r.interval_id) for r in unsalted.collect())
+    salted = range_join(points, intervals)
+    got = sorted((r.point_id, r.interval_id) for r in salted.collect())
+    with monkeypatch.context() as m:
+        m.setattr(asof, "RANGE_SALT_BUCKETS", 1)
+        unsalted = range_join(points, intervals)
+        ref = sorted((r.point_id, r.interval_id) for r in unsalted.collect())
+    assert got == ref
+    assert len(got) == 400  # every burst point in intervals 10 and 20
     # the shuffle key must include the salt (burst spreads over reducers)
     from studiocr_spark.plans.explain import formatted_plan
 

@@ -36,13 +36,13 @@ def test_contamination_pairs_distinct_ngram_semantics(spark):
     train, ev = _frames(spark)
     got = {
         r.doc_id: r.shared_ngrams
-        for r in contamination_pairs(train, ev, n=3, min_shared=2).collect()
+        for r in contamination_pairs(train, ev).collect()
     }
     # doc 100: 8 shared 3-grams; 101: 1 (< floor); 103: "lazy dog today"
     # once despite 3 repetitions (distinct) -> < floor
     assert got == {100: 8}
 
-    kept = decontaminate(train, ev, n=3, min_shared=2)
+    kept = decontaminate(train, ev)
     assert sorted(r.doc_id for r in kept.collect()) == [101, 102, 103]
     assert kept.columns == train.columns
 
@@ -57,20 +57,21 @@ def test_eval_side_broadcasts_corpus_stays_narrow(spark):
     )
 
     train, ev = _frames(spark)
-    df = contamination_pairs(train, ev, n=3, min_shared=2)
+    df = contamination_pairs(train, ev)
     plan = formatted_plan(df)
     assert "BroadcastHashJoin" in plan, plan
     assert len(shuffle_exchanges(df)) == 1, plan
 
 
-def test_large_eval_side_falls_back_to_shuffle_join(spark):
-    """Round-4 guard: past max_broadcast_eval_docs the eval side takes a
+def test_large_eval_side_falls_back_to_shuffle_join(spark, monkeypatch):
+    """Round-4 guard: past MAX_BROADCAST_EVAL_DOCS the eval side takes a
     plain shuffle join (no broadcast hint in the optimized plan) and the
     results are identical to the broadcast path."""
+    from studiocr_spark.operators import decontam
+
+    monkeypatch.setattr(decontam, "MAX_BROADCAST_EVAL_DOCS", 0)
     train, ev = _frames(spark)
-    df = contamination_pairs(
-        train, ev, n=3, min_shared=2, max_broadcast_eval_docs=0
-    )
+    df = contamination_pairs(train, ev)
     # the hint must be ABSENT from the optimized logical plan (Catalyst
     # may still cost-pick a broadcast at this toy scale — that's fine)
     opt = df._jdf.queryExecution().optimizedPlan().toString()
@@ -89,8 +90,6 @@ def test_contamination_pairs_custom_id_cols(spark):
         for r in contamination_pairs(
             train.withColumnRenamed("doc_id", "url"),
             ev.withColumnRenamed("eval_id", "bench_id"),
-            n=3,
-            min_shared=2,
             id_col="url",
             eval_id_col="bench_id",
         ).collect()

@@ -1,14 +1,15 @@
 """simhash_near_dups: pigeonhole banding must find every pair within
-``max_hamming`` — including pairs whose differing bits span BOTH halves
-of the signature (the round-1 half-signature blocking missed those)."""
+``SIMHASH_MAX_HAMMING`` — including pairs whose differing bits span BOTH
+halves of the signature (the round-1 half-signature blocking missed
+those)."""
 
 import hashlib
-from itertools import combinations
 
+import numpy as np
 from pyspark.sql import functions as F
 
 
-def _simhash1(word: str, bits: int = 16) -> int:
+def _simhash1(word: str, bits: int = 32) -> int:
     """Pure-Python simhash of a single-token doc: bit b set iff hex
     digit b of md5(word) is odd (one token -> vote is just its parity).
     Mirrors studiocr_spark.operators.dedup.simhash."""
@@ -19,36 +20,35 @@ def _simhash1(word: str, bits: int = 16) -> int:
 def test_distance3_pair_spanning_both_halves_found(spark):
     from studiocr_spark.operators.dedup import simhash_near_dups
 
-    # scan deterministic single-token docs for a pair at hamming
-    # distance exactly 3 with differing bits in BOTH 8-bit halves
-    words = [f"w{i}" for i in range(160)]
-    sigs = {w: _simhash1(w) for w in words}
-    target = None
-    for a, b in combinations(words, 2):
-        x = sigs[a] ^ sigs[b]
-        if bin(x).count("1") == 3 and (x & 0xFF) and (x >> 8):
-            target = (a, b)
-            break
-    assert target is not None, "corpus scan found no distance-3 pair"
+    # exhaustive over deterministic single-token docs: EVERY pair within
+    # distance 3 of the 32-bit signature, none beyond (3,000 words hold
+    # a handful of such pairs; numpy popcounts the ~4.5M xors)
+    words = [f"w{i}" for i in range(3000)]
+    sigs = np.array([_simhash1(w) for w in words], dtype=np.int64)
+    popcount = np.array([bin(i).count("1") for i in range(256)])
+    expect = {}
+    for i in range(len(words) - 1):
+        x = sigs[i] ^ sigs[i + 1:]
+        d = popcount[x.view(np.uint8)].reshape(-1, 8).sum(axis=1)
+        for j in np.nonzero(d <= 3)[0]:
+            expect[(i, i + 1 + int(j))] = int(d[j])
+    # the pigeonhole case: a distance-3 pair whose differing bits lie in
+    # three of the four 8-bit bands, across BOTH 16-bit halves
+    spans = [
+        pair for pair, dist in expect.items()
+        if dist == 3
+        and len({b // 8 for b in range(32)
+                 if (int(sigs[pair[0]] ^ sigs[pair[1]]) >> b) & 1}) == 3
+    ]
+    assert spans, "corpus scan found no distance-3 pair spanning 3 bands"
 
     docs = spark.createDataFrame(
         [(i, w) for i, w in enumerate(words)], "doc_id long, text string"
     )
     got = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in simhash_near_dups(docs, bits=16, max_hamming=3).collect()
+        for r in simhash_near_dups(docs).collect()
     }
-    ids = {w: i for i, w in enumerate(words)}
-    a, b = sorted((ids[target[0]], ids[target[1]]))
-    assert got.get((a, b)) == 3
-
-    # exhaustive: EVERY pair within distance 3 is found, none beyond
-    expect = {}
-    for (wa, wb) in combinations(words, 2):
-        d = bin(sigs[wa] ^ sigs[wb]).count("1")
-        if d <= 3:
-            pa, pb = sorted((ids[wa], ids[wb]))
-            expect[(pa, pb)] = d
     assert got == expect
 
 
@@ -153,16 +153,14 @@ def test_minhash_lsh_pairs_match_counts_verify(spark):
     rows += [(100, None), (101, ""), (102, "solo")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    got = sorted(map(tuple, minhash_lsh_dedup(docs, threshold=0.2).collect()))
+    got = sorted(map(tuple, minhash_lsh_dedup(docs).collect()))
     assert got
     pairs = spark.createDataFrame(
         [(a, b) for a, b, _ in got], "doc_a long, doc_b long"
     )
-    exact = sorted(
-        map(tuple, jaccard_verify(pairs, docs, threshold=0.0).collect())
-    )
+    exact = sorted(map(tuple, jaccard_verify(pairs, docs).collect()))
     assert got == exact
-    plain = minhash_lsh_dedup(docs, threshold=0.2, checkpoint_candidates=False)
+    plain = minhash_lsh_dedup(docs, checkpoint_candidates=False)
     assert sorted(map(tuple, plain.collect())) == got
     assert not {a for a, b, _ in got} & {100, 101}
     assert not {b for a, b, _ in got} & {100, 101}

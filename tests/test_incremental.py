@@ -77,6 +77,27 @@ def test_reprocessing_is_idempotent(spark, pages_df, tmp_path):
     assert pages_out.select("url").distinct().count() == pages_df.count()
 
 
+def test_extract_leaves_session_overwrite_mode_static(spark, pages_df, tmp_path):
+    """The extract's dynamic partition overwrite is a per-write option:
+    after a run the session still overwrites statically, so a later
+    ``mode("overwrite").partitionBy(...)`` write in the same session
+    drops the partitions it does not rewrite."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    run_checkpointed_extract(
+        spark, pages_df, str(tmp_path / "ckpt"), n_buckets=4,
+        fail_after_buckets=1,
+    )
+    assert spark.conf.get(key).upper() == "STATIC"
+
+    path = str(tmp_path / "static")
+    both = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    both.write.mode("overwrite").partitionBy("k").parquet(path)
+    both.filter("k = 1").write.mode("overwrite").partitionBy("k").parquet(
+        path
+    )
+    assert [r.k for r in spark.read.parquet(path).collect()] == [1]
+
+
 def test_resume_over_manifest_part_from_python_rows(spark, pages_df, tmp_path):
     """A manifest part appended the earlier way, by ``createDataFrame``
     over Python dicts, stays readable and counts as done after the

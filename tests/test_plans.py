@@ -139,9 +139,7 @@ def test_ngram_jaccard_broadcasts_hot_set_only(spark):
     from studiocr_spark.operators.dedup import ngram_jaccard_pairs
 
     docs = entry._t(spark, SF, "documents")
-    df = ngram_jaccard_pairs(
-        docs, threshold=0.3, max_doc_freq=50, checkpoint_candidates=False
-    )
+    df = ngram_jaccard_pairs(docs, checkpoint_candidates=False)
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan
     assert "LeftAnti" in plan and "BuildRight" in plan, plan

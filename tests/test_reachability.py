@@ -14,10 +14,11 @@ definition that shares its name with a live one passes, so the guard
 is a floor, not a proof.
 
 The parameter check closes a blind spot of the reference check: a branch
-behind a parameter default. A parameter of a public top-level package
-function whose default is ``None``, ``True`` or ``False`` must take at
-least two different values across production call sites, or be listed
-in ``KNOBS_ALLOWED`` with its reason. An omitted argument counts as its
+or a dial behind a parameter default. A parameter of a public top-level
+package function whose default is ``None``, ``True``, ``False`` or an
+int or float literal must take at least two different values across
+production call sites, or be listed in ``KNOBS_ALLOWED`` with its
+reason; a dial production sets one way is a module constant. An omitted argument counts as its
 default, a non-literal argument (a variable, a ``**kwargs`` spread) as a
 second value, and a call through ``from ... import f as g`` resolves to
 ``f``. A function is matched by its bare name, and one never called
@@ -67,8 +68,8 @@ ALLOWED = {
     ),
 }
 
-# "<module path>::<function>(<parameter>)" -> why an on/off parameter
-# stays although production gives it a single value
+# "<module path>::<function>(<parameter>)" -> why an on/off or numeric
+# parameter stays although production gives it a single value
 KNOBS_ALLOWED = {
     "session.py::build_pyfiles_zip(dest)": (
         "deployment path: writes the zip that spark-submit --py-files ships"
@@ -98,6 +99,34 @@ KNOBS_ALLOWED = {
     "sources/decode.py::tesseract_decode(tessdata_root)": (
         "the reference's OcrEngine surface; the native libraries are "
         "absent and get_decoder passes no options"
+    ),
+    "sources/decode.py::tesseract_decode(oem)": (
+        "the reference's OcrEngine surface, validated as in "
+        "OcrEngine.py:35-44; get_decoder passes no options"
+    ),
+    "sources/decode.py::tesseract_decode(psm)": (
+        "the reference's OcrEngine surface, validated as in "
+        "OcrEngine.py:35-44; get_decoder passes no options"
+    ),
+    "functions/imagepipeline.py::threshold(thresh)": (
+        "U9 pipeline step: its arguments come from the user's step "
+        "config through pipeline_from_config"
+    ),
+    "functions/imagepipeline.py::threshold(maxval)": (
+        "U9 pipeline step: its arguments come from the user's step "
+        "config through pipeline_from_config"
+    ),
+    "functions/imagepipeline.py::flat_field(ksize)": (
+        "U9 pipeline step: its arguments come from the user's step "
+        "config through pipeline_from_config"
+    ),
+    "gen.py::write_pages(min_words)": (
+        "corpus generator; bench.py writes its 200-400-word "
+        "throughput corpus with it"
+    ),
+    "gen.py::write_pages(max_words)": (
+        "corpus generator; bench.py writes its 200-400-word "
+        "throughput corpus with it"
     ),
 }
 
@@ -205,6 +234,23 @@ def test_allowlist_is_current():
 _NON_LITERAL = object()
 
 
+def _literal(node: ast.AST):
+    """The value of a ``None``/bool/number literal (a negated number
+    included), else ``_NON_LITERAL``."""
+    if (
+        isinstance(node, ast.UnaryOp)
+        and isinstance(node.op, ast.USub)
+        and isinstance(node.operand, ast.Constant)
+        and type(node.operand.value) in (int, float)
+    ):
+        return -node.operand.value
+    if isinstance(node, ast.Constant) and (
+        node.value is None or type(node.value) in (bool, int, float)
+    ):
+        return node.value
+    return _NON_LITERAL
+
+
 @functools.cache
 def _production_calls() -> dict[str, list[ast.Call]]:
     """Bare callee name -> every production call of it, with
@@ -229,8 +275,8 @@ def _production_calls() -> dict[str, list[ast.Call]]:
 
 def _switch_params() -> dict[str, tuple[str, list[str], dict]]:
     """"<module>::<function>" -> (name, positional parameter names,
-    {on/off parameter: default}) for every public top-level function
-    with a ``None``/``True``/``False`` default, ``ALLOWED`` ones aside."""
+    {parameter: default}) for every public top-level function with a
+    ``None``/bool/int/float default, ``ALLOWED`` ones aside."""
     out = {}
     for path in sorted(PKG.rglob("*.py")):
         mod = path.relative_to(PKG).as_posix()
@@ -246,10 +292,9 @@ def _switch_params() -> dict[str, tuple[str, list[str], dict]]:
             pairs = list(zip(with_default, a.defaults))
             pairs += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
             switches = {
-                p.arg: d.value
+                p.arg: _literal(d)
                 for p, d in pairs
-                if isinstance(d, ast.Constant)
-                and (d.value is None or isinstance(d.value, bool))
+                if _literal(d) is not _NON_LITERAL
             }
             if switches:
                 out[key] = (node.name, [p.arg for p in positional], switches)
@@ -277,16 +322,17 @@ def _call_values(name: str, positional: list[str], params) -> dict[str, set]:
         for p, default in params.items():
             if p not in passed:
                 values[p].add(default)
-            elif isinstance(passed[p], ast.Constant):
-                values[p].add(passed[p].value)
-            else:
+            elif passed[p] is None:
                 values[p].add(_NON_LITERAL)
+            else:
+                values[p].add(_literal(passed[p]))
     return values
 
 
 def _fixed_switches() -> set[str]:
-    """"<module>::<function>(<parameter>)" for every on/off parameter
-    that production gives a single literal value (its default included)."""
+    """"<module>::<function>(<parameter>)" for every on/off or numeric
+    parameter that production gives a single literal value (its default
+    included)."""
     fixed = set()
     for key, (name, positional, params) in _switch_params().items():
         for p, seen in _call_values(name, positional, params).items():
@@ -299,8 +345,8 @@ def test_every_switch_takes_two_values_or_is_allowlisted():
     fixed = sorted(_fixed_switches() - KNOBS_ALLOWED.keys())
     assert not fixed, (
         "production gives these parameters one value only; delete the "
-        "parameter and the path it selects, or allowlist it with a "
-        f"reason: {fixed}"
+        "parameter and the path it selects (a dial becomes a module "
+        f"constant), or allowlist it with a reason: {fixed}"
     )
 
 

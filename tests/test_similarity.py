@@ -55,12 +55,13 @@ def test_brute_force_exact(emb, truth):
 @pytest.mark.parametrize(
     "fn,kwargs,min_recall",
     [
-        (lsh_topk, {"dim": 64, "n_planes": 5, "n_tables": 8}, 0.3),
-        (ivf_topk, {"n_centroids": 16, "n_probe": 4}, 0.2),
+        (lsh_topk, {"dim": 64, "k": K, "n_planes": 5, "n_tables": 8}, 0.3),
+        # ivf_topk's dials are module constants: top-5, 8 of 16 cells
+        (ivf_topk, {}, 0.2),
     ],
 )
 def test_ann_recall(emb, truth, fn, kwargs, min_recall):
-    res = fn(emb.filter(F.col("vec_id") < N_QUERIES), emb, k=K, **kwargs)
+    res = fn(emb.filter(F.col("vec_id") < N_QUERIES), emb, **kwargs)
     got: dict[int, set] = {}
     for r in res.collect():
         got.setdefault(r.query_id, set()).add(r.neighbor_id)
@@ -98,17 +99,15 @@ def test_recall_audit_floors(emb):
     # corpus recall tops out near the probe fraction with unbiased
     # seeding — see the ann_ivf_topk entry docstring
     ivf = recall_at_k(
-        ivf_topk(q, emb, k=K, n_centroids=16, n_probe=8),
+        ivf_topk(q, emb),
         exact,
         floor=0.2,
         mean_floor=0.6,
     ).collect()
     assert all(r.passed for r in ivf), ivf
 
-    found = embedding_near_dups(
-        emb, dim=64, threshold=0.35, n_planes=4, n_tables=16
-    )
-    truth = exact_near_dup_pairs(emb, threshold=0.35)
+    found = embedding_near_dups(emb, dim=64)
+    truth = exact_near_dup_pairs(emb)
     n_true = truth.count()
     n_hit = found.join(
         truth.select("vec_a", "vec_b"), ["vec_a", "vec_b"], "left_semi"
@@ -177,14 +176,16 @@ def test_signature_forms_agree(emb):
 
 
 def test_embedding_near_dups_are_true_pairs(emb):
-    pairs = embedding_near_dups(emb, dim=64, threshold=0.3, n_planes=4)
+    from studiocr_spark.operators.similarity import NEAR_DUP_COSINE
+
+    pairs = embedding_near_dups(emb, dim=64)
     rows = pairs.collect()
-    assert rows, "expected some near-dup pairs at threshold 0.3"
+    assert rows, f"expected some near-dup pairs at cosine {NEAR_DUP_COSINE}"
     vecs = {r.vec_id: np.array(r.embedding, dtype=np.float64) for r in emb.collect()}
     for r in rows:
         a, b = vecs[r.vec_a], vecs[r.vec_b]
         cos = float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
-        assert cos >= 0.3 - 1e-9
+        assert cos >= NEAR_DUP_COSINE - 1e-9
         assert abs(cos - r.cosine) < 1e-4
         assert r.vec_a < r.vec_b
 
@@ -215,13 +216,7 @@ def test_ivf_seeding_unbiased_on_id_correlated_corpus(spark):
             rows, "vec_id long, embedding array<double>"
         )
         qids = [int(ids[p]) for p in q_pos]
-        res = ivf_topk(
-            df.filter(F.col("vec_id").isin(qids)),
-            df,
-            k=K,
-            n_centroids=16,
-            n_probe=4,
-        )
+        res = ivf_topk(df.filter(F.col("vec_id").isin(qids)), df)
         got: dict[int, set] = {}
         for r in res.collect():
             got.setdefault(r.query_id, set()).add(r.neighbor_id)

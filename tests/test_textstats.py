@@ -77,7 +77,7 @@ def test_repetition_stats_semantics(spark):
         ],
         "doc_id long, text string",
     )
-    got = {r.doc_id: r for r in repetition_stats(docs, n=2).collect()}
+    got = {r.doc_id: r for r in repetition_stats(docs).collect()}
     assert (got[0].n_ngrams, got[0].n_unique) == (5, 2)
     assert got[0].dup_ngram_frac == 0.6
     assert got[1].dup_ngram_frac == 0.0

@@ -1,9 +1,10 @@
 """Scaling-efficiency evidence: same extract job at two parallelism levels.
 
 The north_rule requires >=0.8 throughput scaling efficiency from N to 4N
-executors; the sandbox proxy (per BASELINE.md) is ``local[8]`` vs
-``local[32]`` on identical input. Protocol notes (all visible in the
-output):
+executors; the single-host proxy is ``local[cores // 4]`` vs
+``local[cores]`` on identical input, with ``cores = os.cpu_count()``
+(BASELINE.md's history was taken at local[8] vs local[32] on a 32-core
+host). Protocol notes (all visible in the output):
 
 - Each measurement runs in a FRESH subprocess (one SparkSession per JVM).
 - Full-width warmup first (every Python worker spawned + imports done),
@@ -20,6 +21,7 @@ output):
   is reported separately for context.
 
 Usage: python tools/bench_scaling.py [n_docs] [low_cores] [high_cores]
+(defaults: 60000, max(1, cores // 4), cores)
 """
 
 from __future__ import annotations
@@ -126,8 +128,9 @@ def main() -> None:
     # (200-400 words, ~10x the test-corpus default) so the measurement is
     # extraction-compute-bound, as a real crawl corpus is.
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 60000
-    low = int(sys.argv[2]) if len(sys.argv) > 2 else 8
-    high = int(sys.argv[3]) if len(sys.argv) > 3 else 32
+    cores = os.cpu_count() or 1
+    low = int(sys.argv[2]) if len(sys.argv) > 2 else max(1, cores // 4)
+    high = int(sys.argv[3]) if len(sys.argv) > 3 else cores
 
     corpus = os.path.join(tempfile.gettempdir(), f"scale_pages_big_{n_docs}")
     if not os.path.exists(corpus):

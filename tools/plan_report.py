@@ -75,16 +75,16 @@ def main() -> None:
 
         return {
             "dedup_minhash_lsh": lambda spark, sf: minhash_lsh_dedup(
-                entry._t_wide(spark, sf, "documents"), threshold=0.3,
+                entry._t_wide(spark, sf, "documents"),
                 checkpoint_candidates=False,
             ),
             "dedup_simhash_pairs": lambda spark, sf: simhash_near_dups(
-                entry._t_wide(spark, sf, "documents"), bits=32,
-                max_hamming=3, checkpoint_banded=False,
+                entry._t_wide(spark, sf, "documents"),
+                checkpoint_banded=False,
             ),
             "dedup_ngram_jaccard": lambda spark, sf: ngram_jaccard_pairs(
-                entry._t(spark, sf, "documents"), threshold=0.3,
-                max_doc_freq=50, checkpoint_candidates=False,
+                entry._t(spark, sf, "documents"),
+                checkpoint_candidates=False,
             ),
             "line_dedup": _line_dedup_full,
         }
@@ -135,7 +135,8 @@ def main() -> None:
     out = [
         "# BENCH/PLANS — physical-plan vitals per gate entry",
         "",
-        f"Generated {stamp} by tools/plan_report.py at {sf_dir}.",
+        f"Generated {stamp} by tools/plan_report.py at "
+        f"{os.path.basename(os.path.normpath(sf_dir))}.",
         "Exchanges = shuffle exchanges in the submitted plan (broadcast",
         "exchanges excluded); hazards flag CartesianProduct and",
         "row-at-a-time Python UDFs (Arrow/pandas UDFs do not flag).",

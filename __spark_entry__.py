@@ -717,7 +717,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic embeddings are isotropic (no cluster structure), so cell
     membership of a query's true neighbors is nearly independent of the
     query's cell and recall tops out near the probe fraction
-    (measured 0.70-0.75 mean probing 8 of 16 cells across sf0.001-0.1).
+    (measured 0.70-0.75 mean probing the IVF_N_PROBE = 8 nearest of
+    IVF_N_CENTROIDS = 16 cells across sf0.001-0.1).
     Round-3's 0.9 mean was an artifact of first-N-by-id seeding: the
     audit queries (vec_id < 8) WERE the first 16 centroids, centering a
     cell on every query. The round-4 unbiased hash-ordered seeding

@@ -35,8 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# range_join dials: 10-minute time buckets (the median interval of the
-# range_join_events entry) and 8 salts per bucket
+# range_join dials: 10-minute time buckets (the width of the fixed
+# 600 s window of the range_join_events entry, so an interval spans at
+# most two buckets) and 8 salts per bucket
 RANGE_BUCKET_SECONDS = 600
 RANGE_SALT_BUCKETS = 8
 

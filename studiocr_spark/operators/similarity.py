@@ -28,6 +28,10 @@ from .textstats import round6
 NEAR_DUP_COSINE = 0.35
 NEAR_DUP_N_PLANES = 4
 NEAR_DUP_N_TABLES = 16
+# IVF ANN: top-k per query, coarse cells, and the cells each query probes
+IVF_K = 5
+IVF_N_CENTROIDS = 16
+IVF_N_PROBE = 8
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -388,21 +392,22 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF-style ANN: coarse quantize -> probe nearest cells -> top 5.
+    """IVF-style ANN: coarse quantize -> probe nearest cells -> top
+    ``IVF_K``.
 
-    Centroids are a deterministic hash-ordered sample of 16 vectors
-    (:func:`seed_centroids`), used as drawn: no Lloyd refinement.
-    Every corpus vector is assigned to its nearest centroid (broadcast
-    centroid join); each query probes its 8 nearest cells and
-    exact-cosine re-ranks within them.
+    Centroids are a deterministic hash-ordered sample of
+    ``IVF_N_CENTROIDS`` vectors (:func:`seed_centroids`), used as drawn:
+    no Lloyd refinement. Every corpus vector is assigned to its nearest
+    centroid (broadcast centroid join); each query probes its
+    ``IVF_N_PROBE`` nearest cells and exact-cosine re-ranks within them.
 
     Scale shape: the corpus-side assignment is a broadcast join + window
-    (one shuffle on cell), the query side touches 8/16 of the corpus
-    (the probe fraction is the standard recall/cost dial).
+    (one shuffle on cell), the query side touches ``IVF_N_PROBE /
+    IVF_N_CENTROIDS`` of the corpus — the standard recall/cost dial.
     """
     from pyspark.sql import Window
 
-    cents = seed_centroids(corpus, 16, id_col, vec_col)
+    cents = seed_centroids(corpus, IVF_N_CENTROIDS, id_col, vec_col)
 
     def assign(df: DataFrame, ident: str, vec: str, keep: int) -> DataFrame:
         scored = df.crossJoin(F.broadcast(cents)).select(
@@ -434,7 +439,7 @@ def ivf_topk(
         ),
         "query_id",
         "qv",
-        8,
+        IVF_N_PROBE,
     )
     scored = (
         c.join(q, "centroid_id")
@@ -452,7 +457,7 @@ def ivf_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
+        .filter(F.col("rank") <= IVF_K)
         .select(
             "query_id",
             "neighbor_id",

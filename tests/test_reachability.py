@@ -18,10 +18,11 @@ or a dial behind a parameter default. A parameter of a public top-level
 package function whose default is ``None``, ``True``, ``False`` or an
 int or float literal must take at least two different values across
 production call sites, or be listed in ``KNOBS_ALLOWED`` with its
-reason; a dial production sets one way is a module constant. An omitted argument counts as its
-default, a non-literal argument (a variable, a ``**kwargs`` spread) as a
-second value, and a call through ``from ... import f as g`` resolves to
-``f``. A function is matched by its bare name, and one never called
+reason; a dial production sets one way is a module constant. An
+omitted argument counts as its default, a constant argument (a string
+too) as its value, a non-literal argument (a variable, a ``**kwargs``
+spread) as a second value, and a call through ``from ... import f as
+g`` resolves to ``f``. A function is matched by its bare name, and one never called
 from production (a dispatch-table entry, say) takes only its defaults.
 Functions in ``ALLOWED`` are skipped.
 """
@@ -121,12 +122,14 @@ KNOBS_ALLOWED = {
         "config through pipeline_from_config"
     ),
     "gen.py::write_pages(min_words)": (
-        "corpus generator; bench.py writes its 200-400-word "
-        "throughput corpus with it"
+        "corpus generator: production (bench.py and the script "
+        "tools/bench_scaling.py writes) passes 200-400 words "
+        "only; the 8-60-word default is used by tests alone"
     ),
     "gen.py::write_pages(max_words)": (
-        "corpus generator; bench.py writes its 200-400-word "
-        "throughput corpus with it"
+        "corpus generator: production (bench.py and the script "
+        "tools/bench_scaling.py writes) passes 200-400 words "
+        "only; the 8-60-word default is used by tests alone"
     ),
 }
 
@@ -301,12 +304,14 @@ def _switch_params() -> dict[str, tuple[str, list[str], dict]]:
     return out
 
 
-def _call_values(name: str, positional: list[str], params) -> dict[str, set]:
-    """Values each of ``params`` takes across production calls of
-    ``name``: a literal's value, ``_NON_LITERAL`` for anything else, the
-    default when the argument is omitted."""
+def _call_values(
+    calls: list[ast.Call], positional: list[str], params
+) -> dict[str, set]:
+    """Values each of ``params`` takes across ``calls``: a constant's
+    value (a string too), a negated number's, ``_NON_LITERAL`` for
+    anything else, the default when the argument is omitted."""
     values = {p: set() for p in params}
-    for node in _production_calls().get(name, []):
+    for node in calls:
         passed: dict[str, ast.AST | None] = {}
         for i, arg in enumerate(node.args):
             if isinstance(arg, ast.Starred):
@@ -324,21 +329,53 @@ def _call_values(name: str, positional: list[str], params) -> dict[str, set]:
                 values[p].add(default)
             elif passed[p] is None:
                 values[p].add(_NON_LITERAL)
+            elif isinstance(passed[p], ast.Constant):
+                values[p].add(passed[p].value)
             else:
                 values[p].add(_literal(passed[p]))
     return values
+
+
+def _single_valued(
+    calls: list[ast.Call], positional: list[str], params
+) -> list[str]:
+    """The ``params`` that ``calls`` give a single literal value (the
+    default included)."""
+    return [
+        p
+        for p, seen in _call_values(calls, positional, params).items()
+        if _NON_LITERAL not in seen and len(seen) < 2
+    ]
 
 
 def _fixed_switches() -> set[str]:
     """"<module>::<function>(<parameter>)" for every on/off or numeric
     parameter that production gives a single literal value (its default
     included)."""
-    fixed = set()
-    for key, (name, positional, params) in _switch_params().items():
-        for p, seen in _call_values(name, positional, params).items():
-            if _NON_LITERAL not in seen and len(seen) < 2:
-                fixed.add(f"{key}({p})")
-    return fixed
+    return {
+        f"{key}({p})"
+        for key, (name, positional, params) in _switch_params().items()
+        for p in _single_valued(
+            _production_calls().get(name, []), positional, params
+        )
+    }
+
+
+def test_one_literal_value_is_reported_whatever_its_type():
+    """A parameter that every call sets to one constant is single-valued,
+    a string constant included; a second value or a non-literal
+    argument clears it."""
+    params = {"mode": None, "n": 2}
+
+    def single(src: str) -> list[str]:
+        calls = [
+            n for n in ast.walk(ast.parse(src)) if isinstance(n, ast.Call)
+        ]
+        return _single_valued(calls, ["mode", "n"], params)
+
+    assert single('f(mode="a")\nf("a", n=2)') == ["mode", "n"]
+    assert single('f(mode="a", n=-1)\nf(mode="b", n=-1)') == ["n"]
+    assert single("f(mode=m, n=3)\nf()") == []
 
 
 def test_every_switch_takes_two_values_or_is_allowlisted():

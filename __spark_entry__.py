@@ -808,29 +808,22 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 def asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: every purchase event gains the most recent prior (or
     simultaneous) click by the same user — click-through attribution.
-    Right side pre-aggregated to one row per (user, ts) via max_by for
-    determinism; the oracle is DuckDB's native ASOF LEFT JOIN."""
+    Clicks tied on (user, ts) resolve to the largest click_id through
+    asof_join's max_by pre-aggregate; the oracle is DuckDB's native
+    ASOF LEFT JOIN."""
     from studiocr_spark.operators.asof import asof_join
 
     ev = _t(spark, sf_dir, "events")
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy("user_id", "ts")
-        .agg(
-            F.max("event_id").alias("click_id"),
-            F.max_by("value", "event_id").alias("click_value"),
-        )
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "user_id",
+        "ts",
+        F.col("event_id").alias("click_id"),
+        F.col("value").alias("click_value"),
     )
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "event_id", "value"
     )
-    out = asof_join(
-        purchases, clicks, on="ts", by="user_id",
-        right_cols=["click_id", "click_value"],
-        # the groupBy above already guarantees one row per (user, ts);
-        # skip the foolproof-default max_by pre-agg (saves a shuffle)
-        dedup_right=None,
-    )
+    out = asof_join(purchases, clicks, right_cols=["click_id", "click_value"])
     return out.select(
         "event_id",
         "user_id",
@@ -1069,9 +1062,9 @@ def sample_top_n_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     per source) — reservoir-sample equivalent, stable across re-runs."""
     from studiocr_spark.operators.sampling import top_n_per_group
 
-    return top_n_per_group(
-        _t(spark, sf_dir, "documents"), n=10, group_col="source"
-    ).select("doc_id", "source", "lang")
+    return top_n_per_group(_t(spark, sf_dir, "documents"), n=10).select(
+        "doc_id", "source", "lang"
+    )
 
 
 MIXTURE_TARGET = {"en": 0.5, "es": 0.2, "de": 0.2, "fr": 0.1}
@@ -1084,9 +1077,9 @@ def rebalance_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical float arithmetic."""
     from studiocr_spark.operators.sampling import rebalance_mixture as rm
 
-    return rm(
-        _t(spark, sf_dir, "documents"), MIXTURE_TARGET, strata_col="lang"
-    ).select("doc_id", "lang")
+    return rm(_t(spark, sf_dir, "documents"), MIXTURE_TARGET).select(
+        "doc_id", "lang"
+    )
 
 
 def gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1267,7 +1260,7 @@ def stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .parquet(ev_dir)
     )
-    agg = windowed_event_counts(stream, window="1 hour")
+    agg = windowed_event_counts(stream)
     name = f"win_{uuid.uuid4().hex[:8]}"
     out = run_stream_to_memory(agg, name, spark)
     return out.select(

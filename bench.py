@@ -167,7 +167,7 @@ def main() -> None:
 
     import __spark_entry__ as entry
 
-    from studiocr_spark.gen import write_pages
+    from studiocr_spark.gen import generate_pages
     from studiocr_spark.operators.extract import blocks_from_raw, extract_raw
     from studiocr_spark.session import get_spark
 
@@ -218,10 +218,9 @@ def main() -> None:
         tempfile.gettempdir(), f"scale_pages_big_{EXTRACT_DOCS}"
     )
     if not os.path.exists(corpus_dir):
-        write_pages(
-            spark, EXTRACT_DOCS, corpus_dir, partitions=CPUS * 2,
-            min_words=200, max_words=400,
-        )
+        generate_pages(
+            spark, EXTRACT_DOCS, CPUS * 2, 200, 400
+        ).write.mode("overwrite").parquet(corpus_dir)
     from pyspark import StorageLevel
     from pyspark.sql import functions as F
 

@@ -113,9 +113,7 @@ def main(argv: list[str] | None = None) -> int:
         *docs.columns, "pred_lang", "quality"
     )
     if args.max_per_source > 0:
-        canon = top_n_per_group(
-            canon, n=args.max_per_source, group_col="source"
-        )
+        canon = top_n_per_group(canon, n=args.max_per_source)
     if args.sample < 1.0:
         canon = canon.filter(hash_unit(F.col("doc_id"), "clean") < args.sample)
     if args.decontam_eval:

@@ -23,6 +23,12 @@ run writes only the buckets it completed as a new immutable segment
 cost is proportional to the delta, not the corpus. Query through
 ``read_postings(spark, out + "/postings")``. Run --compact-index
 periodically to merge segments and vacuum the replaced dirs.
+
+The segment store keeps its SEGMENTS list, coverage files and writer
+lock with local file I/O, so --build-index and --compact-index need a
+local --output: a plain path or a ``file://`` URI (the job turns the
+latter into a plain path). Any other scheme with either flag stops the
+job before Spark starts.
 """
 
 from __future__ import annotations
@@ -31,6 +37,7 @@ import argparse
 import json
 import os
 import sys
+from urllib.parse import urlparse
 
 # under spark-submit, --py-files puts the package on the driver path; for
 # a bare `python jobs/extract_submit.py` run, the repo root does
@@ -62,6 +69,15 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--master", default=None,
                     help="override master (default: from spark-submit)")
     args = ap.parse_args(argv)
+    out = urlparse(args.output)
+    if out.scheme == "file":
+        args.output = out.path
+    elif out.scheme and (args.build_index or args.compact_index):
+        ap.error(
+            "--build-index and --compact-index need a local --output (a "
+            f"plain path or file://), got {out.scheme}://: the index "
+            "store writes its files with local file I/O"
+        )
 
     from pyspark.sql import functions as F
 

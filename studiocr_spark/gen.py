@@ -107,15 +107,3 @@ def generate_pages(
     ids = spark.range(0, n_docs, numPartitions=partitions)
     return ids.mapInPandas(gen, schema=PAGES_SCHEMA)
 
-
-def write_pages(
-    spark: SparkSession,
-    n_docs: int,
-    out_path: str,
-    partitions: int | None = None,
-    min_words: int = 8,
-    max_words: int = 60,
-) -> None:
-    generate_pages(
-        spark, n_docs, partitions, min_words, max_words
-    ).write.mode("overwrite").parquet(out_path)

@@ -23,11 +23,10 @@ DuckDB's ``ASOF LEFT JOIN`` (the oracle for the gate entry).
 
 Determinism: at most one right row per (key, time) must survive into
 the union — otherwise "the" last row at a timestamp is partition-order
-dependent. ``dedup_right`` (round 4) makes the API foolproof: the
-default ``"max_by"`` keeps, per (key, time), the right row maximizing
-its payload, first right_cols column first — callers that
-already pre-aggregate pay one extra no-op-cheap partial agg;
-``dedup_right=None`` opts out for inputs unique by construction.
+dependent. So the right side is first collapsed to one row per
+(key, time): the one maximizing its payload, first ``right_cols``
+column first. That pre-aggregate is the plan's second exchange, on
+(key, time); its map-side partial aggregate collapses ties before it.
 """
 
 from __future__ import annotations
@@ -45,75 +44,62 @@ RANGE_SALT_BUCKETS = 8
 def asof_join(
     left: DataFrame,
     right: DataFrame,
-    on: str = "ts",
-    by: str = "user_id",
     right_cols: list[str] | None = None,
-    prefix: str = "asof_",
-    dedup_right: str | None = "max_by",
 ) -> DataFrame:
-    """Left as-of-backward join (inclusive): every ``left`` row gains
-    ``prefix + c`` for each ``c`` in ``right_cols``, taken from the
-    latest ``right`` row with the same ``by`` and ``right[on] <=
-    left[on]``; nulls when no such row exists.
+    """Left as-of-backward join (inclusive) on ``ts`` per ``user_id``:
+    every ``left`` row gains ``asof_<c>`` for each ``c`` in
+    ``right_cols``, taken from the latest ``right`` row with the same
+    ``user_id`` and ``right.ts <= left.ts``; nulls when no such row
+    exists.
 
-    ``dedup_right="max_by"`` (default) first collapses right rows that
-    tie on (``by``, ``on``) to the one maximizing its payload struct in
-    ``right_cols`` order — a total order, so the carry is deterministic
-    regardless of partition order; fully identical rows are
-    interchangeable by definition. Payload columns must be orderable types
-    for this mode (no maps); pass ``dedup_right=None`` to skip the
-    pre-aggregate when the right side is unique by construction."""
+    Right rows that tie on (``user_id``, ``ts``) first collapse to the
+    one maximizing its payload struct in ``right_cols`` order — a total
+    order, so the carry is deterministic regardless of partition order;
+    fully identical rows are interchangeable by definition. Payload
+    columns must be orderable types (no maps)."""
     if right_cols is None:
         right_cols = [
-            c for c in right.columns if c not in (on, by)
+            c for c in right.columns if c not in ("ts", "user_id")
         ]
+    if not right_cols:
+        raise ValueError(
+            "asof_join needs at least one right payload column beyond "
+            "(ts, user_id): a payload-free right side has nothing to "
+            "carry, and nothing to tie-break on"
+        )
     # Join-semantics parity: a right row with NULL ts can never satisfy
     # l.ts >= r.ts, and a NULL key never equi-matches — but ascending
     # orderBy sorts nulls FIRST and window partitionBy groups nulls
     # TOGETHER, so unfiltered they would be carried into left rows.
-    right = right.filter(F.col(on).isNotNull() & F.col(by).isNotNull())
-    if dedup_right is not None:
-        if dedup_right != "max_by":
-            raise ValueError(
-                f"dedup_right must be 'max_by' or None, got {dedup_right!r}"
-            )
-        if not right_cols:
-            raise ValueError(
-                "asof_join with dedup_right='max_by' needs at least one "
-                "right payload column beyond (on, by) — pass right_cols "
-                "or dedup_right=None (a payload-free right side has "
-                "nothing to carry, and nothing to tie-break on)"
-            )
-        # one whole-row struct per (key, ts): max_by on a TOTAL order —
-        # partial-agg-friendly (map-side combine collapses ties before
-        # the (key, ts) exchange). The ordering struct is the whole
-        # payload, first right column leading (round-5 ADVICE fix:
-        # ordering by one column alone left rows that ALSO tie on it
-        # resolved partition-order-dependently; the full struct is a
-        # total order over the carried payload, so the winner is unique
-        # whenever the payloads differ at all). The ordering values sit
-        # inside a struct because max_by IGNORES rows whose ordering
-        # value is NULL, which would silently drop a (key, ts) whose
-        # only row carries a null first column — a struct with null
-        # fields is never null itself (null fields sort lowest).
-        row = F.struct(*[F.col(c) for c in right_cols])
-        picked = right.groupBy(by, on).agg(F.max_by(row, row).alias("_row"))
-        right = picked.select(
-            by, on, *[F.col("_row").getField(c).alias(c) for c in right_cols]
-        )
-    carry = F.struct(*[F.col(c) for c in right_cols])
-    r = right.select(
-        F.col(by),
-        F.col(on),
-        F.lit(0).alias("_tag"),
-        carry.alias("_carry"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c)
-          for c in left.columns if c not in (on, by)],
+    right = right.filter(
+        F.col("ts").isNotNull() & F.col("user_id").isNotNull()
     )
-    l_extra = [c for c in left.columns if c not in (on, by)]
+    # one whole-row struct per (key, ts): max_by on a TOTAL order —
+    # partial-agg-friendly (map-side combine collapses ties before the
+    # (key, ts) exchange). The ordering struct is the whole payload,
+    # first right column leading: ordering by one column alone would
+    # leave rows that ALSO tie on it resolved partition-order-
+    # dependently. The ordering values sit inside a struct because
+    # max_by IGNORES rows whose ordering value is NULL, which would
+    # silently drop a (key, ts) whose only row carries a null first
+    # column — a struct with null fields is never null itself (null
+    # fields sort lowest).
+    row = F.struct(*[F.col(c) for c in right_cols])
+    picked = right.groupBy("user_id", "ts").agg(
+        F.max_by(row, row).alias("_row")
+    )
+    r = picked.select(
+        "user_id",
+        "ts",
+        F.lit(0).alias("_tag"),
+        F.col("_row").alias("_carry"),
+        *[F.lit(None).cast(left.schema[c].dataType).alias(c)
+          for c in left.columns if c not in ("ts", "user_id")],
+    )
+    l_extra = [c for c in left.columns if c not in ("ts", "user_id")]
     l = left.select(
-        F.col(by),
-        F.col(on),
+        "user_id",
+        "ts",
         F.lit(1).alias("_tag"),
         F.lit(None).cast(
             r.schema["_carry"].dataType
@@ -121,33 +107,25 @@ def asof_join(
         *l_extra,
     )
     w = (
-        Window.partitionBy(by)
-        .orderBy(on, "_tag")
+        Window.partitionBy("user_id")
+        .orderBy("ts", "_tag")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     filled = r.unionByName(l).withColumn(
         "_last", F.last("_carry", ignorenulls=True).over(w)
     )
     return filled.filter(F.col("_tag") == 1).select(
-        by,
-        on,
+        "user_id",
+        "ts",
         *l_extra,
-        *[
-            F.col("_last").getField(c).alias(f"{prefix}{c}")
-            for c in right_cols
-        ],
+        *[F.col("_last").getField(c).alias(f"asof_{c}") for c in right_cols],
     )
 
 
-def range_join(
-    points: DataFrame,
-    intervals: DataFrame,
-    point_ts: str = "ts",
-    start_ts: str = "start",
-    end_ts: str = "end",
-) -> DataFrame:
-    """Point-in-interval join (half-open: start <= point < end) without
-    a quadratic range theta join.
+def range_join(points: DataFrame, intervals: DataFrame) -> DataFrame:
+    """Point-in-interval join (half-open: ``start <= ts < end``, with
+    ``ts`` a ``points`` column and ``start``/``end`` ``intervals``
+    columns) without a quadratic range theta join.
 
     Catalyst plans a bare inequality join as BroadcastNestedLoopJoin or
     a cartesian — O(|points| x |intervals|). The scale shape here is
@@ -181,14 +159,14 @@ def range_join(
         return F.unix_timestamp(F.col(c))
 
     p = points.withColumn(
-        "_bucket", F.floor(epoch(point_ts) / RANGE_BUCKET_SECONDS)
+        "_bucket", F.floor(epoch("ts") / RANGE_BUCKET_SECONDS)
     )
     i = intervals.withColumn(
         "_bucket",
         F.explode(
             F.sequence(
-                F.floor(epoch(start_ts) / RANGE_BUCKET_SECONDS),
-                F.floor(epoch(end_ts) / RANGE_BUCKET_SECONDS),
+                F.floor(epoch("start") / RANGE_BUCKET_SECONDS),
+                F.floor(epoch("end") / RANGE_BUCKET_SECONDS),
             )
         ),
     )
@@ -208,8 +186,7 @@ def range_join(
     return (
         p.join(i, keys)
         .filter(
-            (F.col(point_ts) >= F.col(start_ts))
-            & (F.col(point_ts) < F.col(end_ts))
+            (F.col("ts") >= F.col("start")) & (F.col("ts") < F.col("end"))
         )
         .drop(*keys)
     )

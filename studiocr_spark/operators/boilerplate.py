@@ -160,19 +160,17 @@ MAIN_TEXT_SCHEMA = T.StructType(
 )
 
 
-def strip_boilerplate(
-    df: DataFrame, url_col: str = "url", html_col: str = "html_text"
-) -> DataFrame:
+def strip_boilerplate(df: DataFrame) -> DataFrame:
     """(url, main_text, n_blocks, n_content_blocks).
 
-    ``html_col`` holds HTML as a string column (decode binary payloads
+    ``html_text`` holds HTML as a string column (decode binary payloads
     upstream). One parse per row, Arrow-batched.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
+            for url, html in zip(pdf["url"], pdf["html_text"]):
                 if html is None:
                     rows.append((url, None, None, None))
                     continue
@@ -186,6 +184,4 @@ def strip_boilerplate(
                 rows, columns=MAIN_TEXT_SCHEMA.fieldNames()
             )
 
-    return df.select(
-        df[url_col].alias("url"), df[html_col].alias(html_col)
-    ).mapInPandas(run, MAIN_TEXT_SCHEMA)
+    return df.select("url", "html_text").mapInPandas(run, MAIN_TEXT_SCHEMA)

@@ -35,15 +35,10 @@ MIN_SHARED = 2
 MAX_BROADCAST_EVAL_DOCS = 50_000
 
 
-def contamination_pairs(
-    docs: DataFrame,
-    eval_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    eval_id_col: str = "eval_id",
-) -> DataFrame:
-    """(doc_id, eval_id, shared_ngrams): training docs sharing at least
-    ``MIN_SHARED`` distinct word ``NGRAM_N``-grams with an eval doc.
+def contamination_pairs(docs: DataFrame, eval_docs: DataFrame) -> DataFrame:
+    """(doc_id, eval_id, shared_ngrams): training docs (``doc_id``,
+    ``text``) sharing at least ``MIN_SHARED`` distinct word
+    ``NGRAM_N``-grams with an eval doc (``eval_id``, ``text``).
 
     Both sides shingle with the same tokenizer as the dedup family
     (distinct n-grams per doc), so ``shared_ngrams`` counts DISTINCT
@@ -56,37 +51,22 @@ def contamination_pairs(
     rows; past that it falls back to a plain shuffle join instead of
     OOM-ing the driver/executors.
     """
-    d = shingle_table(
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col)),
-        text_col,
-        NGRAM_N,
-    ).select(F.col("doc_id").alias(id_col), "shingle")
+    d = shingle_table(docs, NGRAM_N)
     e = shingle_table(
-        eval_docs.select(
-            F.col(eval_id_col).alias("doc_id"), F.col(text_col)
-        ),
-        text_col,
-        NGRAM_N,
-    ).select(F.col("doc_id").alias(eval_id_col), "shingle")
+        eval_docs.select(F.col("eval_id").alias("doc_id"), "text"), NGRAM_N
+    ).select(F.col("doc_id").alias("eval_id"), "shingle")
     if eval_docs.count() <= MAX_BROADCAST_EVAL_DOCS:
         e = F.broadcast(e)
     return (
         d.join(e, "shingle")
-        .groupBy(id_col, eval_id_col)
+        .groupBy("doc_id", "eval_id")
         .agg(F.count("*").cast("long").alias("shared_ngrams"))
         .filter(F.col("shared_ngrams") >= MIN_SHARED)
     )
 
 
-def decontaminate(
-    docs: DataFrame,
-    eval_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def decontaminate(docs: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """``docs`` minus every contaminated document (left-anti against the
     flagged ids). Keeps all caller columns."""
-    flagged = contamination_pairs(
-        docs, eval_docs, text_col, id_col=id_col
-    ).select(id_col).distinct()
-    return docs.join(flagged, id_col, "left_anti")
+    flagged = contamination_pairs(docs, eval_docs).select("doc_id").distinct()
+    return docs.join(flagged, "doc_id", "left_anti")

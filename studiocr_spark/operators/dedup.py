@@ -62,13 +62,10 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def keep_canonical(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    digest: bool = True,
+    docs: DataFrame, text_col: str = "text", digest: bool = True
 ) -> DataFrame:
-    """Filter ``docs`` to one canonical row (min id) per exact content —
-    the in-pipeline form of exact dedup.
+    """Filter ``docs`` to one canonical row (min ``doc_id``) per exact
+    content — the in-pipeline form of exact dedup.
 
     ``exact_duplicates`` labels every row (groupBy digest + join back =
     two exchanges); a cleaning pipeline only needs the KEPT rows, which
@@ -87,8 +84,8 @@ def keep_canonical(
     key = F.md5(F.col(text_col)) if digest else F.col(text_col)
     w = Window.partitionBy(key)
     return (
-        docs.withColumn("_canon_id", F.min(id_col).over(w))
-        .filter(F.col(id_col) == F.col("_canon_id"))
+        docs.withColumn("_canon_id", F.min("doc_id").over(w))
+        .filter(F.col("doc_id") == F.col("_canon_id"))
         .drop("_canon_id")
     )
 
@@ -152,8 +149,8 @@ def _py_shingles(t: str | None, n: int) -> list[str]:
     return list(dict.fromkeys(_py_ngrams(t, n)))
 
 
-def shingle_table(docs: DataFrame, text_col: str = "text", n: int = 2) -> DataFrame:
-    """(doc_id, shingle) exploded distinct shingles.
+def shingle_table(docs: DataFrame, n: int = 2) -> DataFrame:
+    """(doc_id, shingle) exploded distinct shingles of ``text``.
 
     Arrow pandas-UDF shingler (:func:`_py_shingles`), ~2x cold / ~10x
     warm vs the expression form: 1.5M interpreted slice+array_join
@@ -165,7 +162,7 @@ def shingle_table(docs: DataFrame, text_col: str = "text", n: int = 2) -> DataFr
         return texts.map(lambda t: _py_shingles(t, n))
 
     return docs.select(
-        "doc_id", F.explode(_shingles(text_col)).alias("shingle")
+        "doc_id", F.explode(_shingles("text")).alias("shingle")
     )
 
 
@@ -330,9 +327,7 @@ def _candidate_docs(pairs: DataFrame) -> DataFrame:
     )
 
 
-def jaccard_verify(
-    pairs: DataFrame, docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def jaccard_verify(pairs: DataFrame, docs: DataFrame) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs; keep those at or
     above ``JACCARD_THRESHOLD``.
 
@@ -350,9 +345,7 @@ def jaccard_verify(
     """
     # distinct (doc_id, shingle) of candidate docs only
     sh = shingle_table(
-        docs.join(_candidate_docs(pairs), "doc_id", "left_semi"),
-        text_col,
-        SHINGLE_N,
+        docs.join(_candidate_docs(pairs), "doc_id", "left_semi"), SHINGLE_N
     ).localCheckpoint(eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
@@ -439,9 +432,7 @@ def _jaccard_verify_arrays(pairs: DataFrame, arrs: DataFrame) -> DataFrame:
 
 
 def minhash_lsh_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    checkpoint_candidates: bool = True,
+    docs: DataFrame, checkpoint_candidates: bool = True
 ) -> DataFrame:
     """End-to-end MinHash-LSH near-dup pairs (verified Jaccard).
 
@@ -466,7 +457,7 @@ def minhash_lsh_dedup(
 
     combo = ckpt(docs.select(
         "doc_id",
-        _sig_and_shingles_udf()(text_col).alias("s"),
+        _sig_and_shingles_udf()("text").alias("s"),
     ))
     banded = _band_keys_from_mh(
         combo.select("doc_id", F.col("s.mh").alias("mh"))
@@ -488,10 +479,9 @@ def minhash_lsh_dedup(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash(
-    docs: DataFrame, text_col: str = "text", bits: int = 16
-) -> DataFrame:
-    """(doc_id, simhash): per-bit majority vote over token md5 digests.
+def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
+    """(doc_id, simhash): per-bit majority vote over the md5 digests of
+    the ``text`` tokens.
 
     Bit b of token t = parity of hex digit b of md5(t) (one digit per
     bit, so bits <= 32). simhash bit b is set iff sum over tokens of
@@ -559,14 +549,12 @@ def simhash(
         return pd.Series(out, dtype="object")
 
     return docs.select(
-        "doc_id", _simhash(text_col).alias("simhash")
+        "doc_id", _simhash("text").alias("simhash")
     ).filter(F.col("simhash").isNotNull())
 
 
 def simhash_near_dups(
-    docs: DataFrame,
-    text_col: str = "text",
-    checkpoint_banded: bool = True,
+    docs: DataFrame, checkpoint_banded: bool = True
 ) -> DataFrame:
     """(doc_a, doc_b, hamming) pairs within Hamming distance
     ``SIMHASH_MAX_HAMMING`` of the ``SIMHASH_PAIR_BITS``-bit simhash.
@@ -584,7 +572,7 @@ def simhash_near_dups(
     of twice per action — same escape-hatch rationale as
     minhash_lsh_dedup's checkpoint_candidates.
     """
-    sh = simhash(docs, text_col, SIMHASH_PAIR_BITS)
+    sh = simhash(docs, SIMHASH_PAIR_BITS)
     n_bands = SIMHASH_MAX_HAMMING + 1
     base, rem = divmod(SIMHASH_PAIR_BITS, n_bands)
     widths = [base + (1 if i < rem else 0) for i in range(n_bands)]
@@ -632,12 +620,9 @@ def simhash_near_dups(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-) -> DataFrame:
-    """(doc_id, cluster_id): connected components over near-dup pairs.
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id): connected components over near-dup pairs
+    (``doc_a``, ``doc_b``).
 
     Min-label propagation WITH pointer jumping: every node starts
     labeled with its own id; each round it adopts the minimum label
@@ -660,10 +645,10 @@ def connected_components(
     without GraphX/graphframes.
     """
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(
             pairs.select(
-                F.col(b_col).alias("src"), F.col(a_col).alias("dst")
+                F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
             )
         )
         .distinct()
@@ -757,9 +742,7 @@ def connected_components(
 
 
 def ngram_jaccard_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    checkpoint_candidates: bool = True,
+    docs: DataFrame, checkpoint_candidates: bool = True
 ) -> DataFrame:
     """Near-dup pairs via shared-shingle blocking + exact Jaccard.
 
@@ -774,7 +757,7 @@ def ngram_jaccard_pairs(
     set is ~every distinct shingle — billions of rows at 100 TB, never
     broadcastable.
     """
-    sh = shingle_table(docs, text_col, SHINGLE_N)
+    sh = shingle_table(docs, SHINGLE_N)
     # the shingle table feeds THREE consumers per action (the hot-set
     # aggregate and both sides of the self-join), so the tokenize+
     # shingle Arrow pass used to run 3x — the repo's twice-referenced-
@@ -805,21 +788,15 @@ def ngram_jaccard_pairs(
     # tests) or avoids localCheckpoint under dynamic allocation.
     if checkpoint_candidates:
         pairs = pairs.localCheckpoint(eager=False)
-    return jaccard_verify(pairs, docs, text_col)
+    return jaccard_verify(pairs, docs)
 
 
-def line_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_doc_freq: int = 2,
-    line_sep: str = "\n",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(doc_id, n_lines, n_kept, clean_text): drop every line whose
-    exact content appears in at least ``min_doc_freq`` DISTINCT
-    documents — RefinedWeb/C4-style line-level exact dedup (the pass
-    that strips boilerplate lines like nav menus and cookie banners
-    that repeat across a site).
+def line_dedup(docs: DataFrame, min_doc_freq: int = 2) -> DataFrame:
+    """(doc_id, n_lines, n_kept, clean_text): split ``text`` into
+    lines and drop every line whose exact content appears in at least
+    ``min_doc_freq`` DISTINCT documents — RefinedWeb/C4-style
+    line-level exact dedup (the pass that strips boilerplate lines like
+    nav menus and cookie banners that repeat across a site).
 
     Scale shape: lines explode once; the document-frequency aggregate
     groups on the md5 DIGEST of the line (32 bytes through the shuffle,
@@ -843,42 +820,36 @@ def line_dedup(
     subplan executes twice (the repo twice-referenced-subplan rule;
     halved the line_dedup gate entry at sf0.1).
     """
-    docs = docs.withColumn(
-        text_col, F.coalesce(F.col(text_col), F.lit(""))
-    )
+    docs = docs.withColumn("text", F.coalesce(F.col("text"), F.lit("")))
     lines = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), line_sep)).alias(
-            "line_no", "line"
-        ),
+        "doc_id",
+        F.posexplode(F.split("text", "\n")).alias("line_no", "line"),
     ).withColumn("digest", F.md5("line"))
     hot = (
         lines.groupBy("digest")
-        .agg(F.count_distinct(F.col(id_col)).alias("line_df"))
+        .agg(F.count_distinct("doc_id").alias("line_df"))
         .filter(F.col("line_df") >= min_doc_freq)
         .select("digest")
     )
     kept = lines.join(hot, "digest", "left_anti")
-    rebuilt = kept.groupBy(id_col).agg(
+    rebuilt = kept.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_kept"),
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("line_no", "line"))),
                 lambda s: s["line"],
             ),
-            line_sep,
+            "\n",
         ).alias("clean_text"),
     )
     totals = docs.select(
-        F.col(id_col),
-        F.size(F.split(F.col(text_col), line_sep))
-        .cast("long")
-        .alias("n_lines"),
+        "doc_id",
+        F.size(F.split("text", "\n")).cast("long").alias("n_lines"),
     )
     return (
-        totals.join(rebuilt, id_col, "left")
+        totals.join(rebuilt, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "n_lines",
             F.coalesce("n_kept", F.lit(0).cast("long")).alias("n_kept"),
             F.coalesce("clean_text", F.lit("")).alias("clean_text"),
@@ -887,18 +858,14 @@ def line_dedup(
 
 
 def keep_best_in_clusters(
-    scored_docs: DataFrame,
-    pairs: DataFrame,
-    score_col: str = "quality",
-    id_col: str = "doc_id",
+    scored_docs: DataFrame, pairs: DataFrame
 ) -> DataFrame:
-    """(doc_id, cluster_id, <score_col>, keep): near-dup clusters keep
-    their HIGHEST-SCORING member instead of the lowest id.
+    """(doc_id, cluster_id, quality, keep): near-dup clusters keep
+    their HIGHEST-``quality`` member instead of the lowest id.
 
     The production keep policy for near-dup dedup: min-id keeps
     whichever copy happened to be crawled first; keeping the argmax of
-    a quality signal (language quality, length, recency score — any
-    per-doc column) retains the best representative. Clusters come
+    a quality signal retains the best representative. Clusters come
     from :func:`connected_components` over ``pairs``; documents in no
     pair are singleton clusters of themselves and always kept. Ties
     break by min id (deterministic).
@@ -910,19 +877,19 @@ def keep_best_in_clusters(
     """
     from pyspark.sql import Window
 
-    labels = connected_components(pairs, a_col="doc_a", b_col="doc_b")
-    joined = scored_docs.select(F.col(id_col), F.col(score_col)).join(
-        labels.withColumnRenamed("doc_id", id_col), id_col, "left"
+    labels = connected_components(pairs)
+    joined = scored_docs.select("doc_id", "quality").join(
+        labels, "doc_id", "left"
     )
     clustered = joined.withColumn(
-        "cluster_id", F.coalesce("cluster_id", F.col(id_col))
+        "cluster_id", F.coalesce("cluster_id", "doc_id")
     )
     w = Window.partitionBy("cluster_id").orderBy(
-        F.desc(score_col), F.asc(id_col)
+        F.desc("quality"), F.asc("doc_id")
     )
     return clustered.select(
-        id_col,
+        "doc_id",
         "cluster_id",
-        score_col,
+        "quality",
         (F.row_number().over(w) == 1).alias("keep"),
     )

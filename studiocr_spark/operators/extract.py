@@ -192,8 +192,9 @@ def blocks_from_raw(raw_df: DataFrame) -> DataFrame:
     return b.filter(non_whitespace_filter(F.col("text")))
 
 
-def assemble_doc_text(raw_df: DataFrame, sep: str = " ") -> DataFrame:
-    """(url, extracted_text): page texts joined in page order.
+def assemble_doc_text(raw_df: DataFrame) -> DataFrame:
+    """(url, extracted_text): page texts joined by one space in page
+    order.
 
     The byte-identical target: for the synthetic corpus,
     ``extracted_text == pages.text`` per url. The only wide op of the
@@ -211,7 +212,7 @@ def assemble_doc_text(raw_df: DataFrame, sep: str = " ") -> DataFrame:
                     ),
                     lambda s: s["page_text"],
                 ),
-                sep,
+                " ",
             ).alias("extracted_text"),
             F.count("*").alias("n_pages"),
         )

@@ -33,20 +33,18 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
-def redact_pii(
-    docs: DataFrame, text_col: str = "text", out_col: str = "redacted_text"
-) -> DataFrame:
+def redact_pii(docs: DataFrame) -> DataFrame:
     """Append per-kind match counts (``n_email``/``n_ipv4``/``n_phone``,
-    counted on the ORIGINAL text) and ``out_col`` with every match
+    counted on the ORIGINAL ``text``) and ``redacted_text`` with every match
     replaced by ``<kind>`` — replacements applied in PII_PATTERNS order.
     """
     out = docs
     for kind, pat in PII_PATTERNS.items():
         out = out.withColumn(
             f"n_{kind}",
-            F.regexp_count(F.col(text_col), F.lit(pat)).cast("long"),
+            F.regexp_count(F.col("text"), F.lit(pat)).cast("long"),
         )
-    red = F.col(text_col)
+    red = F.col("text")
     for kind, pat in PII_PATTERNS.items():
         red = F.regexp_replace(red, pat, f"<{kind}>")
-    return out.withColumn(out_col, red)
+    return out.withColumn("redacted_text", red)

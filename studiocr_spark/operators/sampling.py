@@ -45,12 +45,11 @@ def stratified_sample(
     docs: DataFrame,
     fractions: dict[str, float],
     strata_col: str = "stratum",
-    id_col: str = "doc_id",
     salt: str = "sample",
 ) -> DataFrame:
     """Keep each row with its stratum's probability, deterministically.
 
-    A row survives iff ``hash_unit(salt, id) < fractions[stratum]``.
+    A row survives iff ``hash_unit(salt, doc_id) < fractions[stratum]``.
     Unknown strata are dropped. Narrow (no shuffle, no
     RNG): the filter pushes to the scan side and the same ids survive
     on every run/cluster — what an incremental 100 TB pipeline needs
@@ -61,18 +60,16 @@ def stratified_sample(
         frac = F.when(
             F.col(strata_col) == value, F.lit(float(f))
         ).otherwise(frac)
-    return docs.filter(hash_unit(F.col(id_col), salt) < frac)
+    return docs.filter(hash_unit(F.col("doc_id"), salt) < frac)
 
 
 def pack_sequences(
     docs: DataFrame,
     budget: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_buckets: int = 8,
-    salt: str = "pack",
 ) -> DataFrame:
-    """(id, bucket, shard, n_tokens): fixed-token-budget shard packing.
+    """(doc_id, bucket, shard, n_tokens): fixed-token-budget shard
+    packing.
 
     Documents are hash-bucketed (uniform md5 keys — each bucket packs
     independently in parallel; a global pack would serialize 100 TB
@@ -82,21 +79,22 @@ def pack_sequences(
     current doc — so a shard can overrun the budget only by its final
     document, and a doc larger than the budget gets a shard to itself.
 
-    A document's tokens are the whitespace tokens of ``text_col``.
-    Fully deterministic; one shuffle (the per-bucket window sort).
+    A document's tokens are the whitespace tokens of ``text``; its
+    bucket hashes ``doc_id`` salted with ``"pack"``. Fully
+    deterministic; one shuffle (the per-bucket window sort).
     """
     # words_of semantics (textstats.py): filtered split, so empty/
     # whitespace-only docs count 0 tokens, not 1 phantom — a bare split
     # counts a leading-tab doc one token high
     from .textstats import words_of
 
-    tokens = F.size(words_of(F.col(text_col)))
+    tokens = F.size(words_of(F.col("text")))
     bucket = (
         F.conv(
             F.substring(
                 F.md5(
                     F.concat(
-                        F.lit(salt), F.lit("|"), F.col(id_col).cast("string")
+                        F.lit("pack|"), F.col("doc_id").cast("string")
                     )
                 ),
                 1,
@@ -108,18 +106,18 @@ def pack_sequences(
         % n_buckets
     )
     staged = docs.select(
-        F.col(id_col),
+        "doc_id",
         bucket.alias("bucket"),
         tokens.cast("bigint").alias("n_tokens"),
     )
     w = (
         Window.partitionBy("bucket")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cum = F.sum("n_tokens").over(w)
     return staged.select(
-        id_col,
+        "doc_id",
         "bucket",
         F.floor((cum - F.col("n_tokens")) / budget).cast("int").alias(
             "shard"
@@ -128,25 +126,20 @@ def pack_sequences(
     )
 
 
-def top_n_per_group(
-    docs: DataFrame,
-    n: int,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    salt: str = "topn",
-) -> DataFrame:
-    """Deterministic per-group uniform subsample: the ``n`` rows of each
-    group with the smallest salted id-hash — a reservoir-sample
-    equivalent whose membership is a pure function of (salt, id), so
-    re-runs and incremental appends keep identical rows per group.
+def top_n_per_group(docs: DataFrame, n: int) -> DataFrame:
+    """Deterministic per-``source`` uniform subsample: the ``n`` rows of
+    each source with the smallest ``"topn"``-salted ``doc_id`` hash — a
+    reservoir-sample equivalent whose membership is a pure function of
+    the id, so re-runs and incremental appends keep identical rows per
+    source.
 
     One shuffle (the per-group window); rank ties broken by id so the
     ordering is total even under (astronomically unlikely) hash
     collisions. The standard "cap any one domain's contribution" move
     in crawl curation.
     """
-    h = hash_unit(F.col(id_col), salt)
-    w = Window.partitionBy(group_col).orderBy(h.asc(), F.col(id_col).asc())
+    h = hash_unit(F.col("doc_id"), "topn")
+    w = Window.partitionBy("source").orderBy(h.asc(), F.col("doc_id").asc())
     return (
         docs.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= n)
@@ -154,17 +147,10 @@ def top_n_per_group(
     )
 
 
-def rebalance_mixture(
-    docs: DataFrame,
-    target: dict[str, float],
-    strata_col: str = "lang",
-    id_col: str = "doc_id",
-    salt: str = "mix",
-) -> DataFrame:
-    """Downsample strata so the OUTPUT approximates the ``target``
-    mixture (curriculum/data-mixing weights, e.g. language or source
-    proportions for a training run) — by downsampling only, never
-    upsampling.
+def rebalance_mixture(docs: DataFrame, target: dict[str, float]) -> DataFrame:
+    """Downsample ``lang`` strata so the OUTPUT approximates the
+    ``target`` mixture (curriculum/data-mixing weights for a training
+    run) — by downsampling only, never upsampling.
 
     Let c_s be stratum counts and t_s the target shares. The largest
     achievable total is T = min over s (c_s / t_s); each stratum keeps
@@ -179,7 +165,7 @@ def rebalance_mixture(
     """
     counts = {
         r[0]: r[1]
-        for r in docs.groupBy(strata_col)
+        for r in docs.groupBy("lang")
         .agg(F.count("*").alias("c"))
         .collect()
     }
@@ -190,6 +176,4 @@ def rebalance_mixture(
         return docs.filter(F.lit(False))
     total = min(counts[s] / t for s, t in eligible.items())
     fractions = {s: total * t / counts[s] for s, t in eligible.items()}
-    return stratified_sample(
-        docs, fractions, strata_col=strata_col, id_col=id_col, salt=salt
-    )
+    return stratified_sample(docs, fractions, strata_col="lang", salt="mix")

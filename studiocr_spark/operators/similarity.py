@@ -1,4 +1,6 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over ``embedding`` columns (array<float>) keyed by
+``vec_id`` — the embeddings table's schema; every operator here reads
+those two columns.
 
 - brute-force cosine top-k: the exactness baseline. Dot products run as
   sequential ``F.aggregate`` folds over zipped arrays (JVM-side,
@@ -100,12 +102,17 @@ def vectorized_cosine(a: Column, b: Column) -> Column:
     return _cos(a, b)
 
 
+def _renamed(df: DataFrame, ident: str, vec: str) -> DataFrame:
+    """``df``'s (vec_id, embedding) columns, renamed (ident, vec)."""
+    return df.select(
+        F.col("vec_id").alias(ident), F.col("embedding").alias(vec)
+    )
+
+
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     vectorized: bool = False,
 ) -> DataFrame:
     """(query_id, neighbor_id, cosine, rank): exact top-k per query.
@@ -121,12 +128,8 @@ def brute_force_topk(
     from pyspark.sql import Window
 
     cos = vectorized_cosine if vectorized else cosine_sim
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
+    q = _renamed(queries, "query_id", "qv")
+    c = _renamed(corpus, "neighbor_id", "cv")
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -266,8 +269,6 @@ def lsh_topk(
     n_planes: int = 8,
     n_tables: int = 4,
     multiprobe: bool = False,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: bucket equi-join on hyperplane signatures,
     exact cosine re-rank within buckets.
@@ -290,10 +291,10 @@ def lsh_topk(
         # as plain int ops on the materialized column (Catalyst would
         # not CSE a per-probe signature subtree)
         sigged = df.select(
-            F.col(id_col).alias(ident),
-            F.col(vec_col).alias(vec_alias),
+            F.col("vec_id").alias(ident),
+            F.col("embedding").alias(vec_alias),
             hyperplane_signatures(
-                F.col(vec_col), dim, n_planes, n_tables
+                F.col("embedding"), dim, n_planes, n_tables
             ).alias("_sigs"),
         )
         per_table = []
@@ -327,12 +328,8 @@ def lsh_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
+    qv = _renamed(queries, "query_id", "qv")
+    cv = _renamed(corpus, "neighbor_id", "cv")
     scored = (
         cand.join(F.broadcast(qv), "query_id")
         .join(cv, "neighbor_id")
@@ -357,12 +354,7 @@ def lsh_topk(
     )
 
 
-def seed_centroids(
-    corpus: DataFrame,
-    n_centroids: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def seed_centroids(corpus: DataFrame, n_centroids: int) -> DataFrame:
     """(centroid_id, cvec): deterministic UNBIASED initial centroids — the
     ``n_centroids`` corpus vectors minimizing ``md5(id)``.
 
@@ -374,24 +366,13 @@ def seed_centroids(
     deterministic and engine-portable; the plan is still a cheap
     TakeOrdered (no shuffle of the corpus). Ties broken by id (md5
     collisions aside, there are none)."""
-    return (
-        corpus.orderBy(
-            F.md5(F.col(id_col).cast("string")), F.col(id_col)
-        )
-        .limit(n_centroids)
-        .select(
-            F.col(id_col).alias("centroid_id"),
-            F.col(vec_col).alias("cvec"),
-        )
-    )
+    seeds = corpus.orderBy(
+        F.md5(F.col("vec_id").cast("string")), F.col("vec_id")
+    ).limit(n_centroids)
+    return _renamed(seeds, "centroid_id", "cvec")
 
 
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_topk(queries: DataFrame, corpus: DataFrame) -> DataFrame:
     """IVF-style ANN: coarse quantize -> probe nearest cells -> top
     ``IVF_K``.
 
@@ -407,7 +388,7 @@ def ivf_topk(
     """
     from pyspark.sql import Window
 
-    cents = seed_centroids(corpus, IVF_N_CENTROIDS, id_col, vec_col)
+    cents = seed_centroids(corpus, IVF_N_CENTROIDS)
 
     def assign(df: DataFrame, ident: str, vec: str, keep: int) -> DataFrame:
         scored = df.crossJoin(F.broadcast(cents)).select(
@@ -426,20 +407,10 @@ def ivf_topk(
         )
 
     c = assign(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-        ),
-        "neighbor_id",
-        "cv",
-        1,
+        _renamed(corpus, "neighbor_id", "cv"), "neighbor_id", "cv", 1
     )
     q = assign(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        ),
-        "query_id",
-        "qv",
-        IVF_N_PROBE,
+        _renamed(queries, "query_id", "qv"), "query_id", "qv", IVF_N_PROBE
     )
     scored = (
         c.join(q, "centroid_id")
@@ -523,11 +494,7 @@ def recall_at_k(
     ).orderBy("query_id")
 
 
-def exact_near_dup_pairs(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def exact_near_dup_pairs(vectors: DataFrame) -> DataFrame:
     """(vec_a, vec_b, cosine): EXACT all-pairs ground truth (cosine at
     least ``NEAR_DUP_COSINE``) for near-dup recall audits. O(N^2) —
     audit/test scale only; the production path is
@@ -537,9 +504,7 @@ def exact_near_dup_pairs(
     parity with DuckDB's sequential ``list_cosine_similarity(DOUBLE[])``
     — the hash-compared ``embedding_near_dups`` gate entry needs it,
     since one threshold-boundary flip would shift ``n_true``."""
-    v = vectors.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("v")
-    )
+    v = _renamed(vectors, "vid", "v")
     return (
         v.alias("a")
         .join(v.alias("b"), F.col("a.vid") < F.col("b.vid"))
@@ -553,12 +518,7 @@ def exact_near_dup_pairs(
     )
 
 
-def embedding_near_dups(
-    vectors: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_near_dups(vectors: DataFrame, dim: int) -> DataFrame:
     """(vec_a, vec_b, cosine) pairs with cosine at least
     ``NEAR_DUP_COSINE`` — embedding-cosine near-dup detection,
     LSH-blocked then exactly verified.
@@ -569,13 +529,11 @@ def embedding_near_dups(
     recall for a pair at angle theta is ``1 - (1 - (1 - theta/pi)^P)^T``
     with P = NEAR_DUP_N_PLANES planes and T = NEAR_DUP_N_TABLES tables.
     """
-    vecs = vectors.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("v")
-    )
+    vecs = _renamed(vectors, "vid", "v")
     sigged = vectors.select(
-        F.col(id_col).alias("vid"),
+        F.col("vec_id").alias("vid"),
         hyperplane_signatures(
-            F.col(vec_col), dim, NEAR_DUP_N_PLANES, NEAR_DUP_N_TABLES
+            F.col("embedding"), dim, NEAR_DUP_N_PLANES, NEAR_DUP_N_TABLES
         ).alias("_sigs"),
     )
     # bucket rows carry IDS ONLY: shipping the vector through the bucket

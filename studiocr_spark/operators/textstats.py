@@ -53,14 +53,14 @@ def words_of(text_col: Column) -> Column:
     )
 
 
-def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """(doc_id, n_ws_tokens, n_bpe_tokens, n_chars_seen)."""
     return docs.select(
         "doc_id",
-        F.size(words_of(F.col(text_col))).alias("n_ws_tokens"),
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_TOKEN_RE), 0))
+        F.size(words_of(F.col("text"))).alias("n_ws_tokens"),
+        F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_TOKEN_RE), 0))
         .alias("n_bpe_tokens"),
-        F.length(text_col).alias("n_chars_seen"),
+        F.length("text").alias("n_chars_seen"),
     )
 
 
@@ -73,14 +73,9 @@ def _stopword_ratio(words: Column, lang: str) -> Column:
     return hits / F.greatest(F.size(words), F.lit(1))
 
 
-def with_lang_id(
-    df: DataFrame,
-    text_col: str = "text",
-    pred_col: str = "pred_lang",
-    score_col: str = "lang_score",
-) -> DataFrame:
-    """Column-level language ID: appends ``pred_col``/``score_col`` to
-    ``df`` as pure projections — NO join, NO shuffle.
+def with_lang_id(df: DataFrame) -> DataFrame:
+    """Column-level language ID of ``text``: appends ``pred_lang`` and
+    ``lang_score`` to ``df`` as pure projections — NO join, NO shuffle.
 
     This is the composition building block: attaching lang-ID to a
     corpus via ``docs.join(lang_id(docs), "doc_id")`` self-joins a
@@ -89,7 +84,7 @@ def with_lang_id(
     scores materialize as intermediate columns in a separate projection
     step so the shared tokenization isn't re-evaluated per when-branch
     (Catalyst does not CSE complex expressions across outputs)."""
-    words = words_of(F.col(text_col))
+    words = words_of(F.col("text"))
     langs = sorted(STOPWORDS)
     tmp = {f"_lscore_{lang}": _stopword_ratio(words, lang) for lang in langs}
     staged = df.withColumns(tmp)
@@ -101,21 +96,22 @@ def with_lang_id(
             (best > 0) & (F.col(f"_lscore_{lang}") == best), F.lit(lang)
         ).otherwise(pred)
     return staged.withColumns(
-        {pred_col: pred, score_col: round6(best)}
+        {"pred_lang": pred, "lang_score": round6(best)}
     ).drop(*tmp.keys())
 
 
-def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """(doc_id, pred_lang, lang_score) — argmax stopword ratio; 'und' when
     nothing matched. Ties resolved by language-code order (deterministic)."""
-    return with_lang_id(docs, text_col).select(
+    return with_lang_id(docs).select(
         "doc_id", "pred_lang", "lang_score"
     )
 
 
-def _quality_exprs(text_col: str) -> dict[str, Column]:
-    """The quality-heuristic expressions keyed by output column name."""
-    t = F.col(text_col)
+def _quality_exprs() -> dict[str, Column]:
+    """The quality-heuristic expressions of ``text`` keyed by output
+    column name."""
+    t = F.col("text")
     words = words_of(t)
     n_words = F.size(words)
     n_chars = F.greatest(F.length(t), F.lit(1))
@@ -142,14 +138,14 @@ def _quality_exprs(text_col: str) -> dict[str, Column]:
     }
 
 
-def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_quality(df: DataFrame) -> DataFrame:
     """Column-level quality scoring: appends the six quality columns to
     ``df`` as pure projections — the join-free composition counterpart
     of :func:`quality_scores` (see :func:`with_lang_id`)."""
-    return df.withColumns(_quality_exprs(text_col))
+    return df.withColumns(_quality_exprs())
 
 
-def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_scores(docs: DataFrame) -> DataFrame:
     """Boilerplate-style quality heuristics per doc.
 
     (doc_id, n_words, mean_word_len, punct_ratio, digit_ratio,
@@ -157,13 +153,13 @@ def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     [0, 1], higher = more natural-language-like. Deterministic, portable
     arithmetic only (no floating aggregation order dependence).
     """
-    exprs = _quality_exprs(text_col)
+    exprs = _quality_exprs()
     return docs.select(
         "doc_id", *[c.alias(name) for name, c in exprs.items()]
     )
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """(doc_id, n_ngrams, n_unique, dup_ngram_frac, top_gram_frac):
     RefinedWeb-style repetition signals over word 2-grams (public
     heuristic family: heavily self-repeating documents are low-quality
@@ -200,7 +196,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
             rows, columns=["n_ngrams", "n_unique", "top_count"]
         )
 
-    staged = docs.select("doc_id", _rep(F.col(text_col)).alias("r"))
+    staged = docs.select("doc_id", _rep(F.col("text")).alias("r"))
     total = F.col("r.n_ngrams")
     return staged.select(
         "doc_id",
@@ -215,7 +211,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprints(docs: DataFrame) -> DataFrame:
     """Bottom-k document fingerprint (winnowing-style rolling sketch).
 
     md5 each char 5-gram, keep the 4 lexicographically smallest digests,
@@ -247,7 +243,7 @@ def fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
         return texts.map(fp)
 
-    return docs.select("doc_id", _fp(text_col).alias("fingerprint"))
+    return docs.select("doc_id", _fp("text").alias("fingerprint"))
 
 
 # Gopher quality-rule thresholds (Rae et al. 2021, public heuristics).
@@ -263,37 +259,36 @@ GOPHER_MIN_ALPHA_FRAC = 0.8
 GOPHER_MIN_REQ_STOPWORDS = 2
 
 
-def with_gopher(
-    df: DataFrame, text_col: str = "text", flag_col: str = "passes_gopher"
-) -> DataFrame:
-    """Column-level Gopher pass/fail: appends ``flag_col`` to ``df`` as
-    a pure projection — NO join, NO shuffle (the composition form for
-    cleaning pipelines, like with_lang_id / with_quality; the full
-    per-rule breakdown lives in :func:`gopher_rules`)."""
+def with_gopher(df: DataFrame) -> DataFrame:
+    """Column-level Gopher pass/fail of ``text``: appends
+    ``passes_gopher`` to ``df`` as a pure projection — NO join, NO
+    shuffle (the composition form for cleaning pipelines, like
+    with_lang_id / with_quality; the full per-rule breakdown lives in
+    :func:`gopher_rules`)."""
     staged = df.withColumns(
         {
-            "_gw": words_of(F.col(text_col)),
-            "_gl": F.split(F.col(text_col), "\n"),
+            "_gw": words_of(F.col("text")),
+            "_gl": F.split(F.col("text"), "\n"),
         }
     )
-    passes = _gopher_passes(text_col, "_gw", "_gl")
-    return staged.withColumn(flag_col, passes).drop("_gw", "_gl")
+    passes = _gopher_passes("_gw", "_gl")
+    return staged.withColumn("passes_gopher", passes).drop("_gw", "_gl")
 
 
-def _gopher_passes(text_col: str, w: str, l: str) -> Column:
+def _gopher_passes(w: str, l: str) -> Column:
     """The conjunction of the Gopher rules over staged word/line array
     columns ``w``/``l`` (shared by gopher_rules and with_gopher)."""
     nw = F.size(w)
     nw1 = F.greatest(nw, F.lit(1))
     nl1 = F.greatest(F.size(l), F.lit(1))
     total_word_chars = F.length(
-        F.regexp_replace(F.col(text_col), r"\s", "")
+        F.regexp_replace(F.col("text"), r"\s", "")
     )
-    n_hash = F.length(text_col) - F.length(
-        F.regexp_replace(F.col(text_col), "#", "")
+    n_hash = F.length("text") - F.length(
+        F.regexp_replace(F.col("text"), "#", "")
     )
     n_ellipsis = F.size(
-        F.regexp_extract_all(F.col(text_col), F.lit(r"\.\.\."), 0)
+        F.regexp_extract_all(F.col("text"), F.lit(r"\.\.\."), 0)
     )
     mean_wl = total_word_chars / nw1
     return (
@@ -326,7 +321,7 @@ def _gopher_passes(text_col: str, w: str, l: str) -> Column:
     )
 
 
-def gopher_rules(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def gopher_rules(docs: DataFrame) -> DataFrame:
     """(doc_id, n_words, mean_word_len, symbol_word_ratio,
     bullet_line_frac, ellipsis_line_frac, alpha_word_frac,
     n_req_stopwords, passes_gopher): the Gopher corpus-filtering rules
@@ -339,8 +334,8 @@ def gopher_rules(docs: DataFrame, text_col: str = "text") -> DataFrame:
     <= 30% of lines ellipsis-ended; >= 80% of words contain an
     alphabetic char; >= 2 of the 8 required English stopwords present.
     """
-    words = words_of(F.col(text_col))
-    lines = F.split(F.col(text_col), "\n")
+    words = words_of(F.col("text"))
+    lines = F.split(F.col("text"), "\n")
     staged = docs.withColumns({"_w": words, "_l": lines})
     nw = F.size("_w")
     nl = F.size("_l")
@@ -350,13 +345,13 @@ def gopher_rules(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # maximal non-\s runs) — a codegen-friendly regexp instead of an
     # interpreted fold over the word array
     total_word_chars = F.length(
-        F.regexp_replace(F.col(text_col), r"\s", "")
+        F.regexp_replace(F.col("text"), r"\s", "")
     )
-    n_hash = F.length(text_col) - F.length(
-        F.regexp_replace(F.col(text_col), "#", "")
+    n_hash = F.length("text") - F.length(
+        F.regexp_replace(F.col("text"), "#", "")
     )
     n_ellipsis = F.size(
-        F.regexp_extract_all(F.col(text_col), F.lit(r"\.\.\."), 0)
+        F.regexp_extract_all(F.col("text"), F.lit(r"\.\.\."), 0)
     )
     n_bullet_lines = F.size(
         F.filter("_l", lambda l: F.trim(l).rlike(r"^[-*•]"))
@@ -379,7 +374,7 @@ def gopher_rules(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # single source of truth for the conjunction (shared with
     # with_gopher, so the pipeline flag can never drift from the
     # oracle-checked breakdown)
-    passes = _gopher_passes(text_col, "_w", "_l")
+    passes = _gopher_passes("_w", "_l")
     return staged.select(
         "doc_id",
         nw.cast("long").alias("n_words"),

@@ -81,22 +81,17 @@ def canonicalize_url(url: Column) -> Column:
     return F.when(scheme == "", url).otherwise(canon)
 
 
-def url_dedup(
-    pages: DataFrame, url_col: str = "url", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, canonical_url, canonical_id, is_duplicate): canonicalize,
-    then group identical canonical URLs (keep the min id as canonical) —
-    exact_duplicates' digest-shuffle shape applied to the canonical
-    string instead of the content."""
+def url_dedup(pages: DataFrame) -> DataFrame:
+    """(doc_id, canonical_url, canonical_id, is_duplicate): canonicalize
+    ``url``, then group identical canonical URLs (keep the min id as
+    canonical) — exact_duplicates' digest-shuffle shape applied to the
+    canonical string instead of the content."""
     from .dedup import exact_duplicates
 
     canon = pages.select(
-        F.col(id_col).alias("doc_id"),
-        canonicalize_url(F.col(url_col)).alias("canonical_url"),
+        "doc_id", canonicalize_url(F.col("url")).alias("canonical_url")
     )
     labeled = exact_duplicates(canon, text_col="canonical_url")
-    return (
-        labeled.join(canon, "doc_id")
-        .select("doc_id", "canonical_url", "canonical_id", "is_duplicate")
-        .withColumnRenamed("doc_id", id_col)
+    return labeled.join(canon, "doc_id").select(
+        "doc_id", "canonical_url", "canonical_id", "is_duplicate"
     )

@@ -52,11 +52,16 @@ def with_bucket(pages: DataFrame, n_buckets: int) -> DataFrame:
 
 
 def read_manifest(spark: SparkSession, out_root: str) -> DataFrame | None:
+    """The completion manifest under ``out_root``; None when no run has
+    written one yet. The path is checked through its Hadoop FileSystem,
+    so any other failure (an unknown scheme, a denied read) raises
+    instead of reading as "nothing completed"."""
     path = os.path.join(out_root, MANIFEST_TABLE)
-    try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-    except Exception:
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    if not fs.exists(hpath):
         return None
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
 
 
 def completed_buckets(spark: SparkSession, out_root: str) -> set[int]:

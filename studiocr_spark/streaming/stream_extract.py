@@ -14,16 +14,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def windowed_event_counts(
-    events_stream: DataFrame,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Watermarked event-time tumbling-window rollup (late data dropped
-    after the watermark). Returns the aggregation plan; attach any sink."""
+def windowed_event_counts(events_stream: DataFrame) -> DataFrame:
+    """Watermarked event-time rollup in one-hour tumbling windows (data
+    more than 10 minutes late is dropped). Returns the aggregation
+    plan; attach any sink."""
     return (
-        events_stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "event_type")
+        events_stream.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
             F.count("*").alias("n"),
             F.sum("value").alias("total_value"),

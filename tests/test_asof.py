@@ -29,7 +29,7 @@ def test_asof_backward_inclusive(spark):
     left, right = _frames(spark)
     got = {
         r.tag: r.asof_v
-        for r in asof_join(left, right, on="ts", by="user_id").collect()
+        for r in asof_join(left, right).collect()
     }
     assert got == {"a": None, "b": 100.0, "c": 150.0, "d": 490.0, "e": None}
 
@@ -41,7 +41,7 @@ def test_asof_carries_nulls_inside_struct(spark):
     right = spark.createDataFrame(
         [(1, 10, 100.0), (1, 15, None)], "user_id long, ts long, v double"
     )
-    row = asof_join(left, right, on="ts", by="user_id").first()
+    row = asof_join(left, right).first()
     assert row.asof_v is None  # the ts=15 null-valued row, not ts=10
 
 
@@ -60,7 +60,7 @@ def test_asof_ignores_null_right_timestamps_and_keys(spark):
     )
     got = {
         r.tag: r.asof_v
-        for r in asof_join(left, right, on="ts", by="user_id").collect()
+        for r in asof_join(left, right).collect()
     }
     # null-ts right row never wins; null-key left row matches nothing
     assert got == {"x": 100.0, "y": None}
@@ -70,19 +70,15 @@ def test_asof_single_shuffle(spark):
     from studiocr_spark.plans.explain import shuffle_exchanges
 
     left, right = _frames(spark)
-    df = asof_join(left, right, on="ts", by="user_id", dedup_right=None)
-    # union-tag shape: exactly one exchange (hash on the key); a
-    # join+window formulation would need two
-    assert len(shuffle_exchanges(df)) == 1
-    # the foolproof default adds exactly ONE more (the (key, ts)
-    # max_by pre-agg on the right side), never a join
-    dfd = asof_join(left, right, on="ts", by="user_id")
+    # union-tag shape: one exchange (hash on the key) plus ONE for the
+    # (key, ts) max_by pre-agg on the right side, never a join
+    dfd = asof_join(left, right)
     assert len(shuffle_exchanges(dfd)) == 2
 
 
 def test_asof_dedup_right_breaks_ties_deterministically(spark):
-    """Round-4: multiple right rows at the same (key, ts) — the default
-    max_by pre-agg keeps the row maximizing the payload (first right
+    """Round-4: multiple right rows at the same (key, ts) — the max_by
+    pre-agg keeps the row maximizing the payload (first right
     column first), whatever partition order the union saw. A 50-way
     repartition shake makes the old partition-order dependence visible
     if it regresses."""
@@ -93,16 +89,11 @@ def test_asof_dedup_right_breaks_ties_deterministically(spark):
         [(1, 10, i * 1.0, f"r{i}") for i in range(40)],
         "user_id long, ts long, v double, src string",
     ).repartition(50)
-    row = asof_join(left, dup, on="ts", by="user_id").first()
+    row = asof_join(left, dup).first()
     assert (row.asof_v, row.asof_src) == (39.0, "r39")
-    # opting out on a unique-by-construction right side is unchanged
+    # a right side unique by construction passes through unchanged
     l2, r2 = _frames(spark)
-    got = {
-        r.tag: r.asof_v
-        for r in asof_join(
-            l2, r2, on="ts", by="user_id", dedup_right=None
-        ).collect()
-    }
+    got = {r.tag: r.asof_v for r in asof_join(l2, r2).collect()}
     assert got == {"a": None, "b": 100.0, "c": 150.0, "d": 490.0, "e": None}
 
 
@@ -120,21 +111,21 @@ def test_asof_dedup_right_total_order_on_tiebreak_ties(spark):
         "user_id long, ts long, v double, src string",
     ).repartition(50)
     rows = {
-        asof_join(left, dup, on="ts", by="user_id").first().asof_src
+        asof_join(left, dup).first().asof_src
         for _ in range(3)
     }
     assert rows == {"r39"}  # max over (v, src): lexicographic max src
 
 
 def test_asof_dedup_right_requires_payload_columns(spark):
-    """A right side with no columns beyond (on, by) used to IndexError
+    """A right side with no columns beyond (ts, user_id) used to IndexError
     on right_cols[0]; now it raises a clear ValueError."""
     import pytest
 
     left = spark.createDataFrame([(1, 20)], "user_id long, ts long")
     bare = spark.createDataFrame([(1, 10)], "user_id long, ts long")
     with pytest.raises(ValueError, match="right payload column"):
-        asof_join(left, bare, on="ts", by="user_id")
+        asof_join(left, bare)
 
 
 def test_range_join_semantics(spark):

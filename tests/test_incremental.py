@@ -132,13 +132,24 @@ def test_resume_over_manifest_part_from_python_rows(spark, pages_df, tmp_path):
     assert pq.read_schema(parts[0]) == pq.read_schema(parts[1])
 
 
+def test_read_manifest_absent_is_none_other_errors_raise(spark, tmp_path):
+    """A fresh output root has no manifest (None); a root whose
+    filesystem cannot even be resolved raises instead of reading as
+    "nothing completed"."""
+    import pytest
+
+    assert read_manifest(spark, str(tmp_path / "fresh")) is None
+    with pytest.raises(Exception, match="nosuchfs"):
+        read_manifest(spark, "nosuchfs://b/out")
+
+
 def test_warm_submit_job_count_and_summary(spark, extract_job, tmp_path):
     """A warm ``extract_submit --build-index`` run launches a pinned number
     of Spark jobs, and its summary line equals the manifest totals."""
-    from studiocr_spark.gen import write_pages
+    from studiocr_spark.gen import generate_pages
 
     inp = str(tmp_path / "pages")
-    write_pages(spark, 40, inp, partitions=2)
+    generate_pages(spark, 40, partitions=2).write.parquet(inp)
     argv = [
         "--input", inp, "--backend", "bitmap", "--n-buckets", "4",
         "--build-index", "--term-buckets", "2", "--master", "local[4]",

@@ -208,14 +208,14 @@ def test_build_index_reconciles_coverage_gaps(spark, extract_job, tmp_path):
     nothing was newly completed, leaving a permanent index gap for
     buckets completed by runs without --build-index (or by a run that
     crashed between manifest append and segment publish)."""
-    from studiocr_spark.gen import write_pages
+    from studiocr_spark.gen import generate_pages
     from studiocr_spark.operators.index import segment_coverage
     from studiocr_spark.streaming.incremental import read_manifest
 
     job = extract_job
     inp = str(tmp_path / "pages")
     out = str(tmp_path / "ocr")
-    write_pages(spark, 30, inp, partitions=2)
+    generate_pages(spark, 30, partitions=2).write.parquet(inp)
     # run 1: corpus completes WITHOUT --build-index
     assert job.main([
         "--input", inp, "--output", out, "--backend", "bitmap",
@@ -249,3 +249,33 @@ def test_build_index_reconciles_coverage_gaps(spark, extract_job, tmp_path):
         "--master", "local[4]",
     ]) == 0
     assert len(list_segments(f"{out}/postings")) == 2
+
+
+def test_build_index_on_file_uri_output(spark, extract_job, tmp_path):
+    """--build-index on a ``file://`` output runs to the end and indexes
+    the same hits as a plain-path output (the segment store's local
+    file I/O once failed on the URI after the extract had committed);
+    a remote scheme with --build-index stops before Spark starts."""
+    import pytest
+
+    from studiocr_spark.gen import generate_pages
+    from studiocr_spark.operators.search import bm25_search
+
+    inp = str(tmp_path / "pages")
+    generate_pages(spark, 20, partitions=2).write.parquet(inp)
+    argv = [
+        "--input", inp, "--backend", "bitmap", "--n-buckets", "2",
+        "--build-index", "--term-buckets", "2", "--master", "local[4]",
+    ]
+    plain, uri = tmp_path / "plain", tmp_path / "uri"
+    assert extract_job.main(argv + ["--output", str(plain)]) == 0
+    assert extract_job.main(argv + ["--output", uri.as_uri()]) == 0
+
+    def hits(root):
+        df = bm25_search(read_postings(spark, f"{root}/postings"), "cat dog")
+        return sorted(map(tuple, df.collect()))
+
+    assert hits(uri) == hits(plain) != []
+    with pytest.raises(SystemExit) as stop:
+        extract_job.main(argv + ["--output", "s3://bucket/ocr"])
+    assert stop.value.code == 2

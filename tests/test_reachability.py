@@ -13,12 +13,13 @@ bare import counts. Names match by their bare spelling: a dead
 definition that shares its name with a live one passes, so the guard
 is a floor, not a proof.
 
-The parameter check closes a blind spot of the reference check: a branch
-or a dial behind a parameter default. A parameter of a public top-level
-package function whose default is ``None``, ``True``, ``False`` or an
-int or float literal must take at least two different values across
-production call sites, or be listed in ``KNOBS_ALLOWED`` with its
-reason; a dial production sets one way is a module constant. An
+The parameter check closes a blind spot of the reference check: a branch,
+a dial or a column name behind a parameter default. A parameter of a
+public top-level package function whose default is a literal (``None``,
+a bool, a number or a string) must take at least two different values
+across production call sites, or be listed in ``KNOBS_ALLOWED`` with its
+reason; a dial production sets one way is a module constant, and a
+column name, separator or salt is the literal where it is read. An
 omitted argument counts as its default, a constant argument (a string
 too) as its value, a non-literal argument (a variable, a ``**kwargs``
 spread) as a second value, and a call through ``from ... import f as
@@ -69,8 +70,8 @@ ALLOWED = {
     ),
 }
 
-# "<module path>::<function>(<parameter>)" -> why an on/off or numeric
-# parameter stays although production gives it a single value
+# "<module path>::<function>(<parameter>)" -> why a parameter with a
+# literal default stays although production gives it a single value
 KNOBS_ALLOWED = {
     "session.py::build_pyfiles_zip(dest)": (
         "deployment path: writes the zip that spark-submit --py-files ships"
@@ -120,16 +121,6 @@ KNOBS_ALLOWED = {
     "functions/imagepipeline.py::flat_field(ksize)": (
         "U9 pipeline step: its arguments come from the user's step "
         "config through pipeline_from_config"
-    ),
-    "gen.py::write_pages(min_words)": (
-        "corpus generator: production (bench.py and the script "
-        "tools/bench_scaling.py writes) passes 200-400 words "
-        "only; the 8-60-word default is used by tests alone"
-    ),
-    "gen.py::write_pages(max_words)": (
-        "corpus generator: production (bench.py and the script "
-        "tools/bench_scaling.py writes) passes 200-400 words "
-        "only; the 8-60-word default is used by tests alone"
     ),
 }
 
@@ -238,8 +229,8 @@ _NON_LITERAL = object()
 
 
 def _literal(node: ast.AST):
-    """The value of a ``None``/bool/number literal (a negated number
-    included), else ``_NON_LITERAL``."""
+    """The value of a ``None``/bool/number/string literal (a negated
+    number included), else ``_NON_LITERAL``."""
     if (
         isinstance(node, ast.UnaryOp)
         and isinstance(node.op, ast.USub)
@@ -248,7 +239,7 @@ def _literal(node: ast.AST):
     ):
         return -node.operand.value
     if isinstance(node, ast.Constant) and (
-        node.value is None or type(node.value) in (bool, int, float)
+        node.value is None or type(node.value) in (bool, int, float, str)
     ):
         return node.value
     return _NON_LITERAL
@@ -279,7 +270,7 @@ def _production_calls() -> dict[str, list[ast.Call]]:
 def _switch_params() -> dict[str, tuple[str, list[str], dict]]:
     """"<module>::<function>" -> (name, positional parameter names,
     {parameter: default}) for every public top-level function with a
-    ``None``/bool/int/float default, ``ALLOWED`` ones aside."""
+    literal default, ``ALLOWED`` ones aside."""
     out = {}
     for path in sorted(PKG.rglob("*.py")):
         mod = path.relative_to(PKG).as_posix()
@@ -349,9 +340,9 @@ def _single_valued(
 
 
 def _fixed_switches() -> set[str]:
-    """"<module>::<function>(<parameter>)" for every on/off or numeric
-    parameter that production gives a single literal value (its default
-    included)."""
+    """"<module>::<function>(<parameter>)" for every parameter with a
+    literal default that production gives a single literal value (its
+    default included)."""
     return {
         f"{key}({p})"
         for key, (name, positional, params) in _switch_params().items()
@@ -363,19 +354,22 @@ def _fixed_switches() -> set[str]:
 
 def test_one_literal_value_is_reported_whatever_its_type():
     """A parameter that every call sets to one constant is single-valued,
-    a string constant included; a second value or a non-literal
-    argument clears it."""
-    params = {"mode": None, "n": 2}
+    a string constant included, whatever literal type its default has;
+    a second value or a non-literal argument clears it."""
+    params = {"mode": None, "n": 2, "col": "text"}
 
     def single(src: str) -> list[str]:
         calls = [
             n for n in ast.walk(ast.parse(src)) if isinstance(n, ast.Call)
         ]
-        return _single_valued(calls, ["mode", "n"], params)
+        return _single_valued(calls, ["mode", "n", "col"], params)
 
-    assert single('f(mode="a")\nf("a", n=2)') == ["mode", "n"]
-    assert single('f(mode="a", n=-1)\nf(mode="b", n=-1)') == ["n"]
-    assert single("f(mode=m, n=3)\nf()") == []
+    assert _literal(ast.parse('"text"').body[0].value) == "text"
+    assert single('f(mode="a")\nf("a", n=2)') == ["mode", "n", "col"]
+    assert single('f(mode="a", n=-1, col="url")\nf(mode="b", n=-1)') == [
+        "n"
+    ]
+    assert single('f(mode=m, n=3, col="text")\nf(col=c)') == []
 
 
 def test_every_switch_takes_two_values_or_is_allowlisted():
@@ -383,7 +377,8 @@ def test_every_switch_takes_two_values_or_is_allowlisted():
     assert not fixed, (
         "production gives these parameters one value only; delete the "
         "parameter and the path it selects (a dial becomes a module "
-        f"constant), or allowlist it with a reason: {fixed}"
+        "constant, a column name a literal), or allowlist it with a "
+        f"reason: {fixed}"
     )
 
 

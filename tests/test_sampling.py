@@ -91,7 +91,7 @@ def test_top_n_per_group_deterministic_cap(spark):
     docs = spark.createDataFrame(
         [(i, f"g{i % 3}") for i in range(60)], "doc_id long, source string"
     )
-    out = top_n_per_group(docs, n=5, group_col="source")
+    out = top_n_per_group(docs, n=5)
     rows = out.collect()
     per = {}
     for r in rows:
@@ -100,14 +100,14 @@ def test_top_n_per_group_deterministic_cap(spark):
     # deterministic: identical membership on re-run
     again = {
         (r.source, r.doc_id)
-        for r in top_n_per_group(docs, n=5, group_col="source").collect()
+        for r in top_n_per_group(docs, n=5).collect()
     }
     assert again == {(r.source, r.doc_id) for r in rows}
     # groups smaller than n keep everything
     small = spark.createDataFrame(
         [(0, "x"), (1, "x")], "doc_id long, source string"
     )
-    assert top_n_per_group(small, n=5, group_col="source").count() == 2
+    assert top_n_per_group(small, n=5).count() == 2
 
 
 def test_rebalance_mixture_hits_target_shares(spark):
@@ -120,9 +120,7 @@ def test_rebalance_mixture_hits_target_shares(spark):
         + [(3000 + i, "zh") for i in range(100)]  # not in target
     )
     docs = spark.createDataFrame(rows, "doc_id long, lang string")
-    out = rebalance_mixture(
-        docs, {"en": 0.5, "es": 0.3, "de": 0.2}, strata_col="lang"
-    )
+    out = rebalance_mixture(docs, {"en": 0.5, "es": 0.3, "de": 0.2})
     got = {r[0]: r[1] for r in out.groupBy("lang").count().collect()}
     assert "zh" not in got
     # de is the binding stratum: T = 60/0.2 = 300 -> expect ~150/90/60
@@ -133,8 +131,9 @@ def test_rebalance_mixture_hits_target_shares(spark):
     # deterministic
     again = {
         r[0]: r[1]
-        for r in rebalance_mixture(
-            docs, {"en": 0.5, "es": 0.3, "de": 0.2}, strata_col="lang"
-        ).groupBy("lang").count().collect()
+        for r in rebalance_mixture(docs, {"en": 0.5, "es": 0.3, "de": 0.2})
+        .groupBy("lang")
+        .count()
+        .collect()
     }
     assert again == got

@@ -27,7 +27,7 @@ def test_windowed_event_counts(spark, tmp_path):
         )
         .parquet(ev_dir)
     )
-    agg = windowed_event_counts(ev_stream, window="1 hour")
+    agg = windowed_event_counts(ev_stream)
     out = run_stream_to_memory(agg, "win_counts", spark)
     rows = out.collect()
     assert len(rows) > 0

@@ -137,9 +137,10 @@ def main() -> None:
         script = (
             f"import sys; sys.path.insert(0, {REPO!r})\n"
             "from studiocr_spark.session import get_spark\n"
-            "from studiocr_spark.gen import write_pages\n"
+            "from studiocr_spark.gen import generate_pages\n"
             f"spark = get_spark(app_name='gen', master='local[{high}]')\n"
-            f"write_pages(spark, {n_docs}, {corpus!r}, partitions={high * 2}, min_words=200, max_words=400)\n"
+            f"generate_pages(spark, {n_docs}, {high * 2}, 200, 400)"
+            f".write.mode('overwrite').parquet({corpus!r})\n"
             "spark.stop()\n"
         )
         subprocess.run([sys.executable, "-c", script], check=True,

@@ -11,7 +11,7 @@ float64 in pandas while Spark's bigint stays int64, so an uncast
 Array-typed output columns raise (the driver's canonicalizer can't hash
 lists) and are reported as failures. Usage::
 
-    python tools/check_oracle.py [sf_dir] [query ...]
+    python tools/check_oracle.py <sf_dir> [query ...]
 """
 
 from __future__ import annotations
@@ -73,14 +73,20 @@ def canon(df: pd.DataFrame) -> list[tuple]:
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    if len(sys.argv) < 2:
+        print("usage: python tools/check_oracle.py <sf_dir> [query ...]")
+        return 2
+    sf_dir = sys.argv[1]
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entry
     from studiocr_spark.session import get_spark
 
+    # no console progress bar: each entry's result line stands alone in
+    # a transcript
     spark = get_spark(app_name="oracle-check", master="local[4]",
-                      shuffle_partitions=4)
+                      shuffle_partitions=4,
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
     for t in TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")

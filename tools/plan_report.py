@@ -7,7 +7,7 @@ table is the at-a-glance answer to "would this plan survive 100x" — and
 a diffable artifact, so a regression that adds a shuffle or drops a
 broadcast shows up in review even before the plan-pin tests run.
 
-Usage: python tools/plan_report.py [sf_dir]
+Usage: python tools/plan_report.py <sf_dir>
 """
 
 from __future__ import annotations
@@ -22,7 +22,10 @@ sys.path.insert(0, REPO)
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    if len(sys.argv) < 2:
+        print("usage: python tools/plan_report.py <sf_dir>")
+        raise SystemExit(2)
+    sf_dir = sys.argv[1]
 
     # plan inspection must not execute the ANN entries' oracle-dump
     # writes (round-5 ADVICE: an eager dump here could interleave with

@@ -326,23 +326,10 @@ def a7_docs_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def j3_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3: docs where ANY query word is a SUBSTRING of any token."""
-    b = _blocks(spark, sf_dir)
-    cond = None
-    for wd in SEARCH_WORDS:
-        c = F.lower(F.col("text")).contains(wd)
-        cond = c if cond is None else (cond | c)
-    return b.filter(cond).select("doc_id").distinct().orderBy("doc_id")
-
-
-def j3_indexed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 via the inverted index (dictionary scan + postings semi-join);
-    must return exactly the scan path's result set."""
-    from studiocr_spark.operators.index import build_postings
-    from studiocr_spark.operators.search import global_search_indexed
-
-    blocks = _blocks(spark, sf_dir).select(
+def _url_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_blocks`` in the ocr_blocks schema the search operators read:
+    doc_id cast to the url key, one page, zero boxes."""
+    return _blocks(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("url"),
         F.lit(0).alias("page_no"),
         "block_no",
@@ -353,7 +340,25 @@ def j3_indexed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "conf",
         "text",
     )
-    postings = build_postings(blocks)
+
+
+def j3_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J3: docs where ANY query word is a SUBSTRING of any token."""
+    from studiocr_spark.operators.search import global_search
+
+    hits = global_search(_url_blocks(spark, sf_dir), " ".join(SEARCH_WORDS))
+    return hits.select(F.col("url").cast("long").alias("doc_id")).orderBy(
+        "doc_id"
+    )
+
+
+def j3_indexed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J3 via the inverted index (dictionary scan + postings semi-join);
+    must return exactly the scan path's result set."""
+    from studiocr_spark.operators.index import build_postings
+    from studiocr_spark.operators.search import global_search_indexed
+
+    postings = build_postings(_url_blocks(spark, sf_dir))
     hits = global_search_indexed(postings, " ".join(SEARCH_WORDS))
     return hits.select(F.col("url").cast("long").alias("doc_id")).orderBy(
         "doc_id"
@@ -473,24 +478,27 @@ def f6_conf_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def w5_navigation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W4/W5: first/next/prev matched doc around a pivot."""
+    from studiocr_spark.operators.search import matched_page_navigation
+
     matched = j3_keyword_search(spark, sf_dir)
-    return matched.agg(
-        F.min("doc_id").alias("first"),
-        F.min(F.when(F.col("doc_id") > NAV_CURRENT, F.col("doc_id"))).alias(
-            "next"
-        ),
-        F.max(F.when(F.col("doc_id") < NAV_CURRENT, F.col("doc_id"))).alias(
-            "prev"
-        ),
+    return matched_page_navigation(
+        matched.withColumnRenamed("doc_id", "page_no"), NAV_CURRENT
     )
 
 
 def w6_first_doc_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W6/S8: first child per parent via min_by (thumbnail shape)."""
-    docs = _t(spark, sf_dir, "documents")
-    return docs.groupBy("source").agg(
-        F.min("doc_id").alias("first_doc"),
-        F.min_by("n_chars", "doc_id").alias("first_chars"),
+    from studiocr_spark.operators.search import first_page_per_doc
+
+    docs = _t(spark, sf_dir, "documents").select(
+        F.col("source").alias("url"),
+        F.col("doc_id").alias("page_no"),
+        F.col("n_chars").alias("image"),
+    )
+    return first_page_per_doc(docs).select(
+        F.col("url").alias("source"),
+        F.col("page_no").alias("first_doc"),
+        F.col("thumbnail").alias("first_chars"),
     )
 
 
@@ -513,7 +521,7 @@ def j7_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.split("text", " ")).alias("word"),
         )
     )
-    out = accuracy_scores(pred, exp, tol=1)
+    out = accuracy_scores(pred, exp)
     return out.select(
         "url", "n_correct", "n_expected", _r(F.col("score"), 6).alias("score")
     )

@@ -119,7 +119,10 @@ def _deltas(
     Round-5: the guard also watches the EXTRACT protocol times
     (``extract.sec`` / ``extract.pipeline_sec``) — the project's
     headline metric. BENCH_r04's extract halving (8,562 -> 4,073
-    docs/s) sailed through the query-only guard unflagged."""
+    docs/s) sailed through the query-only guard unflagged.
+
+    Returns counts and the single worst ratio; stderr names every
+    regressed query."""
     prev = _prev_round()
     if prev is None:
         return None
@@ -131,30 +134,63 @@ def _deltas(
         if extract and extract.get(key) and prev_extract.get(key):
             pq[f"extract.{key}"] = prev_extract[key]
             watched[f"extract.{key}"] = extract[key]
-    regressions: dict[str, dict] = {}
-    improvements: dict[str, dict] = {}
-    for q, sec in watched.items():
-        old = pq.get(q)
-        if not old:
-            continue
-        ratio = round(sec / old, 2)
-        rec = {"prev": old, "now": sec, "ratio": ratio}
-        if ratio > threshold:
-            regressions[q] = rec
-        elif ratio < 1 / threshold:
-            improvements[q] = rec
-    for q, rec in sorted(regressions.items()):
+    ratios = {
+        q: round(sec / pq[q], 2) for q, sec in watched.items() if pq.get(q)
+    }
+    regressed = sorted(q for q, r in ratios.items() if r > threshold)
+    for q in regressed:
         print(
-            f"BENCH REGRESSION {q}: {rec['prev']}s -> {rec['now']}s "
-            f"({rec['ratio']}x)",
+            f"BENCH REGRESSION {q}: {pq[q]}s -> {watched[q]}s "
+            f"({ratios[q]}x)",
             file=sys.stderr,
         )
+    # counts and the one worst ratio only: the stderr lines above name
+    # every regressed query, and a per-query block here would grow the
+    # result line past the 2000-char tail its reader parses
+    worst = max(ratios, key=ratios.get, default=None)
     return {
         "baseline": name,
         "threshold": threshold,
-        "regressions": regressions,
-        "improvements": improvements,
+        "regressions": len(regressed),
+        "improvements": sum(r < 1 / threshold for r in ratios.values()),
+        "worst": worst,
+        "worst_ratio": ratios.get(worst),
     }
+
+
+def _result_line(
+    timings: dict[str, float], extract_sec: float, pipeline_sec: float
+) -> str:
+    """The one JSON line bench.py prints: the suite total, per-query
+    seconds, both extract protocols and the regression summary."""
+    return json.dumps(
+        {
+            "metric": "headline_suite_seconds",
+            "value": round(sum(timings.values()), 3),
+            "unit": "sec",
+            "queries": timings,
+            "sf": SF_DIR,
+            "cpus": CPUS,
+            # both extract protocols live here WITH their corpus size:
+            # round 2 timed extract_pipeline inside `queries` on a 10k
+            # corpus, which made docs/sec incomparable across reports
+            # (fixed overhead amortization)
+            "extract": {
+                "docs": EXTRACT_DOCS,
+                "sec": round(extract_sec, 3),
+                "docs_per_sec": round(EXTRACT_DOCS / extract_sec, 2),
+                "pipeline_sec": pipeline_sec,
+                "pipeline_docs_per_sec": round(
+                    EXTRACT_DOCS / pipeline_sec, 2
+                ),
+            },
+            "deltas": _deltas(
+                timings,
+                extract={"sec": round(extract_sec, 3),
+                         "pipeline_sec": pipeline_sec},
+            ),
+        }
+    )
 
 
 def main() -> None:
@@ -268,39 +304,7 @@ def main() -> None:
     # compared against
     extract_sec = min(raw_pass() for _ in range(3))
     pipeline_sec = round(min(pipeline_pass() for _ in range(2)), 3)
-    docs_per_sec = EXTRACT_DOCS / extract_sec
-
-    total = round(sum(timings.values()), 3)
-    print(
-        json.dumps(
-            {
-                "metric": "headline_suite_seconds",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": SF_DIR,
-                "cpus": CPUS,
-                # both extract protocols live here WITH their corpus
-                # size: round 2 timed extract_pipeline inside `queries`
-                # on a 10k corpus, which made docs/sec incomparable
-                # across reports (fixed overhead amortization)
-                "extract": {
-                    "docs": EXTRACT_DOCS,
-                    "sec": round(extract_sec, 3),
-                    "docs_per_sec": round(docs_per_sec, 2),
-                    "pipeline_sec": pipeline_sec,
-                    "pipeline_docs_per_sec": round(
-                        EXTRACT_DOCS / pipeline_sec, 2
-                    ),
-                },
-                "deltas": _deltas(
-                    timings,
-                    extract={"sec": round(extract_sec, 3),
-                             "pipeline_sec": pipeline_sec},
-                ),
-            }
-        )
-    )
+    print(_result_line(timings, extract_sec, pipeline_sec))
     spark.stop()
     # the corpus dir is intentionally KEPT: it is deterministic, shared
     # with bench_scaling, and regenerating 60k docs per run would cost

@@ -4,9 +4,10 @@ Rebuilds /root/reference/Image_Preprocessing_Optimization/CustomFunctions.py:
 - levenshtein (:19-38) -> the Spark SQL builtin ``levenshtein()``
 - zero_one_loss (:40-82) -> join + min-distance + threshold + ratio,
   preserving the reference's exact quirks: iteration over PREDICTED
-  texts, <=3-char fast path is exact set membership, adaptive tolerance
-  ``int(tol * len(pred))`` when tol is fractional, denominator =
-  DISTINCT expected count (score can exceed 1.0).
+  texts, <=3-char fast path is exact set membership, denominator =
+  DISTINCT expected count (score can exceed 1.0). The tolerance is the
+  fixed ``ACCURACY_TOL``; the reference's fractional form
+  ``int(tol * len(pred))`` is not rebuilt, since no caller uses it.
 
 Plan shape: pred x expected is a per-key (url) cross join — expected word
 lists are golden fixtures (tens of words), so the join explodes by a small
@@ -18,12 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# the largest edit distance at which a predicted word still matches
+ACCURACY_TOL = 1
 
-def accuracy_scores(
-    predicted: DataFrame,
-    expected: DataFrame,
-    tol: int | float = 0.2,
-) -> DataFrame:
+
+def accuracy_scores(predicted: DataFrame, expected: DataFrame) -> DataFrame:
     """Per-url zero-one-loss scores.
 
     ``predicted``: (url, word) — one row per predicted word instance.
@@ -37,11 +37,6 @@ def accuracy_scores(
     )
     exp = expected.select("url", F.col("word").alias("exp")).distinct()
 
-    if isinstance(tol, int):
-        tol_expr = F.lit(tol)
-    else:
-        tol_expr = F.floor(F.lit(tol) * F.length("pred"))
-
     joined = pred.join(exp, "url")
     # reference control flow: ``if len<=3 and in-set: +1 elif any(lev<=tol)``
     # — the elif still runs for short words NOT in the set, so the match
@@ -53,7 +48,7 @@ def accuracy_scores(
                     (F.length("pred") <= 3)
                     & (F.col("pred") == F.col("exp"))
                 )
-                | (F.levenshtein("pred", "exp") <= tol_expr),
+                | (F.levenshtein("pred", "exp") <= ACCURACY_TOL),
                 1,
             ).otherwise(0)
         ).alias("correct")

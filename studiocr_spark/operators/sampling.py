@@ -28,6 +28,13 @@ from pyspark.sql import functions as F
 HASH_SPACE = float(2 ** 32)
 
 
+def _hash32(col: Column, salt: str) -> Column:
+    """The first 8 hex digits of md5(salt || '|' || col) as a bigint in
+    [0, 2^32): the one salted-hash recipe of this module."""
+    h = F.md5(F.concat(F.lit(salt), F.lit("|"), col.cast("string")))
+    return F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint")
+
+
 def hash_unit(col: Column, salt: str = "") -> Column:
     """Deterministic uniform [0,1) from a salted md5 of ``col``.
 
@@ -35,10 +42,7 @@ def hash_unit(col: Column, salt: str = "") -> Column:
     arithmetic in DuckDB (see module docstring), so sampled row sets
     are oracle-checkable exactly.
     """
-    h = F.md5(F.concat(F.lit(salt), F.lit("|"), col.cast("string")))
-    return (
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") / HASH_SPACE
-    )
+    return _hash32(col, salt) / HASH_SPACE
 
 
 def stratified_sample(
@@ -89,22 +93,7 @@ def pack_sequences(
     from .textstats import words_of
 
     tokens = F.size(words_of(F.col("text")))
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("pack|"), F.col("doc_id").cast("string")
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % n_buckets
-    )
+    bucket = _hash32(F.col("doc_id"), "pack") % n_buckets
     staged = docs.select(
         "doc_id",
         bucket.alias("bucket"),

@@ -1,28 +1,17 @@
-"""Catalog shim: Iceberg in production, versioned parquet in the sandbox.
+"""Iceberg catalog: the production table store, gated on the runtime jar.
 
 The reference persists to SQLite via peewee (/root/reference/StudiOCR/
 db.py:11-13); the rebuild targets Iceberg tables bucket-partitioned by url
-(north_rule). The sandbox PySpark has no Iceberg jars, so the shim
-provides:
-
-- ``IcebergCatalog`` — real DDL/DML (``USING iceberg PARTITIONED BY
-  (bucket(N, url))``, snapshot commits = the reference's ``db.atomic()``,
-  ``DELETE FROM`` = cascade delete). Used when the catalog is configured;
-  availability is detected, not assumed.
-- ``ParquetCatalog`` — versioned-directory parquet tables with an atomic
-  CURRENT pointer: every write lands in a fresh ``v_NNNN`` dir, then the
-  pointer file is replaced (rename = the commit point). Readers never see
-  partial writes; old versions remain for time travel / vacuum, mirroring
-  Iceberg snapshot semantics closely enough to test lifecycle ops
-  (D1-D4) against.
+(north_rule). ``IcebergCatalog`` issues the real DDL/DML (``USING iceberg
+PARTITIONED BY (bucket(N, url))``, snapshot commits = the reference's
+``db.atomic()``, ``DELETE FROM`` = cascade delete). A stock PySpark
+ships no Iceberg jars, so availability is detected, not assumed, and a
+jar-less session fails at construction.
 """
 
 from __future__ import annotations
 
-import os
-import uuid
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -41,114 +30,6 @@ def iceberg_available(spark: SparkSession) -> bool:
         return True
     except Exception:
         return False
-
-
-class ParquetCatalog:
-    """Directory-per-table parquet store with atomic version pointers."""
-
-    def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = root
-        os.makedirs(root, exist_ok=True)
-
-    # -- pointer mechanics ------------------------------------------------
-    def _table_dir(self, table: str) -> str:
-        return os.path.join(self.root, table)
-
-    def _current_path(self, table: str) -> str | None:
-        marker = os.path.join(self._table_dir(table), "CURRENT")
-        if not os.path.exists(marker):
-            return None
-        with open(marker) as f:
-            version = f.read().strip()
-        return os.path.join(self._table_dir(table), version)
-
-    def _commit(self, table: str, version: str) -> None:
-        tdir = self._table_dir(table)
-        tmp = os.path.join(tdir, f".CURRENT.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            f.write(version)
-        os.replace(tmp, os.path.join(tdir, "CURRENT"))  # atomic commit point
-
-    def _new_version(self, table: str) -> tuple[str, str]:
-        tdir = self._table_dir(table)
-        os.makedirs(tdir, exist_ok=True)
-        existing = [d for d in os.listdir(tdir) if d.startswith("v_")]
-        n = 1 + max((int(d[2:]) for d in existing), default=0)
-        version = f"v_{n:05d}"
-        return version, os.path.join(tdir, version)
-
-    # -- public API -------------------------------------------------------
-    def exists(self, table: str) -> bool:
-        return self._current_path(table) is not None
-
-    def read(self, table: str) -> DataFrame:
-        path = self._current_path(table)
-        if path is None:
-            raise FileNotFoundError(f"table {table!r} does not exist")
-        return self.spark.read.parquet(path)
-
-    def overwrite(self, df: DataFrame, table: str) -> None:
-        version, path = self._new_version(table)
-        df.write.mode("overwrite").parquet(path)
-        self._commit(table, version)
-
-    def append(self, df: DataFrame, table: str) -> None:
-        """Append = union-materialize into a new version (snapshot commit).
-
-        Production Iceberg appends are metadata-only; here the new data
-        files are written next to a version dir that references prior
-        files via a read-union. Kept simple: re-write current ∪ new.
-        """
-        if self.exists(table):
-            df = self.read(table).unionByName(df)
-        self.overwrite(df, table)
-
-    def delete_where(self, table: str, cond: Column) -> int:
-        """DELETE FROM table WHERE cond; returns rows deleted (A9)."""
-        cur = self.read(table)
-        before = cur.count()
-        remaining = cur.filter(~cond)
-        self.overwrite(remaining, table)
-        return before - remaining.count()
-
-    def upsert(
-        self, df: DataFrame, table: str, key_cols: list[str]
-    ) -> dict[str, int]:
-        """MERGE INTO semantics on the versioned store: incoming rows
-        REPLACE current rows sharing their key; new keys insert. One
-        snapshot commit; readers see before or after, never between.
-        Returns {"updated", "inserted"} counts.
-
-        Incoming ``df`` must be unique per key (the reference's
-        upsert-by-primary-key contract, db.py save()); at scale the
-        anti-join shuffles only the key columns of the current version.
-        The Iceberg production analog is ``MERGE INTO t USING s ON
-        <keys> WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN
-        INSERT *`` (IcebergCatalog.merge_sql).
-        """
-        if not self.exists(table):
-            self.overwrite(df, table)
-            return {"updated": 0, "inserted": df.count()}
-        cur = self.read(table)
-        incoming_keys = df.select(*key_cols).distinct()
-        surviving = cur.join(incoming_keys, key_cols, "left_anti")
-        updated = cur.count() - surviving.count()
-        self.overwrite(surviving.unionByName(df), table)
-        return {"updated": updated, "inserted": df.count() - updated}
-
-    def vacuum(self, table: str, keep: int = 1) -> int:
-        """Drop all but the newest ``keep`` versions (≈ expire_snapshots;
-        the reference VACUUMs after delete, db.py:37)."""
-        import shutil
-
-        tdir = self._table_dir(table)
-        versions = sorted(d for d in os.listdir(tdir) if d.startswith("v_"))
-        dropped = 0
-        for v in versions[:-keep] if keep else versions:
-            shutil.rmtree(os.path.join(tdir, v))
-            dropped += 1
-        return dropped
 
 
 ICEBERG_DDL = """
@@ -182,17 +63,18 @@ CREATE TABLE IF NOT EXISTS {catalog}.ocr.postings (
 
 
 class IcebergCatalog:
-    """Thin Iceberg-backed implementation of the same surface (S9/D1).
+    """Iceberg-backed table store (S9/D1): create, read, append,
+    overwrite, delete and merge.
 
-    Untestable in the sandbox (no jars) — every method guards on
-    availability so misconfiguration fails loudly, not mysteriously.
+    Construction guards on availability, so a session without the
+    runtime jar fails loudly, not mysteriously.
     """
 
     def __init__(self, spark: SparkSession, catalog: str = "spark_catalog",
                  n_buckets: int = 1024, term_buckets: int = 4096):
         if not iceberg_available(spark):
             raise RuntimeError(
-                "Iceberg runtime not on the classpath; use ParquetCatalog"
+                "Iceberg runtime not on the classpath"
             )
         self.spark = spark
         self.catalog = catalog
@@ -228,9 +110,10 @@ class IcebergCatalog:
     def merge_sql(
         self, table: str, source_view: str, key_cols: list[str]
     ) -> str:
-        """The MERGE INTO statement matching ParquetCatalog.upsert —
-        returned (not executed) so callers can inspect/submit it; the
-        jar-gated smoke test executes it where a runtime exists."""
+        """MERGE INTO semantics: incoming rows replace current rows
+        sharing their key, new keys insert, one snapshot commit. The
+        statement is returned (not executed) so callers can inspect or
+        submit it."""
         on = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
         return (
             f"MERGE INTO {self.catalog}.ocr.{table} t "

@@ -25,7 +25,7 @@ def _load_bench():
     return mod
 
 
-def test_deltas_flags_extract_regression(tmp_path, monkeypatch):
+def test_deltas_flags_extract_regression(monkeypatch, capsys):
     bench = _load_bench()
     prev = {
         "queries": {"q1": 1.0},
@@ -38,10 +38,12 @@ def test_deltas_flags_extract_regression(tmp_path, monkeypatch):
     out = bench._deltas(
         {"q1": 1.1}, extract={"sec": 21.0, "pipeline_sec": 19.0}
     )
-    assert "extract.sec" in out["regressions"]
-    assert out["regressions"]["extract.sec"]["ratio"] == 2.1
-    assert "q1" not in out["regressions"]  # 1.1x is under threshold
-    assert "extract.pipeline_sec" not in out["regressions"]
+    # q1's 1.1x is under the threshold, pipeline_sec improved slightly
+    assert out["regressions"] == 1 and out["improvements"] == 0
+    assert (out["worst"], out["worst_ratio"]) == ("extract.sec", 2.1)
+    err = capsys.readouterr().err
+    assert "BENCH REGRESSION extract.sec: 10.0s -> 21.0s (2.1x)" in err
+    assert "q1" not in err and "pipeline_sec" not in err
 
 
 def test_deltas_flags_extract_improvement_and_handles_absence(monkeypatch):
@@ -52,8 +54,8 @@ def test_deltas_flags_extract_improvement_and_handles_absence(monkeypatch):
     )
     # no extract in the previous round -> no extract rows, no crash
     out = bench._deltas({"q1": 0.5}, extract={"sec": 5.0})
-    assert "q1" in out["improvements"]
-    assert not any(k.startswith("extract.") for k in out["regressions"])
+    assert out["improvements"] == 1 and out["regressions"] == 0
+    assert (out["worst"], out["worst_ratio"]) == ("q1", 0.5)
     prev2 = {
         "queries": {},
         "extract": {"sec": 10.0, "pipeline_sec": 20.0},
@@ -62,8 +64,31 @@ def test_deltas_flags_extract_improvement_and_handles_absence(monkeypatch):
         bench, "_prev_round", lambda: ("BENCH_rTEST.json", prev2)
     )
     out2 = bench._deltas({}, extract={"sec": 6.0, "pipeline_sec": 9.0})
-    assert out2["improvements"]["extract.sec"]["ratio"] == 0.6
-    assert out2["improvements"]["extract.pipeline_sec"]["ratio"] == 0.45
+    assert out2["improvements"] == 2
+    assert (out2["worst"], out2["worst_ratio"]) == ("extract.sec", 0.6)
+
+
+def test_result_line_fits_the_reader_tail(monkeypatch, capsys):
+    """Every headline query and both extract times regressed, at
+    seven-digit timings: the result line still fits the 2000-char tail
+    its reader parses, and stderr still names every regressed query."""
+    bench = _load_bench()
+    prev = {
+        "queries": {q: 0.001 for q in bench.HEADLINE},
+        "extract": {"sec": 0.001, "pipeline_sec": 0.001},
+    }
+    monkeypatch.setattr(
+        bench, "_prev_round", lambda: ("BENCH_r99.json", prev)
+    )
+    slow = 9999999.999
+    line = bench._result_line(
+        {q: slow for q in bench.HEADLINE}, slow, slow
+    )
+    assert len(line) <= 2000, len(line)
+    deltas = json.loads(line)["deltas"]
+    assert deltas["regressions"] == len(bench.HEADLINE) + 2
+    err = capsys.readouterr().err
+    assert all(f"BENCH REGRESSION {q}:" in err for q in bench.HEADLINE)
 
 
 def test_deltas_survive_poisoned_previous_round(tmp_path, monkeypatch):

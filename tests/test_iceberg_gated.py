@@ -113,3 +113,17 @@ def test_iceberg_ddl_append_delete_roundtrip():
     out = json.loads(proc.stdout.strip().splitlines()[-1])
     assert out["n1"] == 2 and out["n2"] == 3 and out["n3"] == 2
     assert out["files"] >= 1
+
+
+def test_merge_sql_names_keys_and_both_branches():
+    """The MERGE INTO statement IcebergCatalog builds: matched keys are
+    replaced, new keys inserted. Building it needs no jar or session."""
+    from studiocr_spark.sources.catalog import IcebergCatalog
+
+    cat = object.__new__(IcebergCatalog)
+    cat.catalog = "cat"
+    sql = cat.merge_sql("ocr_pages", "updates", ["url", "page_no"])
+    assert "MERGE INTO cat.ocr.ocr_pages t USING updates s" in sql
+    assert "ON t.url = s.url AND t.page_no = s.page_no" in sql
+    assert "WHEN MATCHED THEN UPDATE SET *" in sql
+    assert "WHEN NOT MATCHED THEN INSERT *" in sql

@@ -1,17 +1,22 @@
 """Reachability guard: no package code that only tests reach.
 
 Every public top-level function, class or constant in ``studiocr_spark/``
-must be referenced from production code, or be listed in ``ALLOWED``
-with its reason. Production is the package itself, ``jobs/``,
-``tools/``, ``perfbench/``, ``__spark_entry__.py`` and ``bench.py``;
-``tests/`` does not count. For a function or class a reference is an
-AST name, attribute or import alias, so docstrings and comments never
-count, and neither does a definition's use of its own name (recursion).
-A constant (an ``Assign``/``AnnAssign`` target) is reached only by a
-name or attribute that loads it, so neither its own assignment nor a
-bare import counts. Names match by their bare spelling: a dead
-definition that shares its name with a live one passes, so the guard
-is a floor, not a proof.
+must be reached from production code, or be listed in ``ALLOWED`` with
+its reason. The roots are the production files outside the package
+(``jobs/``, ``tools/``, ``perfbench/``, ``__spark_entry__.py`` and
+``bench.py``) and the package's module-level statements other than
+definitions and imports; ``tests/`` does not count. A top-level package
+definition, public or ``_private``, is reached when a root or a reached
+definition references it, so a definition that only an ``ALLOWED`` one
+calls is still reported: ``ALLOWED`` entries are not roots. For a
+function or class a reference is an AST name, attribute or import
+alias, so docstrings and comments never count, and neither does a
+definition's use of its own name (recursion). A constant (an
+``Assign``/``AnnAssign`` target) is reached only by a name or attribute
+that loads it, so neither its own assignment nor a bare import counts;
+a reached constant reaches what its value references. Names match by
+their bare spelling: a dead definition that shares its name with a
+live one passes, so the guard is a floor, not a proof.
 
 The parameter check closes a blind spot of the reference check: a branch,
 a dial or a column name behind a parameter default. A parameter of a
@@ -41,7 +46,6 @@ DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 # "<module path under studiocr_spark/>::<name>" -> why it stays although
 # no production path reaches it
 ALLOWED = {
-    "functions/imagepipeline.py::apply_pipeline": "SURVEY §2 U9",
     "operators/boilerplate.py::extract_main_text": (
         "scalar main-text form of strip_boilerplate, pinned by "
         "test_boilerplate::test_classification_and_main_text"
@@ -50,23 +54,18 @@ ALLOWED = {
         "reference spec for "
         "test_dedup_pairs::test_arrow_shingles_match_expression_on_edge_cases"
     ),
-    "operators/export.py::export_document": "SURVEY §2 S7",
-    "operators/export.py::grid_search_eval": "SURVEY §2 A10",
     "operators/extract.py::quarantine": "SURVEY §2 S3",
-    "operators/lifecycle.py::dedup_manifest": "SURVEY §2 D4",
-    "operators/lifecycle.py::delete_document": "SURVEY §2 D1",
-    "operators/lifecycle.py::rename_document": "SURVEY §2 D2",
-    "operators/lifecycle.py::renumber_pages": "SURVEY §2 W1/W2, D3",
-    "operators/lifecycle.py::resolve_unique_names": "SURVEY §2 J6",
-    "operators/search.py::first_page_per_doc": "SURVEY §2 S8/W6",
-    "operators/search.py::matched_page_navigation": "SURVEY §2 W4/W5",
     "operators/similarity.py::hyperplane_signature": (
         "reference spec for test_similarity::test_signature_forms_agree"
     ),
     "plans/explain.py::has_broadcast_join": "plan-pin helper of test_plans",
     "plans/explain.py::read_schemas": "plan-pin helper of test_plans",
+    "sources/catalog.py::ICEBERG_DDL": "part of the jar-gated Iceberg path",
     "sources/catalog.py::IcebergCatalog": (
         "SURVEY §2 S5/S9 Iceberg commit path, gated on the runtime jar"
+    ),
+    "sources/catalog.py::iceberg_available": (
+        "part of the jar-gated Iceberg path"
     ),
 }
 
@@ -110,18 +109,6 @@ KNOBS_ALLOWED = {
         "the reference's OcrEngine surface, validated as in "
         "OcrEngine.py:35-44; get_decoder passes no options"
     ),
-    "functions/imagepipeline.py::threshold(thresh)": (
-        "U9 pipeline step: its arguments come from the user's step "
-        "config through pipeline_from_config"
-    ),
-    "functions/imagepipeline.py::threshold(maxval)": (
-        "U9 pipeline step: its arguments come from the user's step "
-        "config through pipeline_from_config"
-    ),
-    "functions/imagepipeline.py::flat_field(ksize)": (
-        "U9 pipeline step: its arguments come from the user's step "
-        "config through pipeline_from_config"
-    ),
 }
 
 
@@ -132,79 +119,99 @@ def _production_files() -> list[Path]:
     return files + [ROOT / "__spark_entry__.py", ROOT / "bench.py"]
 
 
-def _public_defs() -> dict[str, str]:
-    """"<module>::<name>" -> name for every public top-level def/class."""
-    out = {}
-    for path in sorted(PKG.rglob("*.py")):
-        mod = path.relative_to(PKG).as_posix()
-        for node in ast.parse(path.read_text()).body:
-            if isinstance(node, DEFS) and not node.name.startswith("_"):
-                out[f"{mod}::{node.name}"] = node.name
-    return out
-
-
-def _public_constants() -> dict[str, str]:
-    """"<module>::<NAME>" -> NAME for every public module-level
-    assignment target."""
-    out = {}
-    for path in sorted(PKG.rglob("*.py")):
-        mod = path.relative_to(PKG).as_posix()
-        for node in ast.parse(path.read_text()).body:
-            if isinstance(node, ast.Assign):
-                targets = node.targets
-            elif isinstance(node, ast.AnnAssign):
-                targets = [node.target]
-            else:
-                continue
-            for target in targets:
-                for name in ast.walk(target):
-                    if isinstance(name, ast.Name) and not name.id.startswith("_"):
-                        out[f"{mod}::{name.id}"] = name.id
-    return out
-
-
-def _loaded() -> set[str]:
-    """Bare names that production loads (Load-context names and
-    attributes)."""
-    loads: set[str] = set()
-    for path in _production_files():
-        for node in ast.walk(ast.parse(path.read_text())):
-            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
-                loads.add(node.id)
-            elif isinstance(node, ast.Attribute) and isinstance(
-                node.ctx, ast.Load
-            ):
-                loads.add(node.attr)
-    return loads
-
-
-def _referenced() -> set[str]:
-    """Bare names referenced from production. Inside a top-level package
-    definition its own name is skipped, so recursion does not count."""
+def _names(node: ast.AST, own: str | None = None) -> tuple[set, set]:
+    """(references, loads) of the bare names under ``node``: every name,
+    attribute and import alias, and the Load-context names and
+    attributes among them. ``own`` is skipped, so recursion does not
+    count."""
     refs: set[str] = set()
-    for path in _production_files():
-        in_pkg = path.is_relative_to(PKG)
-        for top in ast.parse(path.read_text()).body:
-            own = top.name if in_pkg and isinstance(top, DEFS) else None
-            for node in ast.walk(top):
-                if isinstance(node, ast.Name):
-                    name = node.id
-                elif isinstance(node, ast.Attribute):
-                    name = node.attr
-                elif isinstance(node, ast.alias):
-                    name = node.name.rsplit(".", 1)[-1]
-                else:
-                    continue
-                if name != own:
-                    refs.add(name)
-    return refs
+    loads: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            name, load = n.id, isinstance(n.ctx, ast.Load)
+        elif isinstance(n, ast.Attribute):
+            name, load = n.attr, isinstance(n.ctx, ast.Load)
+        elif isinstance(n, ast.alias):
+            name, load = n.name.rsplit(".", 1)[-1], False
+        else:
+            continue
+        if name != own:
+            refs.add(name)
+            if load:
+                loads.add(name)
+    return refs, loads
 
 
-def _unreached() -> set[str]:
-    refs, loads = _referenced(), _loaded()
+def _graph(package: dict[str, ast.Module]):
+    """The top-level definitions of ``package`` as nodes
+    ``"<module>::<name>" -> (name, is_constant, (references, loads))``,
+    and the (references, loads) of each other module-level statement,
+    imports aside: those statements are roots."""
+    nodes: dict[str, tuple[str, bool, tuple[set, set]]] = {}
+    roots: list[tuple[set, set]] = []
+    for mod, tree in package.items():
+        for top in tree.body:
+            if isinstance(top, DEFS):
+                nodes[f"{mod}::{top.name}"] = (
+                    top.name, False, _names(top, top.name)
+                )
+            elif isinstance(top, (ast.Assign, ast.AnnAssign)):
+                targets = getattr(top, "targets", None) or [top.target]
+                for target in targets:
+                    for n in ast.walk(target):
+                        if isinstance(n, ast.Name):
+                            edges = (
+                                _names(top.value, n.id)
+                                if top.value is not None
+                                else (set(), set())
+                            )
+                            nodes[f"{mod}::{n.id}"] = (n.id, True, edges)
+            elif not isinstance(top, (ast.Import, ast.ImportFrom)):
+                roots.append(_names(top))
+    return nodes, roots
+
+
+def _unreached_in(
+    package: dict[str, ast.Module], roots: list[ast.Module]
+) -> set[str]:
+    """Public top-level definitions of ``package`` that no root reaches.
+
+    A definition is reached when a root, or a reached definition,
+    references it by its bare name: a function or class by any
+    reference, a constant only by a name or attribute that loads it.
+    """
+    nodes, pending = _graph(package)
+    pending += [_names(tree) for tree in roots]
+    reached: set[str] = set()
+    while pending:
+        refs, loads = pending.pop()
+        for key, (name, is_constant, edges) in nodes.items():
+            if key not in reached and name in (loads if is_constant else refs):
+                reached.add(key)
+                pending.append(edges)
     return {
-        key for key, name in _public_defs().items() if name not in refs
-    } | {key for key, name in _public_constants().items() if name not in loads}
+        key
+        for key, (name, _, _) in nodes.items()
+        if key not in reached and not name.startswith("_")
+    }
+
+
+@functools.cache
+def _package() -> dict[str, ast.Module]:
+    return {
+        path.relative_to(PKG).as_posix(): ast.parse(path.read_text())
+        for path in sorted(PKG.rglob("*.py"))
+    }
+
+
+@functools.cache
+def _unreached() -> frozenset[str]:
+    roots = [
+        ast.parse(path.read_text())
+        for path in _production_files()
+        if not path.is_relative_to(PKG)
+    ]
+    return frozenset(_unreached_in(_package(), roots))
 
 
 def test_every_public_definition_is_reached_or_allowlisted():
@@ -216,13 +223,35 @@ def test_every_public_definition_is_reached_or_allowlisted():
 
 
 def test_allowlist_is_current():
-    defs = _public_defs() | _public_constants()
+    nodes, _ = _graph(_package())
     unreached = _unreached()
-    gone = sorted(k for k in ALLOWED if k not in defs)
-    reached = sorted(k for k in ALLOWED if k in defs and k not in unreached)
+    gone = sorted(k for k in ALLOWED if k not in nodes)
+    reached = sorted(k for k in ALLOWED if k in nodes and k not in unreached)
     assert not gone, f"allowlisted but no longer defined: {gone}"
     assert not reached, f"allowlisted but now reached from production: {reached}"
     assert all(reason.strip() for reason in ALLOWED.values())
+
+
+def test_reach_follows_calls_from_roots_only():
+    """A chain from a root is reached; a definition that only an
+    allowlisted (unreached) one calls is reported; a definition that
+    only calls itself is reported."""
+    package = {
+        "m.py": ast.parse(
+            "LIMIT = 3\n"
+            "def entry():\n    return helper()\n"
+            "def helper():\n    return _inner(LIMIT)\n"
+            "def _inner(n):\n    return n\n"
+            "def allowed():\n    return only_from_allowed()\n"
+            "def only_from_allowed():\n    return 1\n"
+            "def recursive(n):\n    return recursive(n - 1)\n"
+        )
+    }
+    roots = [ast.parse("from pkg.m import entry\nentry()\n")]
+    assert _unreached_in(package, roots) - {"m.py::allowed"} == {
+        "m.py::only_from_allowed",
+        "m.py::recursive",
+    }
 
 
 _NON_LITERAL = object()

@@ -103,6 +103,9 @@ def _prev_round() -> tuple[str, dict] | None:
     # treated as "no previous round", never as a crash
     if not isinstance(parsed, dict):
         return None
+    # the driver's wrapper records the core count at its top level
+    if "cpus" in obj and "cpus" not in parsed:
+        parsed = {**parsed, "cpus": obj["cpus"]}
     return os.path.basename(best[1]), parsed
 
 
@@ -121,12 +124,18 @@ def _deltas(
     headline metric. BENCH_r04's extract halving (8,562 -> 4,073
     docs/s) sailed through the query-only guard unflagged.
 
+    A baseline measured at another core count is not compared at all:
+    its ratios would report the core count, not a code change.
+
     Returns counts and the single worst ratio; stderr names every
     regressed query."""
     prev = _prev_round()
     if prev is None:
         return None
     name, parsed = prev
+    base_cpus = parsed.get("cpus")
+    if base_cpus is not None and base_cpus != CPUS:
+        return {"baseline": name, "skipped": f"cpus {base_cpus} != {CPUS}"}
     pq = dict(parsed.get("queries", {}))
     watched = dict(timings)
     prev_extract = parsed.get("extract", {})

@@ -18,10 +18,25 @@ Scale notes (100 TB):
   ~10-100 KB binary payloads.
 - blocks explode from an array column -> stays in the same stage as the
   UDF output (WholeStageCodegen), lands filtered and column-pruned.
+
+Per-task fixed costs (:func:`_lean_task`): a reused Python worker paid
+two costs on every extract task that have nothing to do with the rows.
+pyspark's ``setup_spark_files`` calls ``importlib.invalidate_caches()``
+at each task start, and on CPython < 3.13 every cached
+``zipimport.zipimporter`` re-reads its whole zip directory there
+(pyspark.zip, the spark-core jar, py4j: 103-120 ms a call at local[4]);
+and the cyclic GC walked the batch's lists and dicts, none of which
+form cycles (0.142 s a task). The UDF's generator pauses the GC for its
+whole life and, on exit, drops the zip importers from
+``sys.path_importer_cache`` so the next task has none to re-read.
 """
 
 from __future__ import annotations
 
+import contextlib
+import gc
+import sys
+import zipimport
 from collections.abc import Iterator
 
 import pandas as pd
@@ -84,6 +99,33 @@ def non_whitespace_filter(text_col: Column) -> Column:
     return ~text_col.rlike(WHITESPACE_ONLY_RE)
 
 
+@contextlib.contextmanager
+def _lean_task() -> Iterator[None]:
+    """Cut two per-task costs of a reused pyspark worker (module notes).
+
+    Entered inside the UDF's batch generator, so the cyclic GC stays off
+    for the generator's whole life, the ``pandas -> Arrow`` conversion
+    between yields included; it is turned back on along every exit path
+    (exhaustion, ``close()``, an exception, after which the worker exits
+    anyway). On exit the ``zipimporter`` entries leave
+    ``sys.path_importer_cache``: a later import builds a fresh importer
+    from ``zipimport._zip_directory_cache`` without reading the zip,
+    while the next task's ``invalidate_caches()`` finds nothing to
+    re-read. Spark never rewrites a shipped file in place, so that
+    cached directory stays valid for the worker's life.
+    """
+    gc.disable()
+    try:
+        yield
+    finally:
+        gc.enable()
+        cache = sys.path_importer_cache
+        for path in [
+            p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)
+        ]:
+            del cache[path]
+
+
 def extract_raw(pages: DataFrame, backend: str = "bitmap") -> DataFrame:
     """pages -> one row per rasterized page with raw OCR parallel arrays.
 
@@ -96,52 +138,59 @@ def extract_raw(pages: DataFrame, backend: str = "bitmap") -> DataFrame:
     decoder = get_decoder(backend)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = _UDF_SCHEMA.fieldNames()
-        for pdf in batches:
-            out: list[tuple] = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    if html is None:
-                        raise ValueError("null html payload")
-                    decoded = decoder(bytes(html))
-                except Exception as exc:
-                    out.append(
-                        (url, -1, None, None, [], [], [], [], [], [], None,
-                         f"{type(exc).__name__}: {exc}")
-                    )
-                    continue
-                for page_no, (png, data, decoded_text) in enumerate(decoded):
-                    # backends with an exact-text notion (bitmap) supply it
-                    # directly (byte-identical contract); otherwise the page
-                    # text is the non-structural tokens joined.
-                    if decoded_text is not None:
-                        page_text = decoded_text
-                    else:
-                        page_text = " ".join(
-                            t for t in data["text"] if t and not t.isspace()
+        with _lean_task():
+            cols = _UDF_SCHEMA.fieldNames()
+            for pdf in batches:
+                out: list[tuple] = []
+                for url, html in zip(pdf["url"], pdf["html"]):
+                    try:
+                        if html is None:
+                            raise ValueError("null html payload")
+                        decoded = decoder(bytes(html))
+                        if not decoded:
+                            raise ValueError("payload has no pages")
+                    except Exception as exc:
+                        out.append(
+                            (url, -1, None, None, [], [], [], [], [], [], None,
+                             f"{type(exc).__name__}: {exc}")
                         )
-                    # the Decoder contract (sources/decode.py) guarantees
-                    # plain Python int lists / str lists — each backend
-                    # normalizes at its own boundary, so no per-value
-                    # re-coercion here (round-6: the six comprehensions
-                    # were ~8% of the per-doc chain)
-                    out.append(
-                        (
-                            url,
-                            page_no,
-                            png,
-                            page_text,
-                            data["left"],
-                            data["top"],
-                            data["width"],
-                            data["height"],
-                            data["conf"],
-                            data["text"],
-                            compute_page_stats(data),
-                            None,
+                        continue
+                    for page_no, (png, data, decoded_text) in enumerate(
+                        decoded
+                    ):
+                        # backends with an exact-text notion (bitmap) supply
+                        # it directly (byte-identical contract); otherwise
+                        # the page text is the non-structural tokens joined.
+                        if decoded_text is not None:
+                            page_text = decoded_text
+                        else:
+                            page_text = " ".join(
+                                t
+                                for t in data["text"]
+                                if t and not t.isspace()
+                            )
+                        # the Decoder contract (sources/decode.py) guarantees
+                        # plain Python int lists / str lists — each backend
+                        # normalizes at its own boundary, so no per-value
+                        # re-coercion here (round-6: the six comprehensions
+                        # were ~8% of the per-doc chain)
+                        out.append(
+                            (
+                                url,
+                                page_no,
+                                png,
+                                page_text,
+                                data["left"],
+                                data["top"],
+                                data["width"],
+                                data["height"],
+                                data["conf"],
+                                data["text"],
+                                compute_page_stats(data),
+                                None,
+                            )
                         )
-                    )
-            yield pd.DataFrame(out, columns=cols)
+                yield pd.DataFrame(out, columns=cols)
 
     udf_out = pages.select("url", "html").mapInPandas(run, schema=_UDF_SCHEMA)
     # reassemble the array<struct> view JVM-side (arrays_zip is a zero-copy

@@ -12,6 +12,7 @@ from __future__ import annotations
 import importlib.util
 import json
 import os
+import shutil
 import sys
 
 
@@ -23,6 +24,23 @@ def _load_bench():
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
+
+
+def _bench_with_artifacts(tmp_path, monkeypatch, artifacts):
+    """bench.py copied into ``tmp_path`` next to fabricated previous-round
+    files (name -> JSON object), then imported from there."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    shutil.copy(os.path.join(repo, "bench.py"), tmp_path / "bench.py")
+    for name, obj in artifacts.items():
+        (tmp_path / name).write_text(json.dumps(obj))
+    # bench.py prepends its own directory to sys.path on import
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    spec = importlib.util.spec_from_file_location(
+        "bench_copy", tmp_path / "bench.py"
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    return bench
 
 
 def test_deltas_flags_extract_regression(monkeypatch, capsys):
@@ -96,21 +114,42 @@ def test_deltas_survive_poisoned_previous_round(tmp_path, monkeypatch):
     round records when bench.py's JSON line overflowed the reader's tail
     buffer) means "no previous round" — `_deltas` must return None, not
     crash on ``parsed.get``."""
-    import shutil
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    shutil.copy(os.path.join(repo, "bench.py"), tmp_path / "bench.py")
-    (tmp_path / "BENCH_r01.json").write_text(
-        json.dumps({"parsed": {"queries": {"q1": 1.0}}})
+    bench = _bench_with_artifacts(
+        tmp_path,
+        monkeypatch,
+        {
+            "BENCH_r01.json": {"parsed": {"queries": {"q1": 1.0}}},
+            "BENCH_r02.json": {"parsed": None},
+        },
     )
-    (tmp_path / "BENCH_r02.json").write_text(json.dumps({"parsed": None}))
-    # bench.py prepends its own directory to sys.path on import
-    monkeypatch.setattr(sys, "path", list(sys.path))
-    spec = importlib.util.spec_from_file_location(
-        "bench_poisoned", tmp_path / "bench.py"
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
 
     assert bench._prev_round() is None
     assert bench._deltas({"q1": 5.0}, extract={"sec": 1.0}) is None
+
+
+def test_deltas_skip_a_baseline_from_another_core_count(
+    tmp_path, monkeypatch, capsys
+):
+    """A baseline recorded at another core count (top level of the
+    driver's wrapper, or inside ``parsed``) yields no ratios and no
+    regression lines, only the reason it was skipped; one recorded at
+    this run's core count is still compared."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    prev = {"queries": {"q1": 1.0}, "extract": {"sec": 1.0}}
+    for artifact in (
+        {"cpus": 32, "parsed": prev},
+        {"parsed": {**prev, "cpus": 32}},
+    ):
+        bench = _bench_with_artifacts(
+            tmp_path, monkeypatch, {"BENCH_r07.json": artifact}
+        )
+        out = bench._deltas({"q1": 9.0}, extract={"sec": 9.0})
+        assert out == {"baseline": "BENCH_r07.json", "skipped": "cpus 32 != 4"}
+        assert "BENCH REGRESSION" not in capsys.readouterr().err
+
+    bench = _bench_with_artifacts(
+        tmp_path, monkeypatch, {"BENCH_r07.json": {"cpus": 4, "parsed": prev}}
+    )
+    out = bench._deltas({"q1": 9.0}, extract={"sec": 9.0})
+    assert out["regressions"] == 2 and "skipped" not in out
+    assert "BENCH REGRESSION q1:" in capsys.readouterr().err

@@ -208,14 +208,15 @@ def test_live_decode_matches_committed_fixture(spark):
 
 
 def test_bad_payloads_become_quarantine_rows(spark):
-    """A null payload, a truncated PNG and random bytes planted among
-    good pages each become one quarantine row (page_no -1, non-empty
-    error) without failing a task; every good url still extracts
-    byte-identical text."""
+    """A null payload, a truncated PNG, random bytes and a container
+    with no pages planted among good pages each become one quarantine
+    row (page_no -1, non-empty error) without failing a task; every
+    good url still extracts byte-identical text."""
     import random
 
     from studiocr_spark.gen import make_doc
     from studiocr_spark.operators.extract import extract_raw, quarantine
+    from studiocr_spark.sources.decode import pack_mpdf
 
     good = [make_doc(i) for i in range(12)]
     png = next(d["html"] for d in good if d["html"][:4] == b"\x89PNG")
@@ -223,6 +224,7 @@ def test_bad_payloads_become_quarantine_rows(spark):
         "https://bad.example/null": None,
         "https://bad.example/truncated-png": png[: len(png) // 2],
         "https://bad.example/random": b"\x00" + random.Random(7).randbytes(255),
+        "https://bad.example/no-pages": pack_mpdf([]),
     }
     rows = [(d["url"], d["html"]) for d in good] + list(bad.items())
     pages = spark.createDataFrame(rows, "url string, html binary")
@@ -252,9 +254,76 @@ def test_bad_payloads_become_quarantine_rows(spark):
 
     assert set(q) == set(bad)
     assert all(err for err in q.values())
+    assert q["https://bad.example/no-pages"] == (
+        "ValueError: payload has no pages"
+    )
     assert marker_pages == {url: -1 for url in bad}
     assert stage_ids
     for s in stage_ids:
         info = tracker.getStageInfo(s)
         assert info is not None and info.numFailedTasks == 0, s
     assert texts == {d["url"]: d["text"] for d in good}
+
+
+def test_lean_task_pauses_gc_for_the_generator_life():
+    """The extract UDF's generator runs with the cyclic GC off, also
+    while suspended between yields, and turns it back on when it is
+    exhausted or closed mid-stream."""
+    import gc
+
+    from studiocr_spark.operators.extract import _lean_task
+
+    def batches(n):
+        with _lean_task():
+            for _ in range(n):
+                yield gc.isenabled()
+
+    try:
+        assert gc.isenabled()
+        assert list(batches(3)) == [False, False, False]
+        assert gc.isenabled()
+        stream = batches(3)
+        assert next(stream) is False
+        assert not gc.isenabled()
+        stream.close()
+        assert gc.isenabled()
+    finally:
+        gc.enable()
+
+
+def test_lean_task_evicts_zip_importers_and_imports_still_work(
+    tmp_path, monkeypatch
+):
+    """A zipimporter cached for a zip on sys.path is gone after the
+    context exits, and a module from that zip still imports, from the
+    cached zip directory without reading it again."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from studiocr_spark.operators.extract import _lean_task
+
+    archive = tmp_path / "lean_task_probe.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("lean_task_probe_mod.py", "VALUE = 42\n")
+    path = str(archive)
+    monkeypatch.syspath_prepend(path)
+    monkeypatch.setitem(
+        sys.path_importer_cache, path, zipimport.zipimporter(path)
+    )
+
+    with _lean_task():
+        pass
+    assert path not in sys.path_importer_cache
+
+    def no_reread(archive_path):
+        raise AssertionError(f"zip directory re-read: {archive_path}")
+
+    monkeypatch.setattr(zipimport, "_read_directory", no_reread)
+    try:
+        mod = importlib.import_module("lean_task_probe_mod")
+        assert mod.VALUE == 42
+        assert isinstance(mod.__loader__, zipimport.zipimporter)
+    finally:
+        sys.modules.pop("lean_task_probe_mod", None)

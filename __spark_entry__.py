@@ -420,7 +420,7 @@ def _bm25_index_root(spark: SparkSession, sf_dir: str) -> str:
     n, content = docs.agg(
         F.count("*"), F.bit_xor(F.xxhash64("doc_id", "text"))
     ).first()
-    fp = f"v3 n={n} h={content}"
+    fp = f"v4 n={n} h={content}"
     root = os.path.join(
         _BM25_INDEX, os.path.basename(os.path.normpath(sf_dir))
     )

@@ -24,11 +24,11 @@ cost is proportional to the delta, not the corpus. Query through
 ``read_postings(spark, out + "/postings")``. Run --compact-index
 periodically to merge segments and vacuum the replaced dirs.
 
-The segment store keeps its SEGMENTS list, coverage files and writer
-lock with local file I/O, so --build-index and --compact-index need a
-local --output: a plain path or a ``file://`` URI (the job turns the
-latter into a plain path). Any other scheme with either flag stops the
-job before Spark starts.
+The segment store keeps its SEGMENTS manifest (segments and their
+bucket coverage) and its flock writer lock with local file I/O, so
+--build-index and --compact-index need a local --output: a plain path
+or a ``file://`` URI (the job turns the latter into a plain path). Any
+other scheme with either flag stops the job before Spark starts.
 """
 
 from __future__ import annotations

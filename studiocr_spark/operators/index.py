@@ -12,8 +12,9 @@ Replaces the reference's O(docs x pages x blocks x words) nested-loop scan
   serving aggregates, written beside the postings in each segment.
 
 The segment store below is the only layout: a ``SEGMENTS`` manifest
-lists immutable segment dirs, each holding its postings, its ``_aux/``
-serving tables and its ``_BUCKETS`` coverage. Every reader goes through
+lists immutable segment dirs and the extract buckets each covers; a dir
+holds its postings and its ``_aux/`` serving tables. One ``flock`` on
+``SEGMENTS.lock`` keeps out a second writer. Every reader goes through
 the manifest; a directory without one is not a store.
 
 Terms are lowercased block texts (the reference lowercases both sides of
@@ -74,7 +75,7 @@ DOC_LENS = "doc_lens"
 
 
 def _write_segment_dir(
-    postings: DataFrame, path: str, term_buckets: int = 64
+    postings: DataFrame, path: str, term_buckets: int
 ) -> None:
     """Persist one segment dir: the postings partition-clustered by term
     hash, plus the BM25 serving tables under ``path/_aux/``.
@@ -139,118 +140,75 @@ def _write_segment_dir(
 # ---------------------------------------------------------------------------
 
 SEGMENTS_FILE = "SEGMENTS"
-# leading underscore: Spark/Hadoop parquet readers skip _-prefixed
-# files (same convention as _SUCCESS), so the sidecar never breaks the
-# segment's parquet scan
-COVERAGE_FILE = "_BUCKETS"
 LOCK_FILE = "SEGMENTS.lock"
 
 
-def list_segments(root: str) -> list[str]:
-    """Live segment dir names, in publish order ([] when none)."""
+def _manifest(root: str) -> list[tuple[str, str]]:
+    """``(segment, coverage)`` per SEGMENTS line, in publish order ([]
+    when none). ``coverage`` is ``ALL`` or comma-joined sorted extract
+    bucket ids; a line without it raises ``ValueError``."""
     import os
 
     path = os.path.join(root, SEGMENTS_FILE)
     if not os.path.exists(path):
         return []
+    entries = []
     with open(path) as f:
-        return [line.strip() for line in f if line.strip()]
+        for fields in (line.split() for line in f):
+            if len(fields) == 1:
+                raise ValueError(
+                    f"{path}: segment {fields[0]} has no coverage field"
+                )
+            if fields:
+                entries.append((fields[0], fields[1]))
+    return entries
+
+
+def list_segments(root: str) -> list[str]:
+    """Live segment dir names, in publish order ([] when none)."""
+    return [seg for seg, _ in _manifest(root)]
+
+
+def _coverage_field(buckets: list[int] | str) -> str:
+    return (
+        "ALL" if buckets == "ALL"
+        else ",".join(str(b) for b in sorted(set(buckets)))
+    )
 
 
 @_contextmanager
 def segments_writer_lock(root: str):
-    """Single-writer lock for SEGMENTS mutations (round-4 ADVICE fix).
+    """Single-writer lock for SEGMENTS mutations: the read-modify-write
+    (append a segment; compaction's read-merge-publish) can lose a
+    segment under two concurrent publishers, so a second writer fails
+    fast instead.
 
-    The SEGMENTS read-modify-write (append a segment; compaction's
-    read-merge-publish) is only safe with ONE writer — two concurrent
-    publishers can lose a segment. O_CREAT|O_EXCL on a lock file beside
-    SEGMENTS enforces it; a second writer fails fast with the holder's
-    pid/age instead of silently corrupting the manifest.
-
-    Crash recovery (round-5 ADVICE fix): a holder killed between
-    ``os.open`` and the ``finally`` (kill -9, OOM) used to leave a
-    permanent stale lock that hard-failed every later build/compact
-    until manual cleanup. The lock records the holder's pid; on
-    FileExistsError we probe it with ``kill(pid, 0)`` and reclaim the
-    lock when that pid is gone. Live holders (or unparseable locks —
-    e.g. written by another machine, where a pid probe is meaningless)
-    still fail fast, same contract as a Lucene write.lock."""
+    An exclusive non-blocking ``flock`` on ``root/SEGMENTS.lock``, the
+    way SQLite keeps out a second writer. The kernel drops it when the
+    holder's file closes, kill -9 and OOM included: a crashed writer
+    leaves nothing to reclaim, and the file's content means nothing."""
+    import fcntl
     import os
-    import re
-    import time
 
     os.makedirs(root, exist_ok=True)
     lock = os.path.join(root, LOCK_FILE)
-    fd = None
-    for attempt in range(2):
+    # Never unlink the lock file: a writer that opened the old inode and
+    # one that created a new file at the path would both hold "the" lock.
+    with open(lock, "a") as f:
         try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            break
-        except FileExistsError:
-            try:
-                with open(lock) as f:
-                    holder = f.read().strip()
-                age = time.time() - os.path.getmtime(lock)
-            except OSError:  # racing holder released between open and stat
-                continue  # retry the O_EXCL create
-            m = re.match(r"pid=(\d+)\b", holder)
-            holder_dead = False
-            if m:
-                try:
-                    os.kill(int(m.group(1)), 0)
-                except ProcessLookupError:
-                    holder_dead = True
-                except PermissionError:
-                    pass  # alive, owned by someone else
-            if holder_dead and attempt == 0:
-                # Reclaim ATOMICALLY (round-6 ADVICE fix). A bare
-                # unlink had a TOCTOU hole: between the pid probe and
-                # the unlink, a concurrent process could reclaim the
-                # same stale lock and create its OWN live lock — which
-                # we then unlinked, yielding two concurrent manifest
-                # writers. Instead, rename the stale lock to a private
-                # name (exactly one concurrent reclaimer wins; losers
-                # see FileNotFoundError) and verify the captured file
-                # still records the dead holder we probed before
-                # treating the path as free.
-                taken = f"{lock}.reclaim.{os.getpid()}.{time.monotonic_ns()}"
-                try:
-                    os.rename(lock, taken)
-                except FileNotFoundError:
-                    continue  # another reclaimer won — retry O_EXCL
-                with open(taken) as f:
-                    captured = f.read().strip()
-                if captured == holder:
-                    os.unlink(taken)  # genuinely stale; path now free
-                    continue  # retry the exclusive create
-                # We captured a DIFFERENT (live) lock that replaced the
-                # stale one between probe and rename: restore it without
-                # clobbering any newer lock (link fails with EEXIST),
-                # then fail fast as held.
-                try:
-                    os.link(taken, lock)
-                except FileExistsError:
-                    pass
-                os.unlink(taken)
-                holder = captured
+            fcntl.flock(f, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except BlockingIOError:
             raise RuntimeError(
-                f"segments writer lock held ({lock}: {holder}, age "
-                f"{age:.0f}s) — single-writer protocol; the holder pid "
-                f"is alive (or unverifiable): remove the lock file only "
-                f"after confirming that writer is dead"
-            )
-    if fd is None:  # pragma: no cover — two straight stat races
-        raise RuntimeError(f"could not acquire segments writer lock {lock}")
-    try:
-        os.write(fd, f"pid={os.getpid()} t={time.time():.0f}\n".encode())
-        os.close(fd)
+                f"segments writer lock held ({lock}) — single-writer "
+                f"protocol; another writer is publishing"
+            ) from None
         yield
-    finally:
-        os.unlink(lock)
 
 
-def _publish_segments(root: str, segments: list[str]) -> None:
-    """Atomically replace the SEGMENTS manifest.
+def _publish_segments(root: str, entries: list[tuple[str, str]]) -> None:
+    """Atomically replace the SEGMENTS manifest with ``(segment,
+    coverage)`` entries: a segment and its coverage go live in one
+    ``os.replace``. Callers hold :func:`segments_writer_lock`.
 
     Segments dropped by this publish (live before, unlisted after —
     i.e. compaction victims) get their dir mtime touched to NOW, so
@@ -259,62 +217,43 @@ def _publish_segments(root: str, segments: list[str]) -> None:
     replaced seconds ago must survive the grace window for in-flight
     readers holding the previous manifest)."""
     import os
-    import uuid
 
-    os.makedirs(root, exist_ok=True)
     previously_live = set(list_segments(root))
-    tmp = os.path.join(root, f".SEGMENTS.{uuid.uuid4().hex}")
+    # one fixed name: the lock admits one publisher, and the next
+    # publish overwrites whatever a crash left here
+    tmp = os.path.join(root, ".SEGMENTS.tmp")
     with open(tmp, "w") as f:
-        f.write("\n".join(segments) + "\n")
+        f.write("".join(f"{seg} {cov}\n" for seg, cov in entries))
     os.replace(tmp, os.path.join(root, SEGMENTS_FILE))  # atomic commit
-    for seg in previously_live - set(segments):
+    for seg in previously_live - {seg for seg, _ in entries}:
         try:
             os.utime(os.path.join(root, seg))  # stamp the unlist time
         except OSError:
             pass  # already gone — nothing for vacuum to age-gate
 
 
-def _write_coverage(root: str, seg: str, buckets: list[int] | str) -> None:
-    """Record which extract buckets a segment covers — ``"ALL"`` for a
-    full-corpus build. Written INSIDE the (still unpublished) segment
-    dir, so coverage commits atomically with the segment itself."""
-    import os
-
-    path = os.path.join(root, seg, COVERAGE_FILE)
-    with open(path, "w") as f:
-        if buckets == "ALL":
-            f.write("ALL\n")
-        else:
-            f.write("\n".join(str(b) for b in sorted(set(buckets))) + "\n")
-
-
 def segment_coverage(root: str) -> set[int] | None:
     """Union of extract buckets covered by the LIVE segments.
 
     ``None`` means every bucket is covered: at least one live segment is
-    marked ALL (full build / compaction of an ALL store). Every writer
-    records coverage before it publishes, so a live segment without its
-    coverage file raises ``FileNotFoundError`` instead of passing for
-    ALL. Callers diff the completion manifest against this to find
-    buckets that were completed but never indexed (the round-4 ADVICE
-    gap: a crash between manifest append and segment publish, or a run
-    without --build-index, used to leave a permanent hole)."""
-    import os
-
+    marked ALL (full build / compaction of an ALL store). Every publish
+    writes a segment's coverage on its SEGMENTS line, so a line without
+    it raises ``ValueError`` instead of passing for ALL. Callers diff
+    the completion manifest against this to find buckets that were
+    completed but never indexed (a crash between manifest append and
+    segment publish, or a run without --build-index)."""
     covered: set[int] = set()
-    for seg in list_segments(root):
-        with open(os.path.join(root, seg, COVERAGE_FILE)) as f:
-            lines = [ln.strip() for ln in f if ln.strip()]
-        if lines and lines[0] == "ALL":
+    for _, cov in _manifest(root):
+        if cov == "ALL":
             return None
-        covered.update(int(ln) for ln in lines)
+        covered.update(int(b) for b in cov.split(","))
     return covered
 
 
 def write_postings_segment(
     postings: DataFrame,
     root: str,
-    term_buckets: int = 64,
+    term_buckets: int,
     buckets: list[int] | str = "ALL",
 ) -> str:
     """Write ``postings`` as a new segment under ``root`` and publish it.
@@ -331,9 +270,10 @@ def write_postings_segment(
     _write_segment_dir(
         postings, os.path.join(root, seg), term_buckets=term_buckets
     )
-    _write_coverage(root, seg, buckets)
     with segments_writer_lock(root):
-        _publish_segments(root, list_segments(root) + [seg])
+        _publish_segments(
+            root, _manifest(root) + [(seg, _coverage_field(buckets))]
+        )
     return seg
 
 
@@ -367,7 +307,7 @@ def read_doc_lens(spark, root: str) -> DataFrame:
     return spark.read.parquet(*_segment_paths(root, AUX_DIR, DOC_LENS))
 
 
-def compact_postings(spark, root: str, term_buckets: int = 64) -> str:
+def compact_postings(spark, root: str, term_buckets: int) -> str:
     """Merge every live segment into one and publish it as the only
     segment. Old segment dirs are left on disk for in-flight readers /
     time travel until :func:`vacuum_segments`. Returns the new name.
@@ -392,10 +332,8 @@ def compact_postings(spark, root: str, term_buckets: int = 64) -> str:
         _write_segment_dir(
             merged, os.path.join(root, seg), term_buckets=term_buckets
         )
-        _write_coverage(
-            root, seg, "ALL" if coverage is None else sorted(coverage)
-        )
-        _publish_segments(root, [seg])
+        cov = _coverage_field("ALL" if coverage is None else coverage)
+        _publish_segments(root, [(seg, cov)])
     return seg
 
 

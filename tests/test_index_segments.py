@@ -98,7 +98,7 @@ def test_segment_coverage_and_writer_lock(spark, extracted, tmp_path):
     import pytest
 
     from studiocr_spark.operators.index import (
-        COVERAGE_FILE,
+        SEGMENTS_FILE,
         segment_coverage,
         segments_writer_lock,
     )
@@ -131,46 +131,102 @@ def test_segment_coverage_and_writer_lock(spark, extracted, tmp_path):
     # lock released -> publish works again
     write_postings_segment(p.limit(3), root2, term_buckets=2, buckets=[9])
     assert segment_coverage(root2) == {9}
-    # every writer records coverage before it publishes, so a live
-    # segment without it is damage, never "covers every bucket"
-    os.remove(os.path.join(root2, list_segments(root2)[0], COVERAGE_FILE))
-    with pytest.raises(FileNotFoundError):
+    # every publish writes a segment's coverage on its SEGMENTS line, so
+    # a line without it is damage, never "covers every bucket"
+    seg = list_segments(root2)[0]
+    with open(os.path.join(root2, SEGMENTS_FILE), "w") as f:
+        f.write(f"{seg}\n")
+    with pytest.raises(ValueError, match=seg):
         segment_coverage(root2)
 
 
-def test_stale_writer_lock_from_dead_pid_is_reclaimed(tmp_path):
-    """Round-5 ADVICE fix: a holder killed between lock-create and
-    release (kill -9 / OOM) leaves a lock naming a dead pid — later
-    writers reclaim it instead of hard-failing forever. Live or
-    unparseable holders still fail fast."""
+def test_writer_lock_dies_with_its_holder(spark, extracted, tmp_path):
+    """The writer lock is a kernel flock: a holder killed with SIGKILL
+    leaves nothing to reclaim, a leftover lock file's content never
+    blocks, and a held lock makes a publisher fail fast without
+    touching SEGMENTS."""
+    import fcntl
     import os
+    import signal
+    import subprocess
+    import sys
 
     import pytest
 
-    from studiocr_spark.operators.index import LOCK_FILE, segments_writer_lock
+    from studiocr_spark.operators.index import LOCK_FILE, SEGMENTS_FILE
 
-    root = str(tmp_path / "stale")
+    _, _, ocr_blocks = extracted
+    p = build_postings(ocr_blocks).limit(3)
+    root = str(tmp_path / "flock")
     os.makedirs(root)
     lock = os.path.join(root, LOCK_FILE)
-    # fabricate a crash artifact: a lock naming a pid that cannot exist
-    with open(lock, "w") as f:
-        f.write("pid=999999999 t=0\n")
-    with segments_writer_lock(root):  # reclaims, no RuntimeError
-        assert os.path.exists(lock)
-    assert not os.path.exists(lock)
-    # an unparseable lock (e.g. from another machine) still fails fast
+
+    # a child takes the lock through the real code path and is killed
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = subprocess.Popen(
+        [sys.executable, "-c",
+         "import sys, time\n"
+         "from studiocr_spark.operators.index import segments_writer_lock\n"
+         "with segments_writer_lock(sys.argv[1]):\n"
+         "    print('held', flush=True)\n"
+         "    time.sleep(600)\n",
+         root],
+        cwd=repo, stdout=subprocess.PIPE, text=True,
+    )
+    try:
+        assert child.stdout.readline().strip() == "held"
+        with pytest.raises(RuntimeError, match="writer lock"):
+            write_postings_segment(p, root, term_buckets=2, buckets=[0])
+    finally:
+        child.send_signal(signal.SIGKILL)
+        child.wait()
+        child.stdout.close()
+    seg = write_postings_segment(p, root, term_buckets=2, buckets=[0])
+    assert list_segments(root) == [seg]
+
+    # a leftover lock file from another machine does not block
     with open(lock, "w") as f:
         f.write("host=elsewhere\n")
-    with pytest.raises(RuntimeError, match="writer lock held"):
-        with segments_writer_lock(root):
-            pass
-    os.unlink(lock)
-    # a LIVE holder pid still fails fast
-    with open(lock, "w") as f:
-        f.write(f"pid={os.getpid()} t=0\n")
-    with pytest.raises(RuntimeError, match="writer lock held"):
-        with segments_writer_lock(root):
-            pass
+    seg2 = write_postings_segment(p, root, term_buckets=2, buckets=[1])
+    assert list_segments(root) == [seg, seg2]
+    assert os.path.exists(lock)  # never unlinked
+
+    # another open of the lock holds it: the publisher fails fast,
+    # SEGMENTS is untouched and the unpublished dir waits for vacuum
+    with open(os.path.join(root, SEGMENTS_FILE), "rb") as f:
+        before = f.read()
+    with open(lock, "a") as holder:
+        fcntl.flock(holder, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        with pytest.raises(RuntimeError, match="writer lock"):
+            write_postings_segment(p, root, term_buckets=2, buckets=[2])
+    with open(os.path.join(root, SEGMENTS_FILE), "rb") as f:
+        assert f.read() == before
+    # the two refused publishes each left one unlisted dir
+    assert vacuum_segments(root, min_age_seconds=0) == 2
+    assert list_segments(root) == [seg, seg2]
+
+
+def test_publish_overwrites_a_leftover_temp_manifest(
+    spark, extracted, tmp_path
+):
+    """A crash between the temp manifest write and its rename leaves
+    ``.SEGMENTS.tmp``; the next publish overwrites it, so no temp
+    manifest outlives a publish."""
+    import glob
+    import os
+
+    from studiocr_spark.operators.index import segment_coverage
+
+    _, _, ocr_blocks = extracted
+    p = build_postings(ocr_blocks).limit(3)
+    root = str(tmp_path / "tmp_manifest")
+    seg = write_postings_segment(p, root, term_buckets=2, buckets=[0])
+    with open(os.path.join(root, ".SEGMENTS.tmp"), "w") as f:
+        f.write("junk junk junk\nseg_missing\n" * 100)
+    seg2 = write_postings_segment(p, root, term_buckets=2, buckets=[3, 1])
+    assert glob.glob(os.path.join(root, ".SEGMENTS*")) == []
+    assert list_segments(root) == [seg, seg2]
+    assert segment_coverage(root) == {0, 1, 3}
 
 
 def test_vacuum_ages_from_unlisting_not_creation(spark, extracted, tmp_path):

@@ -1,6 +1,6 @@
-"""Dump .explain("formatted") for gate entries into plans/<tag>/.
+"""Dump .explain("formatted") for gate entries into plans/r06/.
 
-Usage: python tools/dump_plans.py <tag-suffix> [sf_dir] [entry ...]
+Usage: python tools/dump_plans.py <tag> <sf_dir> [entry ...]
 
 Writes plans/r06/<entry>_<tag>.txt for each requested entry (default:
 every ``queries()`` entry). Plan capture only — ANN dump writes are
@@ -17,8 +17,10 @@ sys.path.insert(0, REPO)
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
+    if len(sys.argv) < 3:
+        print("usage: python tools/dump_plans.py <tag> <sf_dir> [entry ...]")
+        sys.exit(2)
+    tag, sf_dir = sys.argv[1:3]
     only = set(sys.argv[3:])
 
     os.environ["SPARK_GRAFT_ANN_SKIP_DUMP"] = "1"
@@ -29,9 +31,7 @@ def main() -> None:
 
     out_dir = os.path.join(REPO, "plans", "r06")
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(
-        app_name="dump-plans", master="local[4]", shuffle_partitions=8
-    )
+    spark = get_spark(app_name="dump-plans", shuffle_partitions=8)
     for name, fn in entry.queries().items():
         if only and name not in only:
             continue
